@@ -73,9 +73,10 @@ def _spread(df: DataFrame, weight: float = 1.0) -> DataFrame:
     cost the driver's cold runs 1.3-1.5x on the smallest inputs while the
     8-core run beat the 32-core one).  ``weight`` scales the estimate for
     callers whose downstream per-byte cost is far above the md5/shingle
-    chains this constant was sized for (e.g. the multimodal Arrow decode
-    chain passes weight>1: its input rows are tiny metadata but each row
-    fans into a full media decode).
+    chains this constant was sized for (the one weighted caller is the
+    BM25 token chain in operators/textstats.py, which scales by the
+    query's term count; the multimodal decode spreads at the default
+    weight).
 
     At 100 TB the scan already has thousands of splits, so the
     repartition is skipped entirely: it is a no-op (returns ``df``

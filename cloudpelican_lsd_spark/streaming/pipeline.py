@@ -11,9 +11,10 @@ each micro-batch (trigger = 1s, matching the reference's result tick,
 SupervisorResultWriterBolt.java:90):
 
 - **results sink**: matched rows appended to a parquet table partitioned
-  by `(filter_id, date)` — the date-partitioned single table that replaces
-  BigQuery's table-per-filter-per-day (BigQueryInsertRunnable.java:32-37);
-  partition pruning then serves both the live tail and historical search.
+  `filter_id/epoch/date` — the single table that replaces BigQuery's
+  table-per-filter-per-day (BigQueryInsertRunnable.java:32-37).  A live
+  tail or a one-filter search lists and scans one `filter_id=` directory;
+  date pruning serves historical search.
 - **stats sink**: per-batch minutely partial counts appended to a stats
   table; readers sum partials (merge-on-read).  This keeps the write path
   append-only and idempotent-friendly at any scale; the reference instead
@@ -129,6 +130,17 @@ def parse_stream(raw: DataFrame) -> DataFrame:
     )
 
 
+def _partition_dir(column: str, value: str) -> str:
+    """The directory name Spark gives a partition value: ``column=value``
+    with the characters of Hive's path escaping written as ``%XX``."""
+    escaped = re.sub(
+        r"[\x01-\x1f\"#%'*/:=?\\\x7f{\[\]^]",
+        lambda m: f"%{ord(m.group()):02X}",
+        value,
+    )
+    return f"{column}={escaped}"
+
+
 class StreamingEngine:
     """One streaming query maintaining results + stats tables."""
 
@@ -155,6 +167,19 @@ class StreamingEngine:
         self.catalog = catalog
         self.base_dir = base_dir
         self.results_path = os.path.join(base_dir, "results")
+        if os.path.isdir(self.results_path) and any(
+            d.startswith("epoch=") for d in os.listdir(self.results_path)
+        ):
+            # Spark would otherwise fail the first read with "Conflicting
+            # directory structures" once both layouts share the table
+            raise ValueError(
+                f"StreamingEngine: {self.results_path} holds a results "
+                "table in the old epoch-major layout (epoch=N/filter_id=X/"
+                "date=D); this engine writes filter_id=X/epoch=N/date=D. "
+                "Rewrite it with spark.read.parquet(old).write.partitionBy("
+                "'filter_id', 'epoch', 'date').parquet(new), or start from "
+                "an empty base_dir"
+            )
         self.stats_path = os.path.join(base_dir, "stats")
         self.checkpoint = os.path.join(base_dir, "checkpoint")
         #: reference caps the tail buffer at 10k msgs/filter (supervisor.go:52)
@@ -171,14 +196,18 @@ class StreamingEngine:
         don't double-count.  That upgrade from "at-least-once into an
         append table" is what makes the sinks effectively exactly-once.
 
-        The results table is epoch-MAJOR (`epoch/filter_id/date`) and the
-        epoch directory is dropped before the write: per-(filter, date)
-        dynamic overwrite would leave stale partitions when a replayed
-        batch lands a DIFFERENT partition set than the crashed attempt —
-        which genuinely happens (now()-fallback timestamps crossing
-        midnight between attempts; the filter catalog hot-swapping
-        between attempt and replay).  Dropping the whole epoch first
-        makes the replay exact regardless of such drift.
+        The results table is filter-MAJOR (`filter_id/epoch/date`): the
+        hot read is the live tail, which polls one filter every 200 ms and
+        so lists and scans that filter's directory alone.  Before the write, the
+        epoch's directory is dropped under EVERY `filter_id=` directory
+        on disk — including filters deleted since the crashed attempt.
+        Per-(filter, date) dynamic overwrite would leave stale partitions
+        when a replayed batch lands a DIFFERENT partition set than the
+        crashed attempt — which genuinely happens (now()-fallback
+        timestamps crossing midnight between attempts; the filter catalog
+        hot-swapping between attempt and replay).  Dropping the whole
+        epoch first makes the replay exact regardless of such drift; it
+        costs one `isdir` per filter directory.
         """
         # filter set re-read per batch = the reference's 1s hot-swap poll
         # (MatchBolt.java:89-97); compiled into literal predicates per batch
@@ -208,9 +237,11 @@ class StreamingEngine:
                     f"process_batch: epoch {epoch} exceeds the 2^23 "
                     "row_id epoch slot — widen the packing"
                 )
-            epoch_dir = os.path.join(self.results_path, f"epoch={epoch}")
-            if os.path.isdir(epoch_dir):
-                shutil.rmtree(epoch_dir)
+            if os.path.isdir(self.results_path):
+                for fdir in os.listdir(self.results_path):
+                    stale = os.path.join(self.results_path, fdir, f"epoch={epoch}")
+                    if fdir.startswith("filter_id=") and os.path.isdir(stale):
+                        shutil.rmtree(stale)
             mono = F.monotonically_increasing_id()
             pid_part = F.shiftright(mono, 33)
             row_part = mono.bitwiseAND(F.lit((1 << 33) - 1))
@@ -231,7 +262,7 @@ class StreamingEngine:
                     F.max(row_part).alias("max_row"),
                 )
                 .withColumn("epoch", F.lit(epoch))
-                .write.partitionBy("epoch", "filter_id", "date")
+                .write.partitionBy("filter_id", "epoch", "date")
                 .mode("append")
                 .parquet(self.results_path)
             )
@@ -317,25 +348,47 @@ class StreamingEngine:
 
     # -- read side ----------------------------------------------------------
 
-    #: results-table schema (for empty reads after retention wipes)
+    # Every read names its store's declared schema: inferring it would run
+    # a footer-reading Spark job on every call, and the tail polls every
+    # 200 ms.
+
+    #: results-table schema, in the column order every results() read has
     RESULTS_SCHEMA = (
         "filter_name STRING, _raw STRING, ts TIMESTAMP_NTZ, ts_epoch BIGINT,"
-        " row_id BIGINT, filter_id STRING, date DATE, epoch INT"
+        " row_id BIGINT, epoch INT, filter_id STRING, date DATE"
     )
+    _RESULTS_COLUMNS = [c.split()[0] for c in RESULTS_SCHEMA.split(",")]
+
+    def _read(self, path: str, schema: str, base_path: str | None = None) -> DataFrame:
+        """One stream store (or one partition directory of it, under
+        ``base_path``) read with its declared schema; an absent directory
+        (before the first batch, after a purge) reads as a typed empty
+        frame.  The directory check keeps a poll of a filter with no rows
+        yet from paying (and logging) Spark's missing-path error; the
+        except covers a directory that a sweep's swap moves meanwhile."""
+        if os.path.isdir(path):
+            reader = self.spark.read.schema(schema)
+            if base_path is not None:
+                reader = reader.option("basePath", base_path)
+            try:
+                return reader.parquet(path)
+            except AnalysisException:
+                pass
+        return self.spark.createDataFrame([], schema)
 
     def results(self, filter_id: str | None = None) -> DataFrame:
         # Heal a mid-swap crash (live moved to .old, tmp not yet moved in)
         # on first read — otherwise reads silently return empty data until
         # the next maintenance sweep runs.
         self._recover_swap(self.results_path)
-        try:
-            df = self.spark.read.parquet(self.results_path)
-        except AnalysisException:
-            # empty/absent table (e.g. everything expired) → typed empty DF
-            df = self.spark.createDataFrame([], self.RESULTS_SCHEMA)
+        path = self.results_path
         if filter_id is not None:
-            df = df.where(F.col("filter_id") == filter_id)  # partition-pruned
-        return df
+            # one filter's directory: only its files are listed and read
+            path = os.path.join(path, _partition_dir("filter_id", filter_id))
+        df = self._read(path, self.RESULTS_SCHEMA, base_path=self.results_path)
+        # partition discovery appends filter_id/epoch/date in directory
+        # order; every path returns the one documented order
+        return df.select(*self._RESULTS_COLUMNS)
 
     def tail(self, filter_id: str, n: int = 100) -> DataFrame:
         """Live tail: last n rows for a filter (cloudpelican-lsd.go:630-636)."""
@@ -349,11 +402,7 @@ class StreamingEngine:
     def stats(self, filter_id: str | None = None) -> DataFrame:
         """Merged stats view: sum the appended partials (merge-on-read)."""
         self._recover_swap(self.stats_path)  # heal a mid-swap crash on read
-        try:
-            df = self.spark.read.parquet(self.stats_path)
-        except AnalysisException:
-            # absent/empty table (before first batch, after full purge)
-            df = self.spark.createDataFrame([], self.STATS_SCHEMA)
+        df = self._read(self.stats_path, self.STATS_SCHEMA)
         if filter_id is not None:
             df = df.where(F.col("filter_id") == filter_id)
         return df.groupBy("filter_id", "metric", "bucket").agg(
@@ -488,10 +537,7 @@ class StreamingEngine:
     def classifier_model(self, filter_id: str | None = None) -> DataFrame:
         """Merged (filter_id, tok, label, cnt) frequency table — one model
         per filter (reference semantics); pass `filter_id` for one."""
-        try:
-            df = self.spark.read.parquet(os.path.join(self.base_dir, "nb_state"))
-        except AnalysisException:
-            df = self.spark.createDataFrame([], self.NB_SCHEMA)
+        df = self._read(os.path.join(self.base_dir, "nb_state"), self.NB_SCHEMA)
         if filter_id is not None:
             df = df.where(F.col("filter_id") == filter_id)
         return (
@@ -508,17 +554,17 @@ class StreamingEngine:
 
         if not os.path.isdir(self.results_path):
             return
-        for edir in os.listdir(self.results_path):
-            epath = os.path.join(self.results_path, edir)
-            if not os.path.isdir(epath) or not edir.startswith("epoch="):
+        for fdir in os.listdir(self.results_path):
+            fpath = os.path.join(self.results_path, fdir)
+            if not os.path.isdir(fpath) or not fdir.startswith("filter_id="):
                 continue
-            for fdir in os.listdir(epath):
-                fpath = os.path.join(epath, fdir)
-                if not os.path.isdir(fpath) or not fdir.startswith("filter_id="):
+            for edir in os.listdir(fpath):
+                epath = os.path.join(fpath, edir)
+                if not os.path.isdir(epath) or not edir.startswith("epoch="):
                     continue
-                for ddir in os.listdir(fpath):
+                for ddir in os.listdir(epath):
                     if ddir.startswith("date=") and ddir[5:] < before_date:
-                        shutil.rmtree(os.path.join(fpath, ddir))
+                        shutil.rmtree(os.path.join(epath, ddir))
 
     def _require_quiesced(self, op: str) -> None:
         """The rewrite sweeps are read→write-tmp→swap over plain parquet —
@@ -587,12 +633,9 @@ class StreamingEngine:
         if not os.path.isdir(self.stats_path):
             return
         self._require_quiesced("expire_stats")
-        try:
-            kept = self.spark.read.parquet(self.stats_path).where(
-                F.col("bucket") >= before_bucket
-            )
-        except AnalysisException:
-            return  # directory exists but holds no parquet (fully purged)
+        kept = self._read(self.stats_path, self.STATS_SCHEMA).where(
+            F.col("bucket") >= before_bucket
+        )
         tmp = self.stats_path + ".compact"
         kept.write.partitionBy("epoch").mode("overwrite").parquet(tmp)
         self._swap_table(self.stats_path, tmp)
@@ -613,17 +656,14 @@ class StreamingEngine:
         w = Window.partitionBy("filter_id").orderBy(
             F.col("ts_epoch").desc(), F.col("row_id").desc()
         )
-        try:
-            src = self.spark.read.parquet(self.results_path)
-        except AnalysisException:
-            return  # directory exists but holds no parquet (fully expired)
         kept = (
-            src.withColumn("_rn", F.row_number().over(w))
+            self.results()
+            .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= self.max_msgs_per_filter)
             .drop("_rn")
         )
         tmp = self.results_path + ".compact"
-        kept.write.partitionBy("epoch", "filter_id", "date").mode(
+        kept.write.partitionBy("filter_id", "epoch", "date").mode(
             "overwrite"
         ).parquet(tmp)
         self._swap_table(self.results_path, tmp)

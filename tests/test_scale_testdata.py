@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from tools.scale_testdata import STRIDE, scale
+from tools.scale_testdata import MAX_REPLICAS, STRIDE, scale
 
 
 @pytest.fixture(scope="module")
@@ -113,3 +113,12 @@ def test_scaler_embedding_rotation_preserves_norms(scaled):
 def test_scaler_refuses_readonly_testdata(tmp_path):
     with pytest.raises(ValueError, match="read-only"):
         scale("/root/testdata/sf0.001", "/root/testdata/evil", 2)
+
+
+def test_scaler_refuses_more_replicas_than_rotations(tmp_path):
+    # replica 26 would rotate the text by 26 = 0 letters: a byte-identical
+    # copy of replica 0.  The check runs before anything is read or
+    # written.
+    with pytest.raises(ValueError, match="rotation"):
+        scale(str(tmp_path / "src"), str(tmp_path / "big"), MAX_REPLICAS + 1)
+    assert not (tmp_path / "big").exists()

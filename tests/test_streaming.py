@@ -1796,3 +1796,123 @@ def test_eval_contamination_suppressor(spark, tmp_path):
     )
     with _pytest.raises(RuntimeError, match="no rule-length stamp"):
         legacy.process_batch(b2, 0)
+
+
+def _engine_with_batches(spark, base, n_epochs=3):
+    """Two filters fed `n_epochs` batches through process_batch; every
+    line matches `errors`, every other line `even`."""
+    cat = FilterCatalog()
+    cat.create("errors", "error")
+    cat.create("even", "even")
+    eng = sp.StreamingEngine(spark, cat, base)
+    for e in range(n_epochs):
+        raw = spark.createDataFrame(
+            [
+                (
+                    f"2024-02-0{1 + e % 2}T10:0{e}:{i:02d}.000+00:00 h app:"
+                    f" error n={i} {('odd', 'even')[i % 2 == 0]}",
+                )
+                for i in range(10)
+            ],
+            "_raw STRING",
+        )
+        eng.process_batch(sp.parse_stream(raw), epoch_id=e)
+    return eng, cat
+
+
+def test_results_column_order_is_one_contract(spark, tmp_path):
+    """results() has one column order before the first batch, after a
+    batch and after retention emptied the table — for all filters and for
+    one filter's directory."""
+    cat = FilterCatalog()
+    fid = cat.create("errors", "error").id
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_cols"))
+    order = [
+        "filter_name", "_raw", "ts", "ts_epoch", "row_id", "epoch",
+        "filter_id", "date",
+    ]
+    assert eng.results().columns == order
+    assert eng.results(fid).columns == order
+    raw = spark.createDataFrame(
+        [("2024-02-01T10:00:00.000+00:00 h app: error n=1",)], "_raw STRING"
+    )
+    eng.process_batch(sp.parse_stream(raw), epoch_id=0)
+    assert eng.results().columns == order
+    assert eng.results(fid).columns == order
+    assert eng.tail(fid, 5).columns == order
+    eng.expire_results("2099-01-01")
+    assert eng.results().count() == 0
+    assert eng.results().columns == order
+    assert eng.results(fid).columns == order
+
+
+def test_declared_store_schemas_match_written_files(spark, tmp_path):
+    """The reads name each store's schema instead of inferring it; the
+    declared schema must stay what the batch hook writes."""
+    eng, _ = _engine_with_batches(spark, str(tmp_path / "engine_schemas"), 2)
+    for path, declared in (
+        (eng.results_path, eng.RESULTS_SCHEMA),
+        (eng.stats_path, eng.STATS_SCHEMA),
+        (os.path.join(eng.base_dir, "nb_state"), eng.NB_SCHEMA),
+    ):
+        inferred = spark.read.parquet(path).schema
+        want = spark.createDataFrame([], declared).schema
+        assert sorted(inferred.fields, key=lambda f: f.name) == sorted(
+            want.fields, key=lambda f: f.name
+        ), path
+
+
+def test_engine_refuses_epoch_major_results_layout(spark, tmp_path):
+    base = tmp_path / "engine_old_layout"
+    (base / "results" / "epoch=0" / "filter_id=x" / "date=2024-02-01").mkdir(
+        parents=True
+    )
+    with pytest.raises(ValueError, match="epoch-major"):
+        sp.StreamingEngine(spark, FilterCatalog(), str(base))
+
+
+def _jobs_run_by(spark, group, action):
+    """Spark jobs `action` ran, counted under a job group once the
+    listener bus has delivered every job event."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tail_and_stats_read_cost_in_jobs(spark, tmp_path):
+    """A tail poll is one Spark job over one filter's files; a stats poll
+    is two (the partial-count aggregation's two stages) — no schema
+    inference job on either."""
+    eng, cat = _engine_with_batches(spark, str(tmp_path / "engine_jobs"), 4)
+    fid = cat.get("even").id
+    rows = []
+    assert _jobs_run_by(
+        spark, "tail-read", lambda: rows.extend(eng.tail(fid, 100).collect())
+    ) == 1
+    assert len(rows) == 4 * 5
+    assert _jobs_run_by(spark, "stats-read", lambda: eng.stats(fid).collect()) == 2
+    files = eng.results(fid).inputFiles()
+    assert files and all(f"/filter_id={fid}/" in f for f in files)
+
+
+def test_results_of_filter_id_needing_path_escaping(spark, tmp_path):
+    """results(fid) finds the directory Spark wrote for an id with
+    characters Hive path escaping rewrites."""
+    cat = FilterCatalog()
+    odd = cat.create("odd", "error")
+    odd.id = "odd/id=%x #?:*'\"[]^{}\\"
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_escape"))
+    raw = spark.createDataFrame(
+        [(f"2024-02-01T10:00:0{i}.000+00:00 h app: error n={i}",) for i in range(3)],
+        "_raw STRING",
+    )
+    eng.process_batch(sp.parse_stream(raw), epoch_id=0)
+    assert [r.filter_id for r in eng.tail(odd.id, 10).collect()] == [odd.id] * 3

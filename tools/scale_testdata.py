@@ -22,7 +22,8 @@ cross-replica duplicate explosions):
   pair-generating dedup operators scale linearly and df-pruned queries
   keep non-empty output at sf1 (the r8 prefix salt only changed the
   first shingle window, so dfs multiplied by k and pruned everything).
-  Text length is preserved, so n_chars passes through unchanged.
+  Text length is preserved, so n_chars passes through unchanged.  There
+  are 26 distinct rotations, so ``k`` is capped at 26.
 - ``embeddings.embedding`` in replicas > 0 is dimension-ROTATED by
   ``7*i mod 64``: rotation preserves norms and within-replica cosines
   exactly, while cross-replica cosines decorrelate — ANN/near-dup
@@ -44,6 +45,9 @@ import sys
 import duckdb
 
 STRIDE = 10_000_000
+
+#: one replica per distinct Caesar rotation of the alphabet
+MAX_REPLICAS = 26
 
 #: per-table scaling SQL; {i} = replica index, {src} = source parquet path.
 _SCALED = {
@@ -108,6 +112,14 @@ _COPIED = ("region", "nation")
 def scale(src: str, dst: str, k: int) -> None:
     if os.path.abspath(dst).startswith("/root/testdata"):
         raise ValueError("refusing to write into the read-only testdata")
+    if k > MAX_REPLICAS:
+        # the Caesar rotation repeats every 26 replicas: replica 26 would
+        # be byte-identical to replica 0, and the cross-replica
+        # decorrelation the rotation exists for would silently vanish
+        raise ValueError(
+            f"k={k} exceeds {MAX_REPLICAS} replicas: the text rotation "
+            "would repeat and duplicate earlier replicas byte for byte"
+        )
     os.makedirs(dst, exist_ok=True)
     for t in _COPIED:
         shutil.copyfile(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
@@ -117,8 +129,7 @@ def scale(src: str, dst: str, k: int) -> None:
     upper = lower.upper()
 
     def _rot(i: int) -> str:
-        j = i % 26
-        return lower[j:] + lower[:j] + upper[j:] + upper[:j]
+        return lower[i:] + lower[:i] + upper[i:] + upper[:i]
 
     for t, tpl in _SCALED.items():
         parts = " UNION ALL ".join(
