@@ -198,24 +198,34 @@ def run_one(spark, name: str, sf_dir: str) -> float:
 HISTORY_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl")
 
 
-def _load_history(sf: float) -> list[dict]:
-    """All prior BENCH_HISTORY entries at this sf, oldest first — the ONE
-    history read shared by the regression report and the re-measure band
-    (duplicated parsing would let the two drift on format/sf handling)."""
+def _load_history(sf: float, cpus: str, subset: str) -> list[dict]:
+    """Prior BENCH_HISTORY entries of the same kind of run, oldest first:
+    same sf, same core count and same query subset (a full run records no
+    subset).  A regression diff across core counts or subsets would flag
+    the scaling signal itself."""
     try:
         with open(HISTORY_PATH) as fh:
             prior = [json.loads(line) for line in fh if line.strip()]
     except FileNotFoundError:
         return []
-    return [p for p in prior if p.get("sf") == sf]
+    return [
+        p
+        for p in prior
+        if p.get("sf") == sf
+        and p.get("cpus") == cpus
+        and p.get("subset", "") == subset
+    ]
 
 
-def _compare_with_last(sf: float, timings: dict[str, float]) -> None:
+def _compare_with_last(
+    sf: float, cpus: str, subset: str, timings: dict[str, float]
+) -> None:
     """Round-over-round tracking: diff against the newest prior history
-    entry at the same sf and flag per-query regressions on STDERR (stdout
-    stays the one-JSON-line driver contract).  >=1.5x AND >=0.3s absolute
-    — single-JVM noise sits well under both bounds (see BENCH notes)."""
-    prior = _load_history(sf)
+    entry of the same kind of run (see _load_history) and flag per-query
+    regressions on STDERR (stdout stays the one-JSON-line driver
+    contract).  >=1.5x AND >=0.3s absolute — single-JVM noise sits well
+    under both bounds (see BENCH notes)."""
+    prior = _load_history(sf, cpus, subset)
     if not prior:
         return
     last = prior[-1]["queries"]
@@ -234,107 +244,16 @@ def _compare_with_last(sf: float, timings: dict[str, float]) -> None:
         print(f"  REGRESSED {n}: {old:.3f}s -> {new:.3f}s", file=sys.stderr)
 
 
-def _history_samples(sf: float) -> dict[str, list[float]]:
-    """Per-query runtime samples across ALL prior history entries at
-    this sf — parsed ONCE and shared by the median band and the
-    re-measure-threshold selection."""
-    samples: dict[str, list[float]] = {}
-    for p in _load_history(sf):
-        for n, t in p.get("queries", {}).items():
-            samples.setdefault(n, []).append(t)
-    return samples
-
-
-def _history_medians(sf: float) -> dict[str, float]:
-    """Per-query median runtime — the band a fresh measurement is judged
-    against."""
-    import statistics
-
-    return {
-        n: statistics.median(ts) for n, ts in _history_samples(sf).items()
-    }
-
-
-def _remeasure_threshold(samples: list[float]) -> float:
-    """The re-measure trigger multiplier over the history median: 1.5x by
-    default, tightened to 1.4x for LOW-VARIANCE queries (>=3 samples with
-    relative stdev < 10% of the median) — a steady query drifting 1.46x
-    is signal, not session noise (the dedup_incremental_vs_index case
-    the flat 1.5x band missed in r4)."""
-    import statistics
-
-    if len(samples) >= 3:
-        med = statistics.median(samples)
-        if med > 0 and statistics.stdev(samples) / med < 0.10:
-            return 1.4
-    return 1.5
-
-
-def _remeasure_to_band(
-    spark, sf: float, sf_dir: str, timings: dict[str, float]
-) -> tuple[object, list[str], dict[str, dict]]:
-    """Unconditional re-measure-to-band (VERDICT r3): any query whose
-    fresh time exceeds its history-median band by >=1.5x (and >=0.3s
-    absolute) is re-run in an ISOLATED session — a fresh JVM-side
-    SparkSession after stopping the 170-query one, so accumulated GC /
-    codegen-cache pressure can't inflate the published artifact.  The
-    published number is the min of the two; genuine regressions survive
-    because a real plan change reproduces in isolation.  Low-variance
-    queries (rel stdev < 10% over >=3 history samples) trigger at 1.4x
-    instead of 1.5x — see _remeasure_threshold."""
-    import statistics
-
-    samples = _history_samples(sf)  # one parse serves band AND threshold
-    bands = {n: statistics.median(ts) for n, ts in samples.items()}
-    thresholds = {n: _remeasure_threshold(ts) for n, ts in samples.items()}
-    flagged = [
-        n
-        for n, t in timings.items()
-        if n in bands
-        and t > thresholds.get(n, 1.5) * bands[n]
-        and t - bands[n] > 0.3
-    ]
-    if not flagged:
-        return spark, [], {}
-    print(
-        f"re-measure-to-band: {len(flagged)} queries exceed their "
-        f"history-median band (1.4x low-variance / 1.5x default); "
-        f"re-running in an isolated session: {flagged}",
-        file=sys.stderr,
-    )
-    spark.stop()
-    spark = get_spark("bench-remeasure")
-    # band_policy: per-flagged-query audit trail (which threshold fired,
-    # against what median, and both measurements) — lands in the bench
-    # artifacts so band decisions are auditable from the JSON alone
-    policy: dict[str, dict] = {}
-    for n in flagged:
-        fresh = round(run_one(spark, n, sf_dir), 4)
-        print(
-            f"  {n}: {timings[n]:.3f}s -> isolated {fresh:.3f}s "
-            f"(band median {bands[n]:.3f}s)",
-            file=sys.stderr,
-        )
-        policy[n] = {
-            "threshold": thresholds.get(n, 1.5),
-            "median": round(bands[n], 4),
-            "session": timings[n],
-            "isolated": fresh,
-        }
-        timings[n] = min(timings[n], fresh)
-    return spark, flagged, policy
-
-
 def parse_sf(sf_dir: str) -> float:
     """Scale factor from the data-dir name, LOUD on failure: defaulting a
     pattern-less dir to 0.1 would append foreign-scale timings into the
-    sf=0.1 history and silently poison every later regression band
+    sf=0.1 history and silently poison every later regression diff
     (round-6 measurement-stack review)."""
     m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
     if not m:
         raise SystemExit(
             f"bench: cannot parse a scale factor from {sf_dir!r} — name "
-            "the data dir sf<N> so history entries stay band-comparable"
+            "the data dir sf<N> so history entries stay comparable"
         )
     return float(m.group(1))
 
@@ -368,33 +287,20 @@ def main() -> None:
         if name not in timings:
             extras[name] = round(run_one(spark, name, sf_dir), 4)
     merged = {**timings, **extras}
-    if subset:
-        # the band protocol assumes like-for-like sessions; a scaling
-        # probe intentionally varies the core count, so the band would
-        # flag the scaling signal itself and re-run half the subset
-        remeasured, band_policy = [], {}
-    else:
-        spark, remeasured, band_policy = _remeasure_to_band(
-            spark, sf, sf_dir, merged
-        )
-    timings = {n: merged[n] for n in timings}
-    extras = {n: merged[n] for n in extras}
     total = round(sum(timings.values()), 4)
+    # self-describing scaling artifacts (r9): a subset run at a
+    # non-default core count must be attributable from the JSON alone
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "all"
     try:
-        _compare_with_last(sf, merged)
+        _compare_with_last(sf, cpus, subset, merged)
         with open(HISTORY_PATH, "a") as fh:
             fh.write(
                 json.dumps(
                     {
                         "ts": int(time.time()),
                         "sf": sf,
-                        # self-describing scaling artifacts (r9): a
-                        # subset run at a non-default core count must be
-                        # attributable from the JSON alone
-                        "cpus": os.environ.get("SPARK_GRAFT_CPUS") or "all",
+                        "cpus": cpus,
                         "value": total,
-                        "remeasured": remeasured,
-                        "band_policy": band_policy,
                         "queries": merged,
                         **({"subset": subset} if subset else {}),
                     }
@@ -422,8 +328,6 @@ def main() -> None:
                     "unit": "sec",
                     "queries": timings,
                     "extra_queries": extras,
-                    "remeasured": remeasured,
-                    "band_policy": band_policy,
                     "sf": sf,
                 },
                 fh,
@@ -431,23 +335,16 @@ def main() -> None:
             )
     except OSError:
         pass
-    print(
-        _fit_stdout_line(
-            timings, len(extras), remeasured, sf, total,
-            band_policy=band_policy,
-        )
-    )
+    print(_fit_stdout_line(timings, len(extras), sf, total))
     spark.stop()
 
 
 def _fit_stdout_line(
     timings: dict[str, float],
     n_extras: int,
-    remeasured: list[str],
     sf: float,
     total: float,
     limit: int = 1900,
-    band_policy: dict[str, dict] | None = None,
 ) -> str:
     """Stdout contract line, guaranteed standalone-parseable.  The
     driver's log capture keeps only the LAST ~2000 bytes (BENCH_r01.json:
@@ -460,8 +357,6 @@ def _fit_stdout_line(
     BENCH_HISTORY.jsonl."""
     by_cost = sorted(timings, key=timings.get, reverse=True)
     keep = len(by_cost)
-    keep_rm = len(remeasured)
-    bp = band_policy or {}
     while True:
         line = json.dumps(
             {
@@ -470,14 +365,6 @@ def _fit_stdout_line(
                 },
                 "queries_omitted": len(by_cost) - keep + n_extras,
                 "full_results": "BENCH_LOCAL.json",
-                "remeasured": remeasured[:keep_rm],
-                "n_remeasured": len(remeasured),
-                # which threshold fired per re-measured query (auditable
-                # from the captured artifact alone); trimmed in lockstep
-                # with the remeasured list under the tail-capture budget
-                "band_policy": {
-                    n: bp[n] for n in remeasured[:keep_rm] if n in bp
-                },
                 "metric": "headline_queries_total_runtime",
                 "unit": "sec",
                 "sf": sf,
@@ -485,21 +372,9 @@ def _fit_stdout_line(
             },
             separators=(",", ":"),
         )
-        if len(line.encode()) <= limit:
+        if len(line.encode()) <= limit or keep == 0:
             return line
-        # Priority: the slow-queries map is the informative payload — a
-        # busy re-measure round (16 flagged -> ~1.5 KB of band_policy)
-        # must not evict it entirely (it did: the r6 bench shipped
-        # queries:{} / queries_omitted:227 because queries were trimmed
-        # FIRST).  Trim the band audit before letting the map drop below
-        # its floor; the full audit survives in BENCH_LOCAL.json.
-        if keep_rm > 0 and keep <= 20:
-            keep_rm -= 1
-        elif keep > 0:
-            keep -= 1
-        else:
-            return line
-
+        keep -= 1
 
 if __name__ == "__main__":
     main()

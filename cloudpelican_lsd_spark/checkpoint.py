@@ -1,50 +1,37 @@
-"""Lineage-truncating materialization with a configurable durability tier.
+"""Lineage-truncating materialization whose durability tier follows the
+session's configuration.
 
 Every plan-truncation point in the engine (CC round state, the clean
 pipelines' widest fan-out, shared fingerprint sets) calls
-:func:`materialize` instead of ``DataFrame.localCheckpoint`` directly, so
-ONE switch selects the tier:
+:func:`materialize` instead of ``DataFrame.localCheckpoint`` directly, and
+the tier is read from what the session can observe:
 
-- ``CPL_CHECKPOINT=local`` (default): ``localCheckpoint`` — executor-local
-  storage, no configuration needed, the right choice for a single-node
-  driver and for any deployment that accepts recompute-on-executor-loss
-  (losing an executor forces recompute of the truncated subtree, never a
-  wrong result).
-- ``CPL_CHECKPOINT=reliable``: ``checkpoint`` — writes the materialized
-  rows to the checkpoint directory (``CPL_CHECKPOINT_DIR``, or whatever
-  ``SparkContext.setCheckpointDir`` already configured; on a real cluster
-  point it at HDFS/object storage).  This is the 100 TB story the in-code
-  comments used to promise as prose: executor loss no longer recomputes
-  the gated corpus / pair set, at the cost of one extra write+read of the
-  compact materialized rows.
+- no checkpoint directory configured (the default): ``localCheckpoint``
+  — executor-local storage, the right choice for a single-node driver and
+  for any deployment that accepts recompute-on-executor-loss (losing an
+  executor forces recompute of the truncated subtree, never a wrong
+  result);
+- a checkpoint directory configured (``SparkContext.setCheckpointDir``;
+  on a real cluster point it at HDFS/object storage): ``checkpoint`` —
+  the materialized rows are written there, so executor loss no longer
+  recomputes the gated corpus / pair set, at the cost of one extra
+  write+read of the compact materialized rows.
 
-The tier changes WHERE the materialized bytes live, never WHAT they are —
-pinned by ``tests/test_checkpoint_tier.py`` (identical output on a toy
-directory).
+There is no fallback directory: a deployment that wants durable
+truncation says where the bytes live, and one that configures nothing
+gets the local tier, never a node-local directory posing as durable
+storage.  The tier changes WHERE the materialized bytes live, never WHAT
+they are — pinned by ``tests/test_checkpoint_tier.py``.
 """
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 from pyspark.sql import DataFrame
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Truncate ``df``'s lineage at the selected durability tier."""
-    mode = os.environ.get("CPL_CHECKPOINT", "local").lower()
-    if mode != "reliable":
+    """Truncate ``df``'s lineage: reliable ``checkpoint`` when the session
+    has a checkpoint directory, ``localCheckpoint`` otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    # honor an already-configured checkpoint dir; otherwise take the env
-    # dir (or a process tempdir as the last resort, so `reliable` can
-    # never silently fall back to the local tier)
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(
-            os.environ.get(
-                "CPL_CHECKPOINT_DIR",
-                os.path.join(tempfile.gettempdir(), "cpl_checkpoints"),
-            )
-        )
     return df.checkpoint(eager=eager)

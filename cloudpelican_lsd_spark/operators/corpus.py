@@ -22,6 +22,8 @@ Physical shape at scale (4 shuffles total, each on a compact key):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,9 +31,15 @@ from cloudpelican_lsd_spark.checkpoint import materialize
 
 from cloudpelican_lsd_spark.operators.dedup import (
     ngram_jaccard_pairs,
+    shingles,
     shingles_oracle_cte,
 )
 from cloudpelican_lsd_spark.operators.textstats import (
+    gopher_fr_cte,
+    gopher_pass_sql,
+    gopher_repetition,
+    line_dedup,
+    lined_view_cte,
     stop_count_expr,
     stop_count_sql,
 )
@@ -273,6 +281,56 @@ SELECT doc_id, shard,
 FROM c"""
 
 
+def export_training_shards(
+    docs: DataFrame,
+    path: str,
+    capacity: int = 256,
+    shards: int = 8,
+) -> DataFrame:
+    """Write the packed corpus as training-ready parquet shards and
+    return the manifest `(shard, n_docs, n_packs, n_tokens)`.
+
+    Physical layout is the part that matters at 100 TB:
+
+    - ``partitionBy(shard)`` — one directory per shard, so a trainer
+      maps shards to data-loader workers with no file listing games;
+    - ``repartition(shard)`` BEFORE the write — exactly one task (and
+      therefore one file) per shard directory, instead of every task
+      dribbling a fragment into every partition (the classic
+      small-files explosion: tasks × partitions files);
+    - ``sortWithinPartitions(pack_id, start_offset)`` — rows land in
+      pack order, so a reader streams each file sequentially and packs
+      come out contiguous without a shuffle on the training side.
+
+    The doc→pack assignment is :func:`pack_sequences` (same integer
+    math, same ids); the rows carry the text so the shard files are
+    self-contained.
+    """
+    packed = pack_sequences(docs, capacity=capacity, shards=shards)
+    rows = packed.join(docs.select("doc_id", "text"), "doc_id")
+    (
+        rows.repartition("shard")
+        # shard leads the sort: the parquet writer REQUIRES ordering by
+        # the partition column and would otherwise inject its own
+        # SortExec on top (a redundant second sort whose stability for
+        # equal shard keys is an implementation detail, not a contract)
+        .sortWithinPartitions("shard", "pack_id", "start_offset")
+        .write.partitionBy("shard")
+        .mode("overwrite")
+        .parquet(path)
+    )
+    out = docs.sparkSession.read.parquet(path)
+    return (
+        out.groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.countDistinct("pack_id").cast("long").alias("n_packs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+        )
+        .orderBy("shard")
+    )
+
+
 def corpus_clean_yield(
     docs: DataFrame,
     min_tokens: int = 5,
@@ -349,23 +407,21 @@ SELECT (SELECT COUNT(*) FROM {base_table})::BIGINT AS n_raw,
 
 
 # ---------------------------------------------------------------------------
-# v2 capstone: boilerplate line dedup -> gates -> dedup chain -> eval
-# decontamination (the full modern pre-training pipeline)
+# Clean pipelines v2 / v3 / v4 — ONE skeleton, versions are gate lists:
+# boilerplate line dedup -> gates -> the v1 chain -> eval decontamination
 # ---------------------------------------------------------------------------
 
 
 def _decontaminate(
     pop: DataFrame, final: DataFrame, eval_mod: int, gram_n: int
 ) -> DataFrame:
-    """Shared eval-decontamination tail (v2 / v3 / staged runner — ONE
+    """Shared eval-decontamination tail of :func:`_clean_lined` (ONE
     copy, so the contamination rule cannot fork): docs with
     ``doc_id % eval_mod == 0`` play the held-out benchmark; any
     surviving training doc sharing a word ``gram_n``-gram with the eval
     slice is dropped, and eval docs never enter the training output.
     ``pop`` is the population the eval slice is drawn from (the
-    pipeline's post-line-dedup corpus)."""
-    from cloudpelican_lsd_spark.operators.dedup import shingles
-
+    pipeline's gated post-line-dedup corpus)."""
     ev = pop.where(F.col("doc_id") % eval_mod == 0)
     evg = (
         shingles(ev, gram_n)
@@ -386,30 +442,8 @@ def _decontaminate(
     )
 
 
-def _docs2_cte(
-    base_cte: str, base_table: str, words_per_line: int, line_min_df: int
-) -> str:
-    """Shared DuckDB CTE: lined view -> boilerplate-line-deduped `docs2`
-    (one copy for the v2 and v3 oracles)."""
-    from cloudpelican_lsd_spark.operators.textstats import lined_view_cte
-
-    return f"""{base_cte},
-{lined_view_cte(base_table, words_per_line, prefix="ld_")},
-ld_f AS (SELECT line, COUNT(*)::BIGINT AS df FROM ld_ex GROUP BY line),
-docs2 AS (
-  SELECT e.doc_id,
-         string_agg(e.line, ' ' ORDER BY e.pos)
-           FILTER (WHERE f.df < {line_min_df}) AS text
-  FROM ld_ex e JOIN ld_f f USING (line)
-  GROUP BY e.doc_id
-  HAVING COUNT(*) FILTER (WHERE f.df < {line_min_df}) >= 1
-)"""
-
-
 def _decontaminate_sql(pop_table: str, eval_mod: int, gram_n: int) -> str:
     """Shared DuckDB decontamination tail over ``pop_table`` + `final`."""
-    from cloudpelican_lsd_spark.operators.dedup import shingles_oracle_cte
-
     ev_grams = shingles_oracle_cte(gram_n, "ev_src", prefix="ev")
     tr_grams = shingles_oracle_cte(gram_n, "tr_src", prefix="tr")
     return f"""ev_src AS (SELECT doc_id, text FROM {pop_table} WHERE doc_id % {eval_mod} = 0),
@@ -424,88 +458,14 @@ WHERE f.doc_id % {eval_mod} <> 0
   AND f.doc_id NOT IN (SELECT doc_id FROM bad)"""
 
 
-def corpus_clean_v2(
-    docs_lined: DataFrame,
-    line_min_df: int = 3,
-    eval_mod: int = 97,
-    gram_n: int = 8,
-    min_tokens: int = 5,
-    lang_num: int = 1,
-    lang_den: int = 20,
-    n: int = 3,
-    jac_num: int = 4,
-    jac_den: int = 5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """`(doc_id, n_tokens)` — the v2 pipeline over LINE-STRUCTURED docs:
-
-    (0) corpus-wide boilerplate line removal (textstats.line_dedup;
-        survivors rejoin with spaces so downstream tokenization never
-        sees the line separator);
-    (1-3) the v1 chain: quality gate → lang-ID gate → exact dedup →
-        near-dup removal (_clean_stages — single source of truth);
-    (4) EVAL DECONTAMINATION: docs with ``doc_id % eval_mod == 0`` play
-        the held-out benchmark; any surviving training doc sharing a
-        word ``gram_n``-gram with the eval slice is dropped, and eval
-        docs themselves never enter the training output.
-
-    Scale shape: stage 0 is the window-count line plan (1 scan /
-    2 shuffles); stage 4 joins the training grams against the eval-gram
-    set on md5 keys — eval is a tiny slice, so AQE broadcasts it."""
-    from cloudpelican_lsd_spark.operators.textstats import line_dedup
-
-    docs2 = line_dedup(docs_lined, min_df=line_min_df).select(
-        "doc_id",
-        F.regexp_replace(F.col("clean_text"), "\n", " ").alias("text"),
-    )
-    # r8 (guide §3.3): docs2 fans out into _clean_stages AND (twice) the
-    # decontamination tail; truncating lineage here computes the line
-    # dedup once and keeps every downstream DataFrame op from
-    # re-analyzing its tree — 6.0 s -> 4.6 s session-median A/B at
-    # sf0.1, outputs bit-identical.  localCheckpoint locally; reliable
-    # checkpoint() on a real cluster (see corpus_clean_v4).
-    docs2 = docs2.transform(materialize)
-    _, _, final = _clean_stages(
-        docs2, min_tokens, lang_num, lang_den, n, jac_num, jac_den, max_df
-    )
-    return _decontaminate(docs2, final, eval_mod, gram_n)
-
-
-def corpus_clean_v2_oracle(
-    base_cte: str,
-    base_table: str,
-    words_per_line: int = 10,
-    line_min_df: int = 3,
-    eval_mod: int = 97,
-    gram_n: int = 8,
-    min_tokens: int = 5,
-    lang_num: int = 1,
-    lang_den: int = 20,
-    n: int = 3,
-    jac_num: int = 4,
-    jac_den: int = 5,
-    max_df: int | None = None,
-) -> str:
-    """DuckDB twin: the shared lined-view CTE feeds docs2 (lines rejoined
-    with spaces), then the shared v1 chain, then the gram-overlap drop —
-    every n-gram and line-chunking arithmetic composes the single-source
-    builders (textstats.lined_view_cte, dedup.shingles_oracle_cte)."""
-    chain = _clean_cte_chain(
-        _docs2_cte(base_cte, base_table, words_per_line, line_min_df),
-        "docs2", min_tokens, lang_num, lang_den, n,
-        jac_num, jac_den, max_df,
-    )
-    return f"""WITH {chain},
-{_decontaminate_sql("docs2", eval_mod, gram_n)}"""
-
-
-#: the C4 rules the v3 pipeline GATES on — exactly the two quality axes
+#: the C4 rules the "c4" gate drops on — exactly the two quality axes
 #: the v1 chain lacks (it already has a token floor and stopword-density
 #: language gate): type-token ratio (repetition) and mean token length
 V3_GATE_RULES = ("low_type_token_ratio", "short_mean_token_len")
 
 
-def corpus_clean_v3(
+def _clean_lined(
+    gates: tuple[str, ...],
     docs_lined: DataFrame,
     line_min_df: int = 3,
     eval_mod: int = 97,
@@ -518,45 +478,76 @@ def corpus_clean_v3(
     jac_den: int = 5,
     max_df: int | None = None,
 ) -> DataFrame:
-    """`(doc_id, n_tokens)` — v3 = v2 with a C4/Gopher rule gate between
-    the boilerplate line removal and the v1 chain:
+    """`(doc_id, n_tokens)` — the clean pipeline over LINE-STRUCTURED
+    docs; ``gates`` names the document gates between the line dedup and
+    the v1 chain:
 
-    (0) corpus-wide line dedup (shared with v2);
-    (0.5) C4 GATE: drop docs failing ``V3_GATE_RULES`` — the repetition
-        (type-token ratio) and mean-token-length axes the v1 chain's own
-        gates don't cover; predicates come from :func:`c4_flag_exprs`,
-        the same single source the audit panel reports on, so the panel
-        IS the dry-run of this gate;
-    (1-4) the v2 stages unchanged: quality gate → lang gate → exact
-        dedup → near-dup removal → eval decontamination.
+    (0)   corpus-wide boilerplate line removal (textstats.line_dedup;
+          survivors rejoin with spaces after the Gopher gate, so
+          downstream tokenization never sees the line separator);
+    (0.4) "gopher": drop docs failing any Rae et al. 2021 Table A1
+          repetition threshold (textstats.gopher_repetition over the
+          line-deduped text WITH its line structure — the panel's
+          dup-line signals need the lines the rejoin flattens;
+          `text_gopher_repetition` is this gate's dry-run);
+    (0.5) "c4": drop docs failing ``V3_GATE_RULES`` — the repetition
+          (type-token ratio) and mean-token-length axes the v1 chain's
+          own gates don't cover; predicates come from
+          :func:`c4_flag_exprs`, the same single source the audit panel
+          reports on, so the panel IS the dry-run of this gate;
+    (1-3) the v1 chain: quality gate → lang-ID gate → exact dedup →
+          near-dup removal (_clean_stages — single source of truth);
+    (4)   EVAL DECONTAMINATION (_decontaminate).
 
-    Scale shape: the gate is per-row column math fused into stage 0's
-    output projection — zero added shuffles over v2.
+    Scale shape: stage 0 is the window-count line plan (1 scan /
+    2 shuffles); the C4 gate is per-row column math fused into stage
+    0's output projection (zero added shuffles); the Gopher panel is
+    aggregation-valued (per-doc n-gram statistics), so its gate is a
+    doc_id-keyed SEMI join of pass ids and the panel's token shuffle is
+    the only added exchange; stage 4 joins the training grams against
+    the eval-gram set on md5 keys — eval is a tiny slice, so AQE
+    broadcasts it.
     """
-    from cloudpelican_lsd_spark.operators.textstats import line_dedup
-
-    flags = c4_flag_exprs()
-    keep = ~flags[V3_GATE_RULES[0]]
-    for r in V3_GATE_RULES[1:]:
-        keep &= ~flags[r]
-    docs3 = (
-        line_dedup(docs_lined, min_df=line_min_df)
-        .select(
-            "doc_id",
-            F.regexp_replace(F.col("clean_text"), "\n", " ").alias("text"),
+    docs = line_dedup(docs_lined, min_df=line_min_df).select(
+        "doc_id", F.col("clean_text").alias("text")
+    )
+    if "gopher" in gates:
+        # co_partition=False: docs ends in line_dedup's EXPLICIT-count
+        # doc_id exchange (r8; an implicit one AQE-coalesced to a single
+        # partition and serialized the panel onto one core), which the
+        # panel's aggregations reuse — its default upfront repartition
+        # would be a redundant second corpus exchange
+        pass_ids = (
+            gopher_repetition(docs, co_partition=False)
+            .where(F.col("pass_gopher") == 1)
+            .select("doc_id")
         )
-        .where(keep)
+        docs = docs.join(pass_ids, "doc_id", "left_semi")
+    docs = docs.select(
+        "doc_id", F.regexp_replace(F.col("text"), "\n", " ").alias("text")
     )
-    # r8 (guide §3.3): same fan-out truncation as v2/v4 — 4.4 s ->
-    # 3.3 s session-median A/B at sf0.1, outputs bit-identical
-    docs3 = docs3.transform(materialize)
+    if "c4" in gates:
+        flags = c4_flag_exprs()
+        keep = ~flags[V3_GATE_RULES[0]]
+        for r in V3_GATE_RULES[1:]:
+            keep &= ~flags[r]
+        docs = docs.where(keep)
+    # r8: truncate lineage at the widest fan-out point — the gated corpus
+    # feeds _clean_stages AND (twice) _decontaminate, and without the cut
+    # every consumer re-analyzes the line-dedup (+ gate) tree (v4's static
+    # plan: 150 exchanges / 120 scans, ~7 s of driver analysis at sf0.1).
+    # Session-median A/B at sf0.1, outputs bit-identical: v2 6.0 -> 4.6 s,
+    # v3 4.4 -> 3.3 s, v4 18.1 -> 9.2 s.  Durable (reliable checkpoint)
+    # whenever a checkpoint dir is configured — see checkpoint.materialize.
+    docs = docs.transform(materialize)
     _, _, final = _clean_stages(
-        docs3, min_tokens, lang_num, lang_den, n, jac_num, jac_den, max_df
+        docs, min_tokens, lang_num, lang_den, n, jac_num, jac_den, max_df
     )
-    return _decontaminate(docs3, final, eval_mod, gram_n)
+    return _decontaminate(docs, final, eval_mod, gram_n)
 
 
-def corpus_clean_v3_oracle(
+def _clean_lined_oracle(
+    gates: tuple[str, ...],
     base_cte: str,
     base_table: str,
     words_per_line: int = 10,
@@ -571,18 +562,62 @@ def corpus_clean_v3_oracle(
     jac_den: int = 5,
     max_df: int | None = None,
 ) -> str:
-    """DuckDB twin: v2's CTE chain with the shared-SQL C4 gate spliced
-    between docs2 and the v1 chain."""
-    fsql = c4_flag_sql()
-    keep = " AND ".join(f"NOT {fsql[r]}" for r in V3_GATE_RULES)
-    lines_cte = f"""{_docs2_cte(base_cte, base_table, words_per_line, line_min_df)},
-docs3 AS (SELECT doc_id, text FROM docs2 WHERE {keep})"""
+    """DuckDB twin of :func:`_clean_lined`: the shared lined-view CTE
+    feeds `docs2` (surviving lines rejoined with spaces); the gates
+    filter it into `docsg` ("gopher": a chr(10)-joined twin `docs2l`
+    feeds textstats.gopher_fr_cte, whose pass ids semi-filter docs2;
+    "c4": the shared-SQL rule predicates); then the shared v1 chain and
+    the gram-overlap drop — every n-gram and line-chunking arithmetic
+    composes the single-source builders (textstats.lined_view_cte,
+    dedup.shingles_oracle_cte)."""
+
+    def joined(name: str, sep: str) -> str:
+        return f"""{name} AS (
+  SELECT e.doc_id,
+         string_agg(e.line, {sep} ORDER BY e.pos)
+           FILTER (WHERE f.df < {line_min_df}) AS text
+  FROM ld_ex e JOIN ld_f f USING (line)
+  GROUP BY e.doc_id
+  HAVING COUNT(*) FILTER (WHERE f.df < {line_min_df}) >= 1
+)"""
+
+    ctes = [
+        base_cte,
+        lined_view_cte(base_table, words_per_line, prefix="ld_"),
+        "ld_f AS (SELECT line, COUNT(*)::BIGINT AS df FROM ld_ex GROUP BY line)",
+        joined("docs2", "' '"),
+    ]
+    keep = []
+    if "gopher" in gates:
+        ctes += [
+            joined("docs2l", "chr(10)"),
+            gopher_fr_cte("docs2l", "gp"),
+            f"gp_pass AS (SELECT doc_id FROM gpfr WHERE {gopher_pass_sql()})",
+        ]
+        keep.append("doc_id IN (SELECT doc_id FROM gp_pass)")
+    if "c4" in gates:
+        fsql = c4_flag_sql()
+        keep += [f"NOT {fsql[r]}" for r in V3_GATE_RULES]
+    ctes.append(
+        "docsg AS (SELECT doc_id, text FROM docs2 WHERE "
+        f"{' AND '.join(keep) or 'TRUE'})"
+    )
     chain = _clean_cte_chain(
-        lines_cte, "docs3", min_tokens, lang_num, lang_den, n,
+        ",\n".join(ctes), "docsg", min_tokens, lang_num, lang_den, n,
         jac_num, jac_den, max_df,
     )
     return f"""WITH {chain},
-{_decontaminate_sql("docs3", eval_mod, gram_n)}"""
+{_decontaminate_sql("docsg", eval_mod, gram_n)}"""
+
+
+# the public pipelines, with the skeleton's signature and defaults: v2 =
+# no gate, v3 = the C4 rule gate, v4 = the Gopher panel ahead of the C4 gate
+corpus_clean_v2 = partial(_clean_lined, ())
+corpus_clean_v2_oracle = partial(_clean_lined_oracle, ())
+corpus_clean_v3 = partial(_clean_lined, ("c4",))
+corpus_clean_v3_oracle = partial(_clean_lined_oracle, ("c4",))
+corpus_clean_v4 = partial(_clean_lined, ("gopher", "c4"))
+corpus_clean_v4_oracle = partial(_clean_lined_oracle, ("gopher", "c4"))
 
 
 # ---------------------------------------------------------------------------
@@ -760,115 +795,6 @@ fails AS (
 ),
 fails2 AS MATERIALIZED (SELECT *, ({nf}) AS n_fails FROM fails)
 {arms}"""
-
-
-# ---------------------------------------------------------------------------
-# Stage-materialized capstone runner (the 100 TB execution mode)
-# ---------------------------------------------------------------------------
-
-
-def corpus_clean_v2_staged(
-    spark,
-    docs_lined: DataFrame,
-    workdir: str,
-    line_min_df: int = 3,
-    eval_mod: int = 97,
-    gram_n: int = 8,
-    min_tokens: int = 5,
-    lang_num: int = 1,
-    lang_den: int = 20,
-    n: int = 3,
-    jac_num: int = 4,
-    jac_den: int = 5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """corpus_clean_v2 with STAGE MATERIALIZATION — identical output
-    (equivalence-tested), different execution contract.
-
-    The fused one-plan capstone is the right default at test scale, but
-    its DAG reads the raw corpus 3x and re-runs the line-dedup shuffles
-    inside every consumer branch (PLANS.md: 10 shuffles / 3 scans).  At
-    100 TB a production run materializes the two natural stage
-    boundaries instead — each multi-consumer intermediate is computed
-    ONCE and every consumer reads compact parquet:
-
-      stage0  docs2 = boilerplate-line-deduped corpus   (3 consumers)
-      stage1  final = v1 chain survivors                (2 consumers)
-
-    This is the checkpoint-between-stages pattern every large cleaning
-    pipeline (C4, RefinedWeb, CCNet) runs in practice; it also gives
-    per-stage restartability — rerunning stage k does not recompute
-    stages < k.  The fused variant stays the oracle-gated twin.
-    """
-    import os
-
-    from cloudpelican_lsd_spark.operators.textstats import line_dedup
-
-    d2_path = os.path.join(workdir, "stage0_docs2")
-    line_dedup(docs_lined, min_df=line_min_df).select(
-        "doc_id",
-        F.regexp_replace(F.col("clean_text"), "\n", " ").alias("text"),
-    ).write.mode("overwrite").parquet(d2_path)
-    docs2 = spark.read.parquet(d2_path)
-
-    final_path = os.path.join(workdir, "stage1_final")
-    _, _, final = _clean_stages(
-        docs2, min_tokens, lang_num, lang_den, n, jac_num, jac_den, max_df
-    )
-    final.write.mode("overwrite").parquet(final_path)
-    final = spark.read.parquet(final_path)
-
-    return _decontaminate(docs2, final, eval_mod, gram_n)
-
-
-def export_training_shards(
-    docs: DataFrame,
-    path: str,
-    capacity: int = 256,
-    shards: int = 8,
-) -> DataFrame:
-    """Write the packed corpus as training-ready parquet shards and
-    return the manifest `(shard, n_docs, n_packs, n_tokens)`.
-
-    Physical layout is the part that matters at 100 TB:
-
-    - ``partitionBy(shard)`` — one directory per shard, so a trainer
-      maps shards to data-loader workers with no file listing games;
-    - ``repartition(shard)`` BEFORE the write — exactly one task (and
-      therefore one file) per shard directory, instead of every task
-      dribbling a fragment into every partition (the classic
-      small-files explosion: tasks × partitions files);
-    - ``sortWithinPartitions(pack_id, start_offset)`` — rows land in
-      pack order, so a reader streams each file sequentially and packs
-      come out contiguous without a shuffle on the training side.
-
-    The doc→pack assignment is :func:`pack_sequences` (same integer
-    math, same ids); the rows carry the text so the shard files are
-    self-contained.
-    """
-    packed = pack_sequences(docs, capacity=capacity, shards=shards)
-    rows = packed.join(docs.select("doc_id", "text"), "doc_id")
-    (
-        rows.repartition("shard")
-        # shard leads the sort: the parquet writer REQUIRES ordering by
-        # the partition column and would otherwise inject its own
-        # SortExec on top (a redundant second sort whose stability for
-        # equal shard keys is an implementation detail, not a contract)
-        .sortWithinPartitions("shard", "pack_id", "start_offset")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    out = docs.sparkSession.read.parquet(path)
-    return (
-        out.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("pack_id").cast("long").alias("n_packs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .orderBy("shard")
-    )
 
 
 def c4_audit_by_source(docs: DataFrame) -> DataFrame:
@@ -2555,136 +2481,6 @@ SELECT ks.k,
             // MAX(tot.n) AS BIGINT) AS risk_ppm
 FROM classes c CROSS JOIN ks CROSS JOIN tot
 GROUP BY ks.k"""
-
-
-def corpus_clean_v4(
-    docs_lined: DataFrame,
-    line_min_df: int = 3,
-    eval_mod: int = 97,
-    gram_n: int = 8,
-    min_tokens: int = 5,
-    lang_num: int = 1,
-    lang_den: int = 20,
-    n: int = 3,
-    jac_num: int = 4,
-    jac_den: int = 5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """`(doc_id, n_tokens)` — v4 = v3 with the FULL Gopher repetition
-    panel as a gate between the boilerplate line dedup and the C4 rule
-    gate:
-
-    (0)   corpus-wide line dedup (shared with v2/v3);
-    (0.4) GOPHER GATE: drop docs failing any Rae et al. 2021 Table A1
-          repetition threshold (textstats.gopher_repetition over the
-          line-deduped text WITH its line structure — the panel's
-          dup-line signals need the lines the next stage flattens);
-    (0.5) C4 rule gate (shared predicates with corpus_c4_audit);
-    (1-4) the v1 chain + eval decontamination, unchanged.
-
-    Unlike v3's per-row C4 predicates, the panel is aggregation-valued
-    (per-doc n-gram statistics), so the gate is a doc_id-keyed SEMI
-    join of pass ids — one co-partitioned join over v3's plan, and the
-    panel's token shuffle is the only added exchange.
-    `text_gopher_repetition`/`corpus_gopher_by_source` are this gate's
-    dry-run, the same audit-is-the-gate discipline as v3's C4 stage.
-    """
-    from cloudpelican_lsd_spark.operators.textstats import (
-        gopher_repetition,
-        line_dedup,
-    )
-
-    ld = line_dedup(docs_lined, min_df=line_min_df).select(
-        "doc_id", F.col("clean_text").alias("text")
-    )
-    # co_partition=False: ld ends in line_dedup's EXPLICIT-count doc_id
-    # exchange (r8 — the previous implicit exchange AQE-coalesced to one
-    # partition inside the docs4 checkpoint job and serialized the panel
-    # + gate onto one core; see line_dedup), so the panel's aggregations
-    # reuse that partitioning — the panel's default upfront repartition
-    # would be a redundant second corpus exchange
-    pass_ids = (
-        gopher_repetition(ld, co_partition=False)
-        .where(F.col("pass_gopher") == 1)
-        .select("doc_id")
-    )
-    flags = c4_flag_exprs()
-    keep = ~flags[V3_GATE_RULES[0]]
-    for r in V3_GATE_RULES[1:]:
-        keep &= ~flags[r]
-    docs4 = (
-        ld.join(pass_ids, "doc_id", "left_semi")
-        .select(
-            "doc_id",
-            F.regexp_replace(F.col("text"), "\n", " ").alias("text"),
-        )
-        .where(keep)
-    )
-    # r8 (guide §3.3/§5): truncate lineage at the pipeline's widest
-    # fan-out point.  docs4 is consumed by _clean_stages AND (twice) by
-    # _decontaminate; every consumer's DataFrame op re-analyzes the full
-    # line-dedup + Gopher-panel + C4 tree, blowing the STATIC plan up to
-    # 150 exchanges / 120 parquet scans and costing ~7 s of driver-side
-    # analysis per invocation at sf0.1 (measured: build 7.2 s / plan
-    # 0.8 s / exec 8.2 s).  Materializing the compact gated corpus once
-    # cuts the query to half: 18.1 s -> 9.2 s session-median A/B,
-    # outputs bit-identical.  Same doctrine as connected components'
-    # per-round checkpoint: localCheckpoint here; swap to reliable
-    # checkpoint() on a real cluster (executor loss otherwise forces a
-    # full recompute, not an incorrect result).
-    docs4 = docs4.transform(materialize)
-    _, _, final = _clean_stages(
-        docs4, min_tokens, lang_num, lang_den, n, jac_num, jac_den, max_df
-    )
-    return _decontaminate(docs4, final, eval_mod, gram_n)
-
-
-def corpus_clean_v4_oracle(
-    base_cte: str,
-    base_table: str,
-    words_per_line: int = 10,
-    line_min_df: int = 3,
-    eval_mod: int = 97,
-    gram_n: int = 8,
-    min_tokens: int = 5,
-    lang_num: int = 1,
-    lang_den: int = 20,
-    n: int = 3,
-    jac_num: int = 4,
-    jac_den: int = 5,
-    max_df: int | None = None,
-) -> str:
-    """DuckDB twin: the v3 chain with a chr(10)-preserving docs2 twin
-    (`docs2l`) feeding textstats.gopher_fr_cte, whose pass ids
-    semi-filter the flattened docs2 before the C4 gate."""
-    from cloudpelican_lsd_spark.operators.textstats import (
-        gopher_fr_cte,
-        gopher_pass_sql,
-    )
-
-    fsql = c4_flag_sql()
-    keep = " AND ".join(f"NOT {fsql[r]}" for r in V3_GATE_RULES)
-    lines_cte = f"""{_docs2_cte(base_cte, base_table, words_per_line, line_min_df)},
-docs2l AS (
-  SELECT e.doc_id,
-         string_agg(e.line, chr(10) ORDER BY e.pos)
-           FILTER (WHERE f.df < {line_min_df}) AS text
-  FROM ld_ex e JOIN ld_f f USING (line)
-  GROUP BY e.doc_id
-  HAVING COUNT(*) FILTER (WHERE f.df < {line_min_df}) >= 1
-),
-{gopher_fr_cte("docs2l", "gp")},
-gp_pass AS (SELECT doc_id FROM gpfr WHERE {gopher_pass_sql()}),
-docs4 AS (
-  SELECT d.doc_id, d.text FROM docs2 d
-  WHERE d.doc_id IN (SELECT doc_id FROM gp_pass) AND {keep}
-)"""
-    chain = _clean_cte_chain(
-        lines_cte, "docs4", min_tokens, lang_num, lang_den, n,
-        jac_num, jac_den, max_df,
-    )
-    return f"""WITH {chain},
-{_decontaminate_sql("docs4", eval_mod, gram_n)}"""
 
 
 def eval_decontaminate_neardup(

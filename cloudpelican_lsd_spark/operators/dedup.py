@@ -28,8 +28,6 @@ md5 hex strings is the "random permutation" of classic MinHash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,14 +79,10 @@ def _spread(df: DataFrame, weight: float = 1.0) -> DataFrame:
     At 100 TB the scan already has thousands of splits, so the
     repartition is skipped entirely: it is a no-op (returns ``df``
     unchanged, no Exchange in the plan) when the input plan already
-    carries >= target partitions, and can be forced off with
-    ``CPL_SPREAD=off`` (e.g. when an upstream stage guarantees the
-    layout).  Shuffling the full raw corpus round-robin before shingling
-    would otherwise be the single largest exchange on the 100 TB read
-    path.
+    carries >= target partitions.  Shuffling the full raw corpus
+    round-robin before shingling would otherwise be the single largest
+    exchange on the 100 TB read path.
     """
-    if os.environ.get("CPL_SPREAD", "auto").lower() in ("off", "0", "false"):
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     est = _plan_size_bytes(df)

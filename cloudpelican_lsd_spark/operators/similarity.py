@@ -1044,9 +1044,9 @@ def semantic_prune(
     # identical and this consumer skips re-evaluating the quantization
     # join.  The assignment chain itself still feeds three consumers
     # (both self-join sides + this count); at real scale, materialize
-    # `nearest_centroid_assign` to parquet first — the same
-    # stage-materialization contract as corpus_clean_v2_staged — and the
-    # plan collapses to one assignment pass.
+    # `nearest_centroid_assign` first (checkpoint.materialize, durable
+    # once a checkpoint dir is set) and the plan collapses to one
+    # assignment pass.
     sizes = assigned.groupBy("clabel").agg(
         F.count(F.lit(1)).alias("n_members")
     )

@@ -1119,8 +1119,8 @@ def bm25_topk(
     (TakeOrderedAndProject).  Two evaluations of the projection (the
     corpus-stats pass and the scoring pass) is the floor for BM25
     without materializing doc stats; a production deployment persists
-    the `(doc_id, dl, tf…)` projection once per query workload — the
-    corpus_clean_v2_staged pattern.
+    the `(doc_id, dl, tf…)` projection once per query workload (e.g.
+    through checkpoint.materialize with a checkpoint dir configured).
     """
     # dedupe (a repeated term must not score twice — the oracle's
     # GROUP BY term counts it once) and reject the degenerate empty bag

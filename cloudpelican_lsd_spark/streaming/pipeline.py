@@ -549,7 +549,9 @@ class StreamingEngine:
 
     def expire_results(self, before_date: str) -> None:
         """Retention: drop date partitions older than `before_date` — the
-        168h table TTL analog (BigQuerySinkBolt.java:147-152)."""
+        168h table TTL analog (BigQuerySinkBolt.java:147-152) — and every
+        `epoch=` directory this empties, so the directories a `tail`
+        lists do not outgrow the retained data."""
         import shutil
 
         if not os.path.isdir(self.results_path):
@@ -562,9 +564,17 @@ class StreamingEngine:
                 epath = os.path.join(fpath, edir)
                 if not os.path.isdir(epath) or not edir.startswith("epoch="):
                     continue
-                for ddir in os.listdir(epath):
-                    if ddir.startswith("date=") and ddir[5:] < before_date:
-                        shutil.rmtree(os.path.join(epath, ddir))
+                expired = [
+                    d for d in os.listdir(epath)
+                    if d.startswith("date=") and d[5:] < before_date
+                ]
+                for ddir in expired:
+                    shutil.rmtree(os.path.join(epath, ddir))
+                if expired:
+                    try:
+                        os.rmdir(epath)
+                    except OSError:
+                        pass  # still holds a newer date (or a batch wrote one)
 
     def _require_quiesced(self, op: str) -> None:
         """The rewrite sweeps are read→write-tmp→swap over plain parquet —

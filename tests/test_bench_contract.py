@@ -1,7 +1,6 @@
-"""Bench harness contract: history-band re-measurement and the
-standalone-parseable stdout line (VERDICT r3 items 2+3 — the published
-artifact must carry no unre-measured single-run spikes and must parse
-from the driver's ~2000-byte tail capture)."""
+"""Bench harness contract: the regression diff against like-for-like
+history and the standalone-parseable stdout line (the published artifact
+must parse from the driver's ~2000-byte tail capture)."""
 
 from __future__ import annotations
 
@@ -10,127 +9,16 @@ import json
 import bench
 
 
-def test_history_medians_per_query_and_sf(tmp_path, monkeypatch):
-    hist = tmp_path / "hist.jsonl"
-    rows = [
-        {"sf": 0.1, "queries": {"a": 1.0, "b": 0.2}},
-        {"sf": 0.1, "queries": {"a": 3.0, "b": 0.4}},
-        {"sf": 0.1, "queries": {"a": 2.0}},
-        {"sf": 0.01, "queries": {"a": 99.0}},  # other sf must not leak in
-    ]
-    hist.write_text("".join(json.dumps(r) + "\n" for r in rows))
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(hist))
-    med = bench._history_medians(0.1)
-    assert med == {"a": 2.0, "b": 0.30000000000000004} or med == {
-        "a": 2.0,
-        "b": 0.3,
-    }
-    assert bench._history_medians(0.5) == {}
-
-
-def test_remeasure_to_band_flags_and_takes_min(tmp_path, monkeypatch):
-    """A query >=1.5x over its history median (and >=0.3s absolute) is
-    re-run in a fresh session and the published number is the min; an
-    in-band query is never re-run."""
-    hist = tmp_path / "hist.jsonl"
-    hist.write_text(
-        json.dumps({"sf": 0.1, "queries": {"hot": 1.0, "cool": 1.0}}) + "\n"
-    )
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(hist))
-
-    stopped = []
-
-    class FakeSpark:
-        def stop(self):
-            stopped.append(True)
-
-    reruns = []
-    monkeypatch.setattr(bench, "get_spark", lambda name: FakeSpark())
-    monkeypatch.setattr(
-        bench,
-        "run_one",
-        lambda spark, n, sf_dir: reruns.append(n) or 0.9,
-    )
-
-    timings = {"hot": 2.5, "cool": 1.2}
-    spark, remeasured, band_policy = bench._remeasure_to_band(
-        FakeSpark(), 0.1, "/dev/null", timings
-    )
-    assert remeasured == ["hot"]
-    assert reruns == ["hot"]  # cool stayed in band, never re-run
-    assert stopped  # the 170-query session was torn down for isolation
-    assert timings == {"hot": 0.9, "cool": 1.2}
-
-    # a genuine regression survives: isolated re-run still slow
-    hist.write_text(
-        json.dumps({"sf": 0.1, "queries": {"hot": 1.0}}) + "\n"
-    )
-    monkeypatch.setattr(bench, "run_one", lambda spark, n, sf_dir: 2.4)
-    timings = {"hot": 2.5}
-    _, remeasured, band_policy = bench._remeasure_to_band(
-        FakeSpark(), 0.1, "/dev/null", timings
-    )
-    assert remeasured == ["hot"] and timings["hot"] == 2.4
-
-
-def test_remeasure_threshold_tightens_for_low_variance():
-    """<3 samples or rel-stdev >=10%: default 1.5x.  >=3 steady samples:
-    1.4x — the band that catches a 1.46x drift on a historically flat
-    query (the r4 dedup_incremental_vs_index case)."""
-    assert bench._remeasure_threshold([1.0]) == 1.5
-    assert bench._remeasure_threshold([1.0, 1.05]) == 1.5  # only 2 samples
-    assert bench._remeasure_threshold([1.0, 1.02, 0.98]) == 1.4
-    # noisy history keeps the loose band
-    assert bench._remeasure_threshold([1.0, 1.6, 0.7]) == 1.5
-
-
-def test_remeasure_band_low_variance_flags_at_14x(tmp_path, monkeypatch):
-    """A historically flat query drifting 1.45x IS flagged; the same
-    drift on a 2-sample (unknown-variance) query is not."""
-    hist = tmp_path / "hist.jsonl"
-    rows = [
-        {"sf": 0.1, "queries": {"flat": 1.0, "young": 1.0}},
-        {"sf": 0.1, "queries": {"flat": 1.02}},
-        {"sf": 0.1, "queries": {"flat": 0.98, "young": 1.0}},
-    ]
-    hist.write_text("".join(json.dumps(r) + "\n" for r in rows))
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(hist))
-
-    class FakeSpark:
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(bench, "get_spark", lambda name: FakeSpark())
-    monkeypatch.setattr(bench, "run_one", lambda spark, n, sf_dir: 1.0)
-    timings = {"flat": 1.45, "young": 1.45}
-    _, remeasured, band_policy = bench._remeasure_to_band(
-        FakeSpark(), 0.1, "/dev/null", timings
-    )
-    assert remeasured == ["flat"]
-    assert timings == {"flat": 1.0, "young": 1.45}
-
-
-def test_remeasure_noop_without_history(tmp_path, monkeypatch):
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(tmp_path / "none.jsonl"))
-    sentinel = object()
-    timings = {"a": 100.0}
-    spark, remeasured, band_policy = bench._remeasure_to_band(
-        sentinel, 0.1, "/dev/null", timings
-    )
-    assert spark is sentinel and remeasured == [] and timings == {"a": 100.0}
-
-
 def test_stdout_line_fits_and_parses():
     """Even with hundreds of queries the contract line stays under the
     driver's tail-capture budget, parses standalone, and keeps the
     SLOWEST queries plus all summary keys."""
     timings = {f"some_longish_query_name_{i:03d}": i * 0.01 for i in range(300)}
-    line = bench._fit_stdout_line(timings, 5, ["q1"], 0.1, 123.4)
+    line = bench._fit_stdout_line(timings, 5, 0.1, 123.4)
     assert len(line.encode()) <= 1900
     obj = json.loads(line)
     assert obj["value"] == 123.4 and obj["sf"] == 0.1
     assert obj["metric"] == "headline_queries_total_runtime"
-    assert obj["remeasured"] == ["q1"]
     kept = set(obj["queries"])
     assert kept  # something survived
     assert obj["queries_omitted"] == 300 - len(kept) + 5
@@ -141,24 +29,42 @@ def test_stdout_line_fits_and_parses():
 
 def test_stdout_line_small_map_keeps_everything():
     timings = {"a": 1.0, "b": 2.0}
-    obj = json.loads(bench._fit_stdout_line(timings, 0, [], 0.01, 3.0))
+    obj = json.loads(bench._fit_stdout_line(timings, 0, 0.01, 3.0))
     assert obj["queries"] == {"a": 1.0, "b": 2.0}
     assert obj["queries_omitted"] == 0
-    assert obj["n_remeasured"] == 0
 
 
-def test_stdout_line_mass_remeasure_still_fits():
-    """An environment change can flag nearly every query for re-measure;
-    the remeasured list itself must then shrink to keep the line inside
-    the tail-capture budget, with the true count preserved."""
-    names = [f"some_longish_query_name_{i:03d}" for i in range(200)]
-    timings = {n: i * 0.01 for i, n in enumerate(names)}
-    line = bench._fit_stdout_line(timings, 0, list(names), 0.1, 9.9)
-    assert len(line.encode()) <= 1900
-    obj = json.loads(line)
-    assert obj["n_remeasured"] == 200
-    assert len(obj["remeasured"]) < 200  # truncated to fit
-    assert obj["value"] == 9.9  # summary keys always survive
+def test_history_diff_uses_last_entry_of_the_same_kind(
+    tmp_path, monkeypatch, capsys
+):
+    """The regression diff compares against the newest history entry with
+    the same sf, core count and subset: newer entries of another sf,
+    another core count, a subset run or an entry recording no core count
+    never stand in as the baseline."""
+    hist = tmp_path / "hist.jsonl"
+    rows = [
+        {"sf": 0.1, "cpus": "4", "queries": {"a": 1.0}},
+        {"sf": 0.1, "cpus": "4", "queries": {"a": 2.0}},  # last match
+        {"sf": 0.1, "cpus": "32", "queries": {"a": 0.5}},
+        {"sf": 0.1, "cpus": "4", "subset": "heavy20", "queries": {"a": 0.4}},
+        {"sf": 1.0, "cpus": "4", "queries": {"a": 0.5}},
+        {"sf": 0.1, "queries": {"a": 0.5}},
+    ]
+    hist.write_text("".join(json.dumps(r) + "\n" for r in rows))
+    monkeypatch.setattr(bench, "HISTORY_PATH", str(hist))
+    def kept(cpus, subset):
+        return [p["queries"]["a"] for p in bench._load_history(0.1, cpus, subset)]
+
+    assert kept("4", "") == [1.0, 2.0]
+    assert kept("4", "heavy20") == [0.4]
+
+    # 2.5 s is in band against the last matching entry (2.0 s) but would
+    # be a regression against any of the newer non-matching ones
+    bench._compare_with_last(0.1, "4", "", {"a": 2.5})
+    err = capsys.readouterr().err
+    assert "0 regressed" in err and "REGRESSED" not in err
+    bench._compare_with_last(0.1, "4", "", {"a": 3.5})
+    assert "REGRESSED a: 2.000s -> 3.500s" in capsys.readouterr().err
 
 
 def test_headline_names_fail_loud_on_unknown():
@@ -232,66 +138,3 @@ def test_bench_parse_sf_loud_on_patternless_dir():
         bench.parse_sf("/data/mylake")
 
 
-def test_band_policy_recorded_per_remeasured_query(tmp_path, monkeypatch):
-    """Every isolated re-measure records which threshold fired, against
-    what median, and both measurements — auditable from the artifact
-    alone (VERDICT r5 item 8)."""
-    hist = tmp_path / "h.jsonl"
-    rows = [
-        {"sf": 0.1, "queries": {"q1": 1.0, "q2": 1.0}} for _ in range(4)
-    ]
-    hist.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    monkeypatch.setattr(bench, "HISTORY_PATH", str(hist))
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: _FakeSpark())
-    monkeypatch.setattr(bench, "run_one", lambda s, n, d: 1.0)
-    timings = {"q1": 1.45, "q2": 1.0}  # q1 over the 1.4x low-variance band
-
-    class _FakeSpark:
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: _FakeSpark())
-    _, remeasured, policy = bench._remeasure_to_band(
-        _FakeSpark(), 0.1, "d", timings
-    )
-    assert remeasured == ["q1"]
-    assert policy["q1"]["threshold"] == 1.4
-    assert policy["q1"]["median"] == 1.0
-    assert policy["q1"]["session"] == 1.45
-    assert policy["q1"]["isolated"] == 1.0
-    assert timings["q1"] == 1.0  # min published
-    # the stdout line carries it, trimmed with the remeasured list
-    line = bench._fit_stdout_line(
-        timings, 0, remeasured, 0.1, 2.45, band_policy=policy
-    )
-    obj = json.loads(line)
-    assert obj["band_policy"]["q1"]["threshold"] == 1.4
-
-
-def test_stdout_line_busy_remeasure_keeps_slow_queries_inline():
-    """A busy re-measure round (16 flagged, ~1.5 KB of band_policy) must
-    NOT evict the slow-queries map from the captured line — the r6 bench
-    shipped queries:{} / queries_omitted:227 because the fit loop
-    trimmed queries before the band audit.  The map keeps (at least) its
-    20-slowest floor; band_policy trims first and survives untrimmed in
-    BENCH_LOCAL.json."""
-    import json
-
-    import bench
-
-    timings = {f"query_name_{i:03d}": i / 100 for i in range(227)}
-    remeasured = [f"query_name_{i:03d}" for i in range(16)]
-    policy = {
-        n: {"threshold": 1.5, "median": 1.0, "session": 1.9, "isolated": 1.0}
-        for n in remeasured
-    }
-    line = bench._fit_stdout_line(
-        timings, 0, remeasured, 0.1, 65.0, band_policy=policy
-    )
-    assert len(line.encode()) <= 1900
-    obj = json.loads(line)
-    assert len(obj["queries"]) >= 20
-    # the kept entries are the SLOWEST ones
-    assert "query_name_226" in obj["queries"]
-    assert obj["queries_omitted"] == 227 - len(obj["queries"])
-    assert obj["n_remeasured"] == 16  # full count still reported

@@ -1,33 +1,73 @@
-"""CPL_CHECKPOINT tier switch (r9, VERDICT item 6): every lineage
-truncation in the engine goes through ``checkpoint.materialize``, and the
-``reliable`` tier must produce byte-identical results on a toy checkpoint
-directory — the tier changes WHERE the materialized bytes live, never
-WHAT they are."""
+"""Lineage-truncation tier: every truncation in the engine goes through
+``checkpoint.materialize``, which takes the reliable ``checkpoint()``
+tier when the session has a checkpoint directory and ``localCheckpoint``
+otherwise.  The tier changes WHERE the materialized bytes live, never
+WHAT they are.
+
+A SparkContext's checkpoint directory cannot be unset, so the
+reliable-tier cases run in a child process with its own session: set on
+the shared test session, the directory would silently switch every later
+test in the run to the reliable tier."""
 
 from __future__ import annotations
 
 import os
+import pickle
+import subprocess
+import sys
 
 import pytest
 
 from cloudpelican_lsd_spark.checkpoint import materialize
 from cloudpelican_lsd_spark.sources.tables import load_table
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-@pytest.fixture
-def reliable_tier(tmp_path, spark):
-    os.environ["CPL_CHECKPOINT"] = "reliable"
-    os.environ["CPL_CHECKPOINT_DIR"] = str(tmp_path / "ckpt")
-    # a prior test/session may have pinned a checkpoint dir; force ours
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    yield str(tmp_path / "ckpt")
-    os.environ.pop("CPL_CHECKPOINT", None)
-    os.environ.pop("CPL_CHECKPOINT_DIR", None)
+#: the reliable-tier run: materialize the documents and run connected
+#: components (whose rounds call materialize every iteration — the
+#: hottest truncation path) under a configured checkpoint dir
+_RELIABLE_CHILD = """
+import os, pickle, sys
+from cloudpelican_lsd_spark.checkpoint import materialize
+from cloudpelican_lsd_spark.operators import dedup as D
+from cloudpelican_lsd_spark.session import get_spark
+from cloudpelican_lsd_spark.sources.tables import load_table
+
+sf_dir, ckpt, out = sys.argv[1:4]
+spark = get_spark("checkpoint-tier-reliable", cpus=2)
+spark.sparkContext.setCheckpointDir(ckpt)
+docs = load_table(spark, "documents", sf_dir)
+pairs = D.lsh_candidate_pairs(docs, num_hashes=12, rows_per_band=3, n=3)
+res = {"rows": sorted(map(tuple, materialize(docs).collect()))}
+res["files"] = [f for _dp, _dn, fn in os.walk(ckpt) for f in fn]
+res["cc"] = sorted(map(tuple, D.connected_components(pairs).collect()))
+with open(out, "wb") as fh:
+    pickle.dump(res, fh)
+spark.stop()
+"""
+
+
+@pytest.fixture(scope="module")
+def reliable_run(tmp_path_factory, sf_dir):
+    """Run the reliable tier once in a child session; returns what it
+    collected and the files its checkpoint dir held after the first
+    materialize."""
+    tmp = tmp_path_factory.mktemp("reliable_tier")
+    ckpt, out = str(tmp / "ckpt"), str(tmp / "out.pkl")
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_CHILD, sf_dir, ckpt, out],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    with open(out, "rb") as fh:
+        return pickle.load(fh)
 
 
 def test_materialize_local_default(spark, sf_dir):
-    """Default tier is localCheckpoint: no checkpoint files written, the
-    plan leaf is an ExistingRDD, rows unchanged."""
+    """No checkpoint dir on the session: localCheckpoint, the plan leaf is
+    an ExistingRDD, rows unchanged."""
+    assert spark.sparkContext.getCheckpointDir() is None
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
     out = materialize(docs)
     assert sorted(r.doc_id for r in out.collect()) == sorted(
@@ -36,32 +76,21 @@ def test_materialize_local_default(spark, sf_dir):
     assert "ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_materialize_reliable_identical(spark, sf_dir, reliable_tier):
-    """Reliable tier: rows byte-identical to the lazy plan, and the toy
+def test_materialize_reliable_identical(spark, sf_dir, reliable_run):
+    """Checkpoint dir set: rows byte-identical to the lazy plan, and the
     checkpoint dir actually holds the materialized RDD files."""
     docs = load_table(spark, "documents", sf_dir)
-    base = sorted(map(tuple, docs.collect()))
-    out = materialize(docs)
-    assert sorted(map(tuple, out.collect())) == base
-    files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(reliable_tier)
-        for f in fn
-    ]
-    assert files, "reliable tier wrote nothing to the checkpoint dir"
+    assert reliable_run["rows"] == sorted(map(tuple, docs.collect()))
+    assert reliable_run["files"], "reliable tier wrote nothing to the checkpoint dir"
 
 
-def test_reliable_tier_through_an_operator(spark, sf_dir, reliable_tier):
+def test_reliable_tier_through_an_operator(spark, sf_dir, reliable_run):
     """End-to-end through a checkpointing operator: connected-components
-    clusters are identical under both tiers (the CC rounds call
-    materialize every iteration — the hottest truncation path)."""
+    clusters are identical under both tiers."""
     from cloudpelican_lsd_spark.operators import dedup as D
 
+    assert spark.sparkContext.getCheckpointDir() is None  # local tier here
     docs = load_table(spark, "documents", sf_dir)
     pairs = D.lsh_candidate_pairs(docs, num_hashes=12, rows_per_band=3, n=3)
-    reliable = sorted(
-        map(tuple, D.connected_components(pairs).collect())
-    )
-    os.environ.pop("CPL_CHECKPOINT", None)  # back to local tier
     local = sorted(map(tuple, D.connected_components(pairs).collect()))
-    assert reliable == local
+    assert reliable_run["cc"] == local

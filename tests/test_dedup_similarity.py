@@ -412,10 +412,7 @@ def test_text_len_correlation_bounds(spark, sf_dir):
 
 def test_spread_is_gated(spark, sf_dir):
     """SCALING.md contract: `_spread` adds NO Exchange when the input is
-    already wide enough (the multi-split-scan case at 100 TB), and
-    CPL_SPREAD=off disables it entirely."""
-    import os
-
+    already wide enough (the multi-split-scan case at 100 TB)."""
     d = _docs(spark, sf_dir)
     target = spark.sparkContext.defaultParallelism
     # pre-partitioned input (>= defaultParallelism): must pass through
@@ -440,12 +437,6 @@ def test_spread_is_gated(spark, sf_dir):
     assert out2.rdd.getNumPartitions() == want
     boosted = dedup_ops._spread(narrow, weight=1e9)  # absurd weight -> cap
     assert boosted.rdd.getNumPartitions() == target
-    # config kill-switch
-    os.environ["CPL_SPREAD"] = "off"
-    try:
-        assert dedup_ops._spread(narrow) is narrow
-    finally:
-        del os.environ["CPL_SPREAD"]
 
 
 def test_cdc_overlap_catches_partial_copies(spark):
@@ -651,30 +642,6 @@ def test_corpus_clean_v3_is_gated_v2(spark, sf_dir):
     assert len(gained) <= len(v2 - v3)
     for d in gained:
         assert d not in failing  # gained docs still pass the gate
-
-
-def test_corpus_clean_v2_staged_equivalence(spark, sf_dir, tmp_path):
-    """The stage-materialized runner produces EXACTLY the fused
-    capstone's output, and the stage parquet artifacts exist (per-stage
-    restartability)."""
-    import os
-
-    from cloudpelican_lsd_spark.operators import corpus as C
-    from cloudpelican_lsd_spark.registry import QUERIES, _lined_corpus
-
-    fused = {
-        (r.doc_id, r.n_tokens)
-        for r in QUERIES["corpus_clean_v2"](spark, sf_dir).collect()
-    }
-    staged = {
-        (r.doc_id, r.n_tokens)
-        for r in C.corpus_clean_v2_staged(
-            spark, _lined_corpus(spark, sf_dir), str(tmp_path)
-        ).collect()
-    }
-    assert staged == fused
-    assert os.path.isdir(tmp_path / "stage0_docs2")
-    assert os.path.isdir(tmp_path / "stage1_final")
 
 
 def test_substring_span_stats_closed_form(spark, sf_dir):

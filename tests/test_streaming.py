@@ -1846,6 +1846,43 @@ def test_results_column_order_is_one_contract(spark, tmp_path):
     assert eng.results(fid).columns == order
 
 
+def test_expire_results_removes_emptied_epoch_directories(spark, tmp_path):
+    """Retention leaves no emptied `epoch=` directory behind (each one is
+    listed by every later tail poll); an epoch that still holds a newer
+    date keeps its directory and its rows."""
+    cat = FilterCatalog()
+    fid = cat.create("errors", "error").id
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_expire"))
+    for epoch, days in enumerate([("01",), ("01", "03")]):
+        raw = spark.createDataFrame(
+            [
+                (f"2024-02-{d}T10:00:0{i}.000+00:00 h app: error n={i}",)
+                for d in days
+                for i in range(3)
+            ],
+            "_raw STRING",
+        )
+        eng.process_batch(sp.parse_stream(raw), epoch_id=epoch)
+
+    def epoch_dirs():
+        return sorted(
+            os.path.basename(dp)
+            for dp, _dn, _fn in os.walk(eng.results_path)
+            if os.path.basename(dp).startswith("epoch=")
+        )
+
+    assert epoch_dirs() == ["epoch=0", "epoch=1"]
+    eng.expire_results("2024-02-02")
+    # epoch 0 held only 2024-02-01; epoch 1 keeps its 2024-02-03 rows
+    assert epoch_dirs() == ["epoch=1"]
+    assert {str(r.date) for r in eng.results(fid).collect()} == {"2024-02-03"}
+    assert eng.tail(fid, 10).count() == 3
+    eng.expire_results("2099-01-01")
+    assert epoch_dirs() == []
+    assert eng.results().count() == 0
+    assert eng.results(fid).count() == 0
+
+
 def test_declared_store_schemas_match_written_files(spark, tmp_path):
     """The reads name each store's schema instead of inferring it; the
     declared schema must stay what the batch hook writes."""
