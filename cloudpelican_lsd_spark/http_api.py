@@ -11,10 +11,8 @@ container and on any executorless driver node:
     GET    /filter                    list filters     (:673)
     DELETE /filter/{id}               delete filter    (:795)
     GET    /filter/{id}/result?result_offset=N         (:450)
-    PUT    /filter/{id}/result        ingest lines     (:611, gzip ok)
     GET    /filter/{id}/stats                          (:515)
     POST   /filter/{id}/outlier?timestamp=&score=      (:546)
-    PUT    /stats/filters             merge counters   (:684, gzip ok)
     DELETE /admin/truncate/outliers   admin            (:382)
     DELETE /admin/truncate/stats      admin            (:368)
     PUT    /admin/config?key=&value=  admin            (:353)
@@ -33,112 +31,69 @@ Go field names — here the listing uses lower-case keys; the BigQuery
 passthrough executes on Spark via ``engine.search`` (legacy-dialect shim
 included) instead of dialing BigQuery.
 
-State model matches the reference supervisor: results and stats arrive
-over PUT from the stream processor (the Storm topology there, the
-Structured Streaming job here) and live in bounded in-memory stores —
-10k-message ring buffer per filter (max-msg-memory, supervisor.go:52),
-10k-line ingest batch cap (max-msg-batch, :53).  Heavy/batch questions go
-through /bigquery/query → Spark, so the HTTP process itself never holds
-unbounded state.
+State model: the streaming query's sinks are the one store.
+``StreamingEngine.process_batch`` writes the results and stats tables (the
+reference's topology PUTs into supervisor memory instead, :611, :684;
+those ingest routes have no counterpart here) and the result, stats and
+query routes read them, so a line shows over HTTP once its micro-batch
+commits.  The result cursor is ``row_id + 1``; a page holds at most
+``stream.max_msgs_per_filter`` lines (supervisor.go:52) and the rest come
+back on the next poll.  The only state held here is the newest
+``MAX_OUTLIERS`` outlier records.
 """
 
 from __future__ import annotations
 
 import base64
-import gzip
 import hmac
-import io
 import json
+import sys
 import threading
-import zlib
 from collections import OrderedDict, deque
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from cloudpelican_lsd_spark.engine import CloudPelicanEngine, slack_command
+from cloudpelican_lsd_spark.operators.tail import cursor_read
+from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
+
+#: outlier records kept — the oldest roll off (the reference's 10k
+#: in-memory cap, supervisor.go:52)
+MAX_OUTLIERS = 10000
 
 
 class _BodyError(Exception):
-    """Malformed request body (bad Content-Length, corrupt/oversized gzip);
-    answered with the jresp error envelope, never a dropped connection."""
-
-
-class SupervisorState:
-    """Bounded in-memory stores behind the REST surface (thread-safe)."""
-
-    #: newest stats buckets kept per (filter, metric) — 14 days of
-    #: minutes; older keys are evicted so a long-lived supervisor's
-    #: memory stays bounded (the table TTL analog of the 10k result ring)
-    MAX_STATS_BUCKETS = 20160
-
-    def __init__(self, max_msg_memory: int = 10000) -> None:
-        self.lock = threading.Lock()
-        self.max_msg_memory = max_msg_memory
-        #: filter_id -> deque[(monotonic id, raw line)] — 10k FIFO ring
-        self.results: dict[str, deque] = {}
-        self._next_id = 0
-        #: filter_id -> metric -> bucket -> count (bucket set capped)
-        self.stats: dict[str, dict[int, dict[int, int]]] = {}
-        #: bounded like the result ring — oldest alerts roll off
-        self.outliers: deque = deque(maxlen=max_msg_memory)
-
-    def add_results(self, filter_id: str, lines: list[str]) -> bool:
-        with self.lock:
-            buf = self.results.setdefault(
-                filter_id, deque(maxlen=self.max_msg_memory)
-            )
-            for line in lines:
-                self._next_id += 1
-                buf.append((self._next_id, line))
-        return True
-
-    def read_results(self, filter_id: str, offset: int) -> tuple[int, list[str]]:
-        with self.lock:
-            buf = list(self.results.get(filter_id, ()))
-        lines = [line for rid, line in buf if rid > offset]
-        # drained buffer -> result_offset 0, EXACTLY like the reference
-        # (supervisor.go:492-508 returns resultsMaxOffset=0 when nothing
-        # is newer); a polling client must keep ITS OWN high-water mark,
-        # the reference CLI does (supervisorcon.go keeps the max it saw)
-        max_off = max((rid for rid, _ in buf if rid > offset), default=0)
-        return max_off, lines
-
-    def add_stats(self, filter_id: str, metric: int, bucket: int, count: int) -> bool:
-        with self.lock:
-            m = self.stats.setdefault(filter_id, {}).setdefault(metric, {})
-            m[bucket] = m.get(bucket, 0) + count
-            # bound the bucket set: evict the OLDEST buckets past the cap
-            # (matches the reference's 7d stats purge; without this a
-            # long-lived supervisor leaks one dict entry per new minute
-            # forever)
-            if len(m) > self.MAX_STATS_BUCKETS:
-                for b in sorted(m)[: len(m) - self.MAX_STATS_BUCKETS]:
-                    del m[b]
-        return True
+    """Malformed request body (bad Content-Length, oversized); answered
+    with the jresp error envelope, never a dropped connection."""
 
 
 class SupervisorHTTP:
-    """The supervisor server: routes + auth around a CloudPelicanEngine."""
+    """The supervisor server: routes + auth around a CloudPelicanEngine
+    and the StreamingEngine whose tables answer tail, stats and search."""
 
     def __init__(
         self,
         engine: CloudPelicanEngine,
+        stream: StreamingEngine,
         username: str = "cloudpelican",
         password: str = "cloudpelican",
         admin_password: str | None = None,
         slack_token: str | None = None,
-        max_msg_memory: int = 10000,
-        max_msg_batch: int = 10000,
         max_body_bytes: int = 32 * 1024 * 1024,
     ) -> None:
+        if stream.catalog is not engine.catalog:
+            # a filter created with POST /filter must be one the stream
+            # matches, or its result route stays empty forever
+            raise ValueError("SupervisorHTTP: stream.catalog must be engine.catalog")
         self.engine = engine
+        self.stream = stream
         self.username = username
         self.password = password
         self.admin_password = admin_password
         self.slack_token = slack_token
-        self.max_msg_batch = max_msg_batch
         self.max_body_bytes = max_body_bytes
-        self.state = SupervisorState(max_msg_memory)
+        self.lock = threading.Lock()
+        self.outliers: deque = deque(maxlen=MAX_OUTLIERS)
         self._server: ThreadingHTTPServer | None = None
         self._thread: threading.Thread | None = None
 
@@ -246,15 +201,11 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
         )
 
     def _body(self) -> bytes:
-        """Read (and maybe gunzip) the request body.
+        """Read the request body, at most ``max_body_bytes`` of it.
 
-        Hardened per round-2 review: a malformed Content-Length or a
-        corrupt gzip stream returns the reference's jresp error envelope
-        (supervisor.go answers 'Invalid GZIP' via jresp) instead of
-        aborting the connection, and decompression is chunked with a hard
-        output cap so a gzip bomb cannot buffer unbounded memory before
-        the line-batch cap is applied (the reference's streaming scanner
-        stops at maxMsgBatch lines)."""
+        A malformed Content-Length or an oversized body returns the
+        reference's jresp error envelope instead of aborting the
+        connection."""
         try:
             n = int(self.headers.get("Content-Length") or 0)
         except ValueError as ex:
@@ -266,21 +217,6 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
         raw = self.rfile.read(min(n, self.sup.max_body_bytes + 1))
         if len(raw) > self.sup.max_body_bytes:
             raise _BodyError("Request body too large")
-        if self.headers.get("Content-Encoding") == "gzip":
-            gz = gzip.GzipFile(fileobj=io.BytesIO(raw))
-            chunks, total = [], 0
-            try:
-                while True:
-                    chunk = gz.read(65536)
-                    if not chunk:
-                        break
-                    total += len(chunk)
-                    if total > self.sup.max_body_bytes:
-                        raise _BodyError("Invalid GZIP: decompressed too large")
-                    chunks.append(chunk)
-            except (OSError, EOFError, zlib.error) as ex:
-                raise _BodyError(f"Invalid GZIP: {ex}") from ex
-            raw = b"".join(chunks)
         return raw
 
     # -- routing ------------------------------------------------------------
@@ -312,26 +248,26 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
             fid, leaf = parts[1], parts[2]
             if leaf == "result" and method == "GET":
                 return self._get_results(fid, q)
-            if leaf == "result" and method == "PUT":
-                return self._put_results(fid)
             if leaf == "stats" and method == "GET":
                 return self._get_stats(fid)
             if leaf == "outlier" and method == "POST":
                 return self._post_outlier(fid, q)
-        if method == "PUT" and parts == ["stats", "filters"]:
-            return self._put_stats()
         if parts[:2] == ["admin", "truncate"] and method == "DELETE":
             if not self._admin_auth(q):
                 return self._send("authorization failed", 401, "text/plain")
-            with self.sup.state.lock:
-                if parts[2:] == ["outliers"]:
-                    n = len(self.sup.state.outliers)
-                    self.sup.state.outliers.clear()
-                    return self._jresp_ok(truncated=n)
-                if parts[2:] == ["stats"]:
-                    n = sum(len(m) for m in self.sup.state.stats.values())
-                    self.sup.state.stats.clear()
-                    return self._jresp_ok(truncated=n)
+            if parts[2:] == ["outliers"]:
+                with self.sup.lock:
+                    n = len(self.sup.outliers)
+                    self.sup.outliers.clear()
+                return self._jresp_ok(truncated=n)
+            if parts[2:] == ["stats"]:
+                # drop every bucket; the rewrite refuses under a live stream
+                n = self.sup.stream.stats().count()
+                try:
+                    self.sup.stream.expire_stats(sys.maxsize)
+                except RuntimeError as ex:
+                    return self._jresp_err(str(ex))
+                return self._jresp_ok(truncated=n)
         if method == "PUT" and parts == ["admin", "config"]:
             if not self._admin_auth(q):
                 return self._send("authorization failed", 401, "text/plain")
@@ -389,26 +325,24 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
             offset = int(off_str)
         except ValueError as ex:
             return self._jresp_err(f"Please provide a valid result offset: {ex}")
-        max_off, lines = self.sup.state.read_results(fid, offset)
-        return self._jresp_ok(result_offset=max_off, results=lines)
-
-    def _put_results(self, fid: str):
-        if self.sup.find_filter(fid) is None:
-            return self._jresp_err(f"Filter {fid} not found")
-        text = self._body().decode("utf-8", errors="replace")
-        lines = text.splitlines()[: self.sup.max_msg_batch]  # max-msg-batch cap
-        ack = self.sup.state.add_results(fid, lines)
-        return self._jresp_ok(ack=ack, lines=len(lines))
+        # the cursor is row_id + 1: row_id starts at 0, and offset 0 must
+        # mean "from the start" as in the reference
+        stream = self.sup.stream
+        page = cursor_read(stream.results(fid), offset - 1,
+                           stream.max_msgs_per_filter, id_col="row_id")
+        rows = page.select("row_id", "_raw").collect()
+        # nothing newer -> result_offset 0, EXACTLY like the reference
+        # (supervisor.go:492-508); a polling client keeps its own
+        # high-water mark, as the reference CLI does
+        cursor = rows[-1].row_id + 1 if rows else 0
+        return self._jresp_ok(result_offset=cursor, results=[r["_raw"] for r in rows])
 
     def _get_stats(self, fid: str):
         if self.sup.find_filter(fid) is None:
             return self._jresp_err(f"Filter {fid} not found")
-        with self.sup.state.lock:
-            metrics = self.sup.state.stats.get(fid, {})
-            m = {
-                str(metric): {str(b): v for b, v in buckets.items()}
-                for metric, buckets in metrics.items()
-            }
+        m: dict[str, dict[str, int]] = {}
+        for r in sorted(self.sup.stream.stats(fid).collect()):
+            m.setdefault(str(r.metric), {})[str(r.bucket)] = r.cnt
         return self._jresp_ok(stats=m)
 
     def _post_outlier(self, fid: str, q):
@@ -428,46 +362,11 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
             score_f = float(score)
         except ValueError as ex:
             return self._jresp_err(f"Please provide a valid score: {ex}")
-        with self.sup.state.lock:
-            self.sup.state.outliers.append(
+        with self.sup.lock:
+            self.sup.outliers.append(
                 {"filter_id": fid, "timestamp": ts_i, "score": score_f}
             )
         return self._jresp_ok(stored=True)
-
-    def _put_stats(self):
-        try:
-            data = json.loads(self._body().decode("utf-8"))
-            if not isinstance(data, dict):
-                # a real raise, not assert: `python -O` strips asserts
-                # and a JSON array body would then crash below as a 500
-                # instead of this clean 4xx
-                raise ValueError("stats body must be a JSON object")
-        except Exception as ex:
-            return self._jresp_err(f"Invalid request JSON: {ex}")
-        updates = 0
-        # keys are "f=<id>_m=<metric>_b=<bucket>" (supervisor.go:733-771);
-        # malformed keys AND malformed count values are skipped, not
-        # errors — the reference logs-and-continues per entry, and a
-        # half-processed batch must still ack the valid rows
-        for k, count in data.items():
-            try:
-                count_i = int(count)
-            except (TypeError, ValueError):
-                continue
-            fid, metric, bucket = "", 0, 0
-            for pair in str(k).split("_"):
-                kk, _, vv = pair.partition("=")
-                if kk == "f":
-                    fid = vv
-                elif kk == "m" and vv.lstrip("-").isdigit():
-                    metric = int(vv)
-                elif kk == "b" and vv.lstrip("-").isdigit():
-                    bucket = int(vv)
-            if not fid or self.sup.find_filter(fid) is None:
-                continue
-            if self.sup.state.add_stats(fid, metric, bucket, count_i):
-                updates += 1
-        return self._jresp_ok(updates=updates)
 
     def _post_query(self):
         """BigQuery passthrough: SQL in the body, TSV out (NOT JSON,
@@ -476,12 +375,15 @@ class _SupervisorHandler(BaseHTTPRequestHandler):
 
         # errors="replace": a stray invalid byte must produce the error
         # envelope (or a parse error), never an uncaught UnicodeDecodeError
-        # dropping the connection (same hardening as _put_results)
+        # dropping the connection
         sql = self._body().decode("utf-8", errors="replace").strip()
         if not sql:
             return self._send("empty query", 400, "text/plain")
         try:
-            body = df_to_tsv(self.sup.engine.search(sql), max_rows=10000)
+            # the stream's results resolve filter names and the
+            # reference's per-filter day-table names
+            found = self.sup.engine.search(sql, results=self.sup.stream.results())
+            body = df_to_tsv(found, max_rows=10000)
         except Exception as ex:
             return self._send(f"error: {ex}", 400, "text/plain")
         return self._send(body, 200, "text/tab-separated-values")

@@ -170,6 +170,11 @@ def get_spark(app_name: str = "cloudpelican-lsd-spark", cpus: int | None = None)
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # reliable checkpoints (checkpoint.materialize under a checkpoint
+        # dir) are deleted once their RDD is garbage-collected; left off,
+        # every materialize leaves its files behind for good.  A context
+        # conf: it cannot join RUNTIME_CONFS, which are set at runtime.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

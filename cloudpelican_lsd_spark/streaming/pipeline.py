@@ -43,6 +43,7 @@ from cloudpelican_lsd_spark.functions.parse import (
     normalize_lines,
 )
 from cloudpelican_lsd_spark.operators.fanout import match_filters_compiled
+from cloudpelican_lsd_spark.operators.tail import tail_last_n
 from cloudpelican_lsd_spark.operators.stats import bucket_col, METRIC_MATCH, METRIC_ERROR
 from cloudpelican_lsd_spark.functions.parse import is_likely_error
 
@@ -182,7 +183,9 @@ class StreamingEngine:
             )
         self.stats_path = os.path.join(base_dir, "stats")
         self.checkpoint = os.path.join(base_dir, "checkpoint")
-        #: reference caps the tail buffer at 10k msgs/filter (supervisor.go:52)
+        #: the reference's 10k msgs/filter (supervisor.go:52): the rows per
+        #: filter compact_results keeps, and the page size of the
+        #: supervisor's result route
         self.max_msgs_per_filter = max_msgs_per_filter
 
     # -- batch hook ---------------------------------------------------------
@@ -392,9 +395,7 @@ class StreamingEngine:
 
     def tail(self, filter_id: str, n: int = 100) -> DataFrame:
         """Live tail: last n rows for a filter (cloudpelican-lsd.go:630-636)."""
-        res = self.results(filter_id)
-        last = res.orderBy(F.col("ts_epoch").desc(), F.col("row_id").desc()).limit(n)
-        return last.orderBy(F.col("ts_epoch").asc(), F.col("row_id").asc())
+        return tail_last_n(self.results(filter_id), n, tiebreak_col="row_id")
 
     #: stats-table schema (empty reads before the first batch / after purge)
     STATS_SCHEMA = "filter_id STRING, bucket BIGINT, metric INT, cnt BIGINT, epoch INT"
