@@ -15,7 +15,7 @@ cheap branch per filter without leaving the single join plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: join predicate with per-filter fast path:
@@ -53,32 +53,20 @@ def match_filters(logs: DataFrame, filters: DataFrame) -> DataFrame:
     )
 
 
-def match_filters_compiled(logs: DataFrame, filters: list) -> DataFrame:
-    """Plan-time-compiled fan-out: the fast path when the filter set is
-    known at plan construction (it always is — filters live in the catalog,
-    exactly like MatchBolt's compiled set, MatchBolt.java:159-165).
+def filter_matches(filters: list) -> Column:
+    """Per-row array of `struct(filter_id, filter_name)`, one element per
+    filter whose predicate matches `_raw`, in catalog order.
 
-    Builds ONE per-row expression: an array of `struct(filter_id,
-    filter_name)` for every filter whose predicate matches, then a single
-    explode.  Every regex is a *literal* → java.util.regex compiles once
-    per task instead of once per row (the column-pattern RLIKE in the join
-    variant recompiles per row — measured 3-4x slower); plain words stay
-    `contains`.  One scan, whole-stage codegen, zero shuffle, zero join —
-    strictly better than the broadcast join at any scale.
+    Every regex is a *literal* → java.util.regex compiles once per task
+    instead of once per row (the column-pattern RLIKE in the join variant
+    recompiles per row — measured 3-4x slower); plain words stay
+    `contains`.  Filter names and regexes enter as literals, never as SQL
+    text.  An empty filter set is an empty array of the same type (a
+    zero-branch `F.array()` is VOID-typed and fails analysis).
 
     ``filters``: list of catalog.Filter.
     """
     from cloudpelican_lsd_spark.catalog import compile_fast_path
-
-    if not filters:
-        # F.array() of zero branches is VOID-typed and struct-field
-        # extraction fails analysis; an empty filter set just matches
-        # nothing, with the same output schema
-        return (
-            logs.withColumn("filter_id", F.lit(None).cast("string"))
-            .withColumn("filter_name", F.lit(None).cast("string"))
-            .where(F.lit(False))
-        )
 
     branches = []
     for f in filters:
@@ -100,13 +88,22 @@ def match_filters_compiled(logs: DataFrame, filters: list) -> DataFrame:
                 ),
             )
         )
-    matches = F.array_compact(F.array(*branches)).alias("_m")
-    return (
-        logs.select("*", F.explode(matches).alias("_match"))
-        .withColumn("filter_id", F.col("_match.filter_id"))
-        .withColumn("filter_name", F.col("_match.filter_name"))
-        .drop("_match")
-    )
+    if not branches:
+        return F.array().cast("array<struct<filter_id:string,filter_name:string>>")
+    return F.array_compact(F.array(*branches))
+
+
+def match_filters_compiled(logs: DataFrame, filters: list) -> DataFrame:
+    """Plan-time-compiled fan-out: the fast path when the filter set is
+    known at plan construction (it always is — filters live in the catalog,
+    exactly like MatchBolt's compiled set, MatchBolt.java:159-165).
+
+    ONE per-row expression (`filter_matches`) and a single `inline` that
+    appends `filter_id, filter_name`: one scan, whole-stage codegen, zero
+    shuffle, zero join — strictly better than the broadcast join at any
+    scale.
+    """
+    return logs.select("*", F.inline(filter_matches(filters)))
 
 
 def match_counts(logs: DataFrame, filters: DataFrame) -> DataFrame:

@@ -20,6 +20,28 @@ SupervisorResultWriterBolt.java:90):
   append-only and idempotent-friendly at any scale; the reference instead
   merges on the supervisor (filter_manager.go:106-142) — same semantics,
   different merge point.
+- **classifier sink**: per-batch (filter, token, label) counts appended
+  to `nb_state`, merged on read.
+
+A micro-batch's fixed cost bounds both its latency and the rate it can
+sustain, so the batch hook builds nothing per batch that does not
+change per batch:
+
+- `parse_stream` adds `is_err`, the 25-keyword likely-error flag,
+  computed once per line before the fan-out; the `ingest` observation,
+  the stats error count and the classifier label all read it.
+- The filter-set match (`operators.fanout.filter_matches`) is built once
+  per filter-set snapshot, keyed by each filter's (id, name, regex), and
+  kept in one slot on the engine (`StreamingEngine._match`): a hot-swap
+  takes effect on the very next batch, an unchanged catalog rebuilds
+  nothing.  Names and regexes enter the plan as literals, never as SQL
+  text.
+- The results, stats and classifier projections are constant SQL text;
+  only the epoch number is spliced in per batch.
+- `parse_stream` and the `ingest` observation are built once per query
+  start, not per batch (`ts_epoch`, `is_err` and the observation as SQL
+  text, normalization and event-time extraction by the shared builders
+  of `functions.parse`).
 
 Checkpointing gives at-least-once delivery into append-only sinks (the
 reference's Storm acking ≈ Main.java:159-164).  Kafka is the production
@@ -32,7 +54,7 @@ import os
 import re
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudpelican_lsd_spark.catalog import FilterCatalog
@@ -42,10 +64,14 @@ from cloudpelican_lsd_spark.functions.parse import (
     extract_event_time,
     normalize_lines,
 )
-from cloudpelican_lsd_spark.operators.fanout import match_filters_compiled
+from cloudpelican_lsd_spark.operators.classifier import CAT_ERROR, CAT_REGULAR
+from cloudpelican_lsd_spark.operators.fanout import filter_matches
 from cloudpelican_lsd_spark.operators.tail import tail_last_n
-from cloudpelican_lsd_spark.operators.stats import bucket_col, METRIC_MATCH, METRIC_ERROR
-from cloudpelican_lsd_spark.functions.parse import is_likely_error
+from cloudpelican_lsd_spark.operators.stats import METRIC_MATCH, METRIC_ERROR
+from cloudpelican_lsd_spark.functions.parse import (
+    is_likely_error,
+    is_likely_error_sql,
+)
 
 
 def kafka_reader_options(
@@ -115,19 +141,37 @@ def rate_source(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
     )
 
 
+#: `monotonically_increasing_id()` split into its partition id and its
+#: row number within the partition, as SQL text (the row_id packing and
+#: its overflow observation both read them)
+_PID = "shiftright(monotonically_increasing_id(), 33)"
+_ROW = f"(monotonically_increasing_id() & {(1 << 33) - 1})"
+
+
 def parse_stream(raw: DataFrame) -> DataFrame:
     """ParseBolt semantics: normalize + event-time extract with
-    processing-time fallback (ParseBolt.java:49-93)."""
-    df = normalize_lines(raw)
+    processing-time fallback (ParseBolt.java:49-93), plus `is_err`: the
+    25-keyword likely-error flag (`is_likely_error_sql`), computed here
+    once per line so the `ingest` observation, the stats sink's error
+    count and the classifier label all read it instead of re-testing the
+    keywords per matched row.  Output: the input's columns with `_raw`
+    normalized, then `ts`, `ts_epoch`, `is_err`.
+
+    Called once per query start (`StreamingEngine.start`), never per
+    micro-batch; `ts_epoch` and `is_err` are SQL text constants."""
     ts = F.coalesce(
         extract_event_time(F.col("_raw")),
         F.expr("convert_timezone('UTC', current_timestamp())"),
     )
-    return df.withColumn("ts", ts).withColumn(
-        "ts_epoch",
-        F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)").cast(
-            "long"
-        ),
+    return (
+        normalize_lines(raw)
+        .select("*", ts.alias("ts"))
+        .selectExpr(
+            "*",
+            "CAST(timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+            " AS BIGINT) AS ts_epoch",
+            f"{is_likely_error_sql('_raw')} AS is_err",
+        )
     )
 
 
@@ -187,11 +231,45 @@ class StreamingEngine:
         #: filter compact_results keeps, and the page size of the
         #: supervisor's result route
         self.max_msgs_per_filter = max_msgs_per_filter
+        #: the one filter-set snapshot slot: ((id, name, regex) per
+        #: filter, the matched projection built for that set)
+        self._match: tuple[tuple, list[Column]] | None = None
 
     # -- batch hook ---------------------------------------------------------
 
+    def _matched_columns(self) -> list[Column]:
+        """The matched projection for the catalog's current filter set:
+        `_raw, ts, ts_epoch, is_err, date` plus one `filter_id,
+        filter_name` row per matching filter (`filter_matches`).
+
+        The filter set is re-read per batch — the reference's 1 s hot-swap
+        poll (MatchBolt.java:89-97) — but the projection is rebuilt only
+        when a filter's (id, name, regex) changed, into the one slot
+        `self._match`, so a hot-swap takes effect on the very next batch
+        and an unchanged catalog costs no Column builds."""
+        filters = self.catalog.list(include_temp=True)
+        key = tuple((f.id, f.name, f.regex) for f in filters)
+        snapshot = self._match
+        if snapshot is None or snapshot[0] != key:
+            cols = [F.col(c) for c in ("_raw", "ts", "ts_epoch", "is_err")]
+            cols.append(F.expr("date_format(ts, 'yyyy-MM-dd') AS date"))
+            cols.append(F.inline(filter_matches(filters)))
+            snapshot = self._match = (key, cols)
+        return snapshot[1]
+
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """All three writes are keyed by an `epoch` partition column and
+        """One micro-batch of `parse_stream` rows into the three sinks.
+
+        Per batch, Python builds no per-line expression (each `F.*` call
+        is several py4j round trips): the matched projection comes from
+        the filter-set snapshot slot (`_matched_columns`, rebuilt only
+        when the catalog changed), and every sink projection is constant
+        SQL text with the epoch spliced in as an integer.  The
+        likely-error flag is the line's `is_err`, computed once per line
+        by `parse_stream`; the stats error count and the classifier label
+        read it.
+
+        All three writes are keyed by an `epoch` partition column and
         replay whole-epoch-idempotently: a redelivered micro-batch
         (Spark's at-least-once redelivery after a crash between write and
         checkpoint commit) replaces exactly its own epoch's data — results
@@ -212,11 +290,11 @@ class StreamingEngine:
         epoch first makes the replay exact regardless of such drift; it
         costs one `isdir` per filter directory.
         """
-        # filter set re-read per batch = the reference's 1s hot-swap poll
-        # (MatchBolt.java:89-97); compiled into literal predicates per batch
-        matched = match_filters_compiled(
-            batch_df, self.catalog.list(include_temp=True)
-        ).withColumn("date", F.date_format(F.col("ts"), "yyyy-MM-dd"))
+        import shutil
+
+        from pyspark.sql import Observation
+
+        matched = batch_df.select(*self._matched_columns())
         matched.persist()
         epoch = int(epoch_id)
         try:
@@ -231,10 +309,6 @@ class StreamingEngine:
             # overflow fails the batch BEFORE the checkpoint commits, so
             # the replayed epoch is rewritten — loud stop, never a silent
             # row_id collision).
-            import shutil
-
-            from pyspark.sql import Observation
-
             if epoch >= (1 << 23):
                 raise RuntimeError(
                     f"process_batch: epoch {epoch} exceeds the 2^23 "
@@ -245,26 +319,18 @@ class StreamingEngine:
                     stale = os.path.join(self.results_path, fdir, f"epoch={epoch}")
                     if fdir.startswith("filter_id=") and os.path.isdir(stale):
                         shutil.rmtree(stale)
-            mono = F.monotonically_increasing_id()
-            pid_part = F.shiftright(mono, 33)
-            row_part = mono.bitwiseAND(F.lit((1 << 33) - 1))
             caps = Observation(f"row_id_caps_{epoch}")
             (
-                matched.select(
-                    "filter_id", "filter_name", "_raw", "ts", "ts_epoch", "date"
-                )
-                .withColumn(
-                    "row_id",
-                    F.lit(epoch * (1 << 40))
-                    + pid_part * F.lit(1 << 25)
-                    + row_part,
+                matched.selectExpr(
+                    "filter_id", "filter_name", "_raw", "ts", "ts_epoch", "date",
+                    f"{epoch << 40} + {_PID} * {1 << 25} + {_ROW} AS row_id",
+                    f"{epoch} AS epoch",
                 )
                 .observe(
                     caps,
-                    F.max(pid_part).alias("max_pid"),
-                    F.max(row_part).alias("max_row"),
+                    F.expr(f"max({_PID}) AS max_pid"),
+                    F.expr(f"max({_ROW}) AS max_row"),
                 )
-                .withColumn("epoch", F.lit(epoch))
                 .write.partitionBy("filter_id", "epoch", "date")
                 .mode("append")
                 .parquet(self.results_path)
@@ -282,24 +348,22 @@ class StreamingEngine:
                 )
             # stats: minutely partial counts, merge-on-read (A2/A3 analog)
             stats = (
-                matched.select(
-                    "filter_id",
-                    bucket_col("ts_epoch", 60).alias("bucket"),
-                    is_likely_error(F.col("_raw")).alias("is_err"),
+                matched.selectExpr(
+                    "filter_id", "ts_epoch - ts_epoch % 60 AS bucket", "is_err"
                 )
                 .groupBy("filter_id", "bucket")
                 .agg(
-                    F.count(F.lit(1)).alias("match_cnt"),
-                    F.sum(F.when(F.col("is_err"), 1).otherwise(0)).alias("err_cnt"),
+                    F.expr("count(1) AS match_cnt"),
+                    F.expr("sum(CASE WHEN is_err THEN 1 ELSE 0 END) AS err_cnt"),
                 )
-                .select(
+                .selectExpr(
                     "filter_id",
                     "bucket",
-                    F.expr(
-                        f"stack(2, {METRIC_MATCH}, match_cnt, {METRIC_ERROR}, err_cnt)"
-                    ).alias("metric", "cnt"),
+                    f"stack(2, {METRIC_MATCH}, match_cnt, {METRIC_ERROR}, err_cnt)"
+                    " AS (metric, cnt)",
+                    f"{epoch} AS epoch",
                 )
-                .where(F.col("cnt") > 0)
+                .where("cnt > 0")
             )
             # same drop-epoch-then-append discipline as results: dynamic
             # partition overwrite of an EMPTY replay batch (catalog
@@ -308,12 +372,7 @@ class StreamingEngine:
             stats_epoch_dir = os.path.join(self.stats_path, f"epoch={epoch}")
             if os.path.isdir(stats_epoch_dir):
                 shutil.rmtree(stats_epoch_dir)
-            (
-                stats.withColumn("epoch", F.lit(epoch))
-                .write.partitionBy("epoch")
-                .mode("append")
-                .parquet(self.stats_path)
-            )
+            stats.write.partitionBy("epoch").mode("append").parquet(self.stats_path)
             # classifier training feed (ErrorClassifierBolt trains on
             # matched tuples)
             self.update_classifier_state(matched, epoch)
@@ -327,19 +386,18 @@ class StreamingEngine:
         reference's 1s result tick; pass {"availableNow": True} in tests.
 
         The parsed stream carries ``observe()`` metrics — per micro-batch
-        line count, likely-error count, and max event time — surfaced in
-        every StreamingQueryProgress under ``observedMetrics['ingest']``.
+        line count, likely-error count (the sum of `is_err`), and max event
+        time — surfaced in every StreamingQueryProgress under
+        ``observedMetrics['ingest']``.
         This is the engine-side monitoring the reference approximates
         with its 5% Storm stats sampling (Main.java:165): exact, free
         (computed inside the existing pass), and queryable from the
         driver without touching the data path."""
         observed = parse_stream(source).observe(
             "ingest",
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(is_likely_error(F.col("_raw")).cast("long")).alias(
-                "n_likely_errors"
-            ),
-            F.max("ts").alias("max_event_ts"),
+            F.expr("count(1) AS n_lines"),
+            F.expr("sum(CAST(is_err AS BIGINT)) AS n_likely_errors"),
+            F.expr("max(ts) AS max_event_ts"),
         )
         writer = (
             observed
@@ -493,42 +551,41 @@ class StreamingEngine:
         """Write per-batch (token, label) counts into the model state table
         under the batch's epoch partition (idempotent on replay).
 
+        ``batch_df`` is the matched batch (`filter_id`, `_raw`, `is_err`):
+        the label is the line's `is_err` from `parse_stream` (the
+        reference's keyword heuristic, `heuristic_label`), read here, not
+        re-tested per matched row; the projection is constant SQL text.
+
         The reference trains online per filter with a 1000-sample forget
         queue (ErrorClassifierBolt.java:57-63); the Spark-shaped equivalent
         is a per-epoch count table merged on read — exactly-once under
         redelivery (each epoch overwrites itself) and shuffle-light
         (map-side combine per batch).
         """
-        from cloudpelican_lsd_spark.operators.classifier import heuristic_label
+        import shutil
 
         # keyed by filter_id: the reference trains one classifier PER
         # FILTER (fieldsGrouping(filter_id), ErrorClassifierBolt); a global
         # model over the fanned-out stream would count a line once per
         # matching filter, weighting the model by filter overlap
         toks = (
-            batch_df.withColumn("label", heuristic_label(F.col("_raw")))
-            .select(
+            batch_df.selectExpr(
                 "filter_id",
-                "label",
-                F.explode(F.split(F.col("_raw"), r"\s+")).alias("tok"),
+                f"CASE WHEN is_err THEN '{CAT_ERROR}' ELSE '{CAT_REGULAR}' END"
+                " AS label",
+                r"explode(split(_raw, '\\s+')) AS tok",
             )
             .groupBy("filter_id", "tok", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            .agg(F.expr("count(1) AS cnt"))
+            .selectExpr("*", f"{int(epoch)} AS epoch")
         )
         # drop-epoch-then-append (see the stats sink): dynamic overwrite
         # of an empty replay batch would keep the crashed attempt's counts
-        import shutil
-
         nb_path = os.path.join(self.base_dir, "nb_state")
         nb_epoch_dir = os.path.join(nb_path, f"epoch={int(epoch)}")
         if os.path.isdir(nb_epoch_dir):
             shutil.rmtree(nb_epoch_dir)
-        (
-            toks.withColumn("epoch", F.lit(int(epoch)))
-            .write.partitionBy("epoch")
-            .mode("append")
-            .parquet(nb_path)
-        )
+        toks.write.partitionBy("epoch").mode("append").parquet(nb_path)
 
     #: classifier-state schema (empty reads before the first batch)
     NB_SCHEMA = (

@@ -1,11 +1,16 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from cloudpelican_lsd_spark.engine import CloudPelicanEngine
 from cloudpelican_lsd_spark.functions.durations import parse_duration
 from cloudpelican_lsd_spark.sources.tables import logs_view
+
+#: the checkout this test file belongs to
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -581,7 +586,7 @@ def test_cli_module_pipe_and_exit_codes(sf_dir):
         [sys.executable, "-m", "cloudpelican_lsd_spark", "-e",
          "create filter cliweb as 'error'; cat cliweb | limit 2; help"],
         capture_output=True, text=True, timeout=300, env=env,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     out = r.stdout
@@ -592,7 +597,7 @@ def test_cli_module_pipe_and_exit_codes(sf_dir):
         [sys.executable, "-m", "cloudpelican_lsd_spark"],
         input="show filters\nnot a command at all\n",
         capture_output=True, text=True, timeout=300, env=env,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert r.returncode == 1
     assert "error: unknown command" in r.stdout

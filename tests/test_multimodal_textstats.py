@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,6 +9,9 @@ from pyspark.sql import functions as F
 from cloudpelican_lsd_spark.multimodal import binary as mm
 from cloudpelican_lsd_spark.operators import textstats as ts
 from cloudpelican_lsd_spark.sources.tables import load_table
+
+#: the checkout this test file belongs to
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_media_synthesis_and_features(spark, sf_dir):
@@ -516,7 +520,7 @@ def test_python_boundary_queries_survive_foreign_cwd():
     import sys as _sys
 
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {REPO_ROOT!r})\n"
         "import __spark_entry__ as e\n"
         "from pyspark.sql import SparkSession\n"
         "s = (SparkSession.builder.master('local[4]')\n"

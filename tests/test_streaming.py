@@ -1953,3 +1953,178 @@ def test_results_of_filter_id_needing_path_escaping(spark, tmp_path):
     )
     eng.process_batch(sp.parse_stream(raw), epoch_id=0)
     assert [r.filter_id for r in eng.tail(odd.id, 10).collect()] == [odd.id] * 3
+
+
+def _py4j_calls_of(action) -> int:
+    """py4j round trips `action` makes from this thread: the counter
+    perfbench/tracing.py wraps around `GatewayClient.send_command`."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    me = threading.get_ident()
+    calls = [0]
+    original = GatewayClient.send_command
+
+    def counting(client, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return original(client, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        action()
+    finally:
+        GatewayClient.send_command = original
+    return calls[0]
+
+
+def test_match_snapshot_follows_catalog_changes(spark, tmp_path):
+    """The filter-set match is built once per catalog snapshot: across
+    consecutive batches on one engine, a dropped filter, a new filter and
+    a name re-created with another regex are followed exactly on the next
+    epoch (results, stats and nb_state), and a batch on an unchanged
+    catalog reuses the snapshot and stays far below the per-batch build's
+    py4j cost."""
+    cat = FilterCatalog()
+    keep = cat.create("errors", "error")
+    gone = cat.create("odd", "odd")
+    old_even = cat.create("even", "even")
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_snapshot"))
+
+    def batch(epoch):
+        lines = [
+            f"2024-02-01T10:0{epoch}:{i:02d}.000+00:00 h app: error n={i}"
+            f" {('odd', 'even')[i % 2 == 0]}{' warn' if i % 3 == 0 else ''}"
+            for i in range(12)
+        ]
+        return sp.parse_stream(
+            spark.createDataFrame([(ln,) for ln in lines], "_raw STRING")
+        )
+
+    def per_filter(epoch):
+        res = eng.results().where(F.col("epoch") == epoch)
+        st = eng._read(eng.stats_path, eng.STATS_SCHEMA)
+        nb = eng._read(os.path.join(eng.base_dir, "nb_state"), eng.NB_SCHEMA)
+        return (
+            {
+                r.filter_id: r["count"]
+                for r in res.groupBy("filter_id").count().collect()
+            },
+            {
+                (r.filter_id, r.metric): r.cnt
+                for r in st.where(F.col("epoch") == epoch).collect()
+            },
+            {r.filter_id for r in nb.where(F.col("epoch") == epoch).collect()},
+        )
+
+    eng.process_batch(batch(0), epoch_id=0)
+    assert per_filter(0)[0] == {keep.id: 12, gone.id: 6, old_even.id: 6}
+
+    # drop one filter, add one, re-create "even" with another regex
+    cat.drop("odd")
+    new = cat.create("warns", "warn")
+    cat.drop("even")
+    new_even = cat.create("even", "n=1[01]")
+    assert new_even.id != old_even.id
+    eng.process_batch(batch(1), epoch_id=1)
+    snapshot = eng._match
+    want = {keep.id: 12, new.id: 4, new_even.id: 2}
+    results1, stats1, nb1 = per_filter(1)
+    assert results1 == want
+    assert stats1 == {
+        **{(fid, 1): n for fid, n in want.items()},
+        **{(fid, 2): n for fid, n in want.items()},  # every line says error
+    }
+    assert nb1 == set(want)
+    # earlier epochs keep what they were written with
+    assert per_filter(0)[0] == {keep.id: 12, gone.id: 6, old_even.id: 6}
+
+    # an unchanged catalog reuses the snapshot: no Column build per batch
+    parsed2 = batch(2)
+    calls = _py4j_calls_of(lambda: eng.process_batch(parsed2, epoch_id=2))
+    assert eng._match is snapshot
+    assert per_filter(2)[0] == want
+    assert calls < 800, calls
+
+
+def test_is_err_parity_with_the_keyword_predicates(spark, tmp_path):
+    """`parse_stream`'s `is_err` equals `is_likely_error` and DuckDB's
+    `is_likely_error_sql` on the normalized line — every keyword in mixed
+    case, keyword-free lines, non-ASCII text, and lines truncated past
+    MAX_MSG_LENGTH (a keyword past the cut is gone) — and a stream's
+    `ingest` n_likely_errors equals the stats ERROR total of a filter
+    that matches every line."""
+    import duckdb
+
+    from cloudpelican_lsd_spark.functions.parse import (
+        ERROR_WORDS,
+        MAX_MSG_LENGTH,
+        is_likely_error,
+        is_likely_error_sql,
+    )
+
+    def mixed(word):
+        return "".join(c.upper() if i % 2 else c for i, c in enumerate(word))
+
+    stamp = "2024-02-01T10:00:00.000+00:00 h app:"
+    lines = [f"{stamp} {mixed(w)} here" for w in ERROR_WORDS]
+    lines += [f"{stamp} {w.upper()}" for w in ERROR_WORDS]
+    lines += [
+        f"{stamp} ok served req=1",
+        f"{stamp} all good",
+        f"{stamp} naïve café résumé ok",
+        f"{stamp} Überlauf im Speicher: FEHLER",
+        f"{stamp} ошибка сервера",
+        f"{stamp} 日本語のログ 失敗",
+        f"{stamp} 🚀 launched",
+        f"{stamp} Ünïcödé ÉRROR fatal",
+        "x" * MAX_MSG_LENGTH + " error past the cut",
+        "x" * (MAX_MSG_LENGTH - 10) + " error at the edge",
+        "error " + "y" * (2 * MAX_MSG_LENGTH),
+    ]
+    parsed = sp.parse_stream(
+        spark.createDataFrame([(ln,) for ln in lines], "_raw STRING")
+    )
+    rows = parsed.select(
+        "_raw", "is_err", is_likely_error(F.col("_raw")).alias("col_err")
+    ).collect()
+    assert len(rows) == len(lines)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, _raw VARCHAR)")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?)", list(enumerate(r._raw for r in rows))
+    )
+    duck = [
+        v for _, v in con.execute(
+            f"SELECT i, {is_likely_error_sql('_raw')} FROM t ORDER BY i"
+        ).fetchall()
+    ]
+    got = [r.is_err for r in rows]
+    assert got == [r.col_err for r in rows] == duck
+    want = [any(w in r._raw.lower() for w in ERROR_WORDS) for r in rows]
+    assert got == want
+    n_kw = 2 * len(ERROR_WORDS)
+    assert all(got[:n_kw]) and not any(got[n_kw:n_kw + 3])
+    # the keyword past MAX_MSG_LENGTH was truncated away before the test
+    assert got[-3:] == [False, True, True]
+
+    src = str(tmp_path / "in_is_err")
+    _write_lines(src, lines)
+    cat = FilterCatalog()
+    every = cat.create("every", ".")
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "eng_is_err"))
+    q = eng.start(sp.file_source(spark, src), trigger={"availableNow": True})
+    q.awaitTermination(120)
+    obs = [
+        p["observedMetrics"]["ingest"]
+        for p in q.recentProgress
+        if p.get("observedMetrics", {}).get("ingest")
+    ]
+    n_errors = sum(m["n_likely_errors"] for m in obs)
+    assert sum(m["n_lines"] for m in obs) == len(lines)
+    assert eng.results(every.id).count() == len(lines)
+    stats_err = sum(
+        r.cnt for r in eng.stats(every.id).collect() if r.metric == sp.METRIC_ERROR
+    )
+    assert n_errors == stats_err == sum(want)

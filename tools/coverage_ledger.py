@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cloudpelican_lsd_spark import registry  # noqa: E402
 
@@ -27,7 +29,7 @@ def _family_map(names: list[str]) -> dict[str, str]:
 
 def main() -> None:
     rounds: dict[str, dict] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = path.rsplit("_r", 1)[1].split(".")[0]
         rounds[rnd] = json.load(open(path))
 
@@ -139,7 +141,7 @@ def main() -> None:
         " twin in the gate and stays benched + pytest-covered.",
         "",
     ] + [f"- `{name}`" for name in registry.UNGATED] + [""]
-    with open("/root/repo/LEDGER.md", "w") as fh:
+    with open(os.path.join(ROOT, "LEDGER.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(
         f"wrote LEDGER.md: {len(names)} queries, {n_green} green,"

@@ -14,9 +14,11 @@ Usage: python tools/determinism_probe.py [sf_dir] [n_window]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
 

@@ -10,10 +10,12 @@ Usage:  python tools/parity.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 

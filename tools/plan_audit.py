@@ -10,9 +10,11 @@ coalesces shuffle partitions and splits skewed joins).
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # full-registry audit (bench.HEADLINE no longer needed)
 from cloudpelican_lsd_spark import registry, session
@@ -143,7 +145,7 @@ def main() -> None:
             )
         )
         rows.append((name, audit(plan, detail)))
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write(
             "# PLANS — physical-plan audit of every registered query\n\n"
             "Generated by `tools/plan_audit.py` (`explain` at sf0.01, AQE\n"

@@ -5,9 +5,11 @@ docstring line of each query function.  Run after adding queries.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cloudpelican_lsd_spark import registry
 
@@ -31,7 +33,7 @@ def main() -> None:
         (name, "rows-only", _doc(fn))
         for name, fn in sorted(registry.UNGATED.items())
     ]
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(ROOT, "QUERIES.md"), "w") as fh:
         fh.write(
             "# QUERIES — the driver-gated inventory\n\n"
             f"{len(rows)} gated queries, every one with a full DuckDB "
