@@ -10,41 +10,38 @@ EPOCH-IDEMPOTENTLY into the assignment table.  Retrieval at any point
 runs the same incremental probe join the batch path uses
 (`similarity.ivf_index_topk`) against the merged table.
 
-Layout: ``<base>/assign/epoch=<N>/cent_id=<M>/`` — epoch-MAJOR so a
-replayed micro-batch (Spark's at-least-once redelivery between write
-and checkpoint commit) replaces exactly its own epoch's files, the same
-exactly-once upgrade every pipeline sink uses (pipeline.process_batch);
-`cent_id` stays a partition column, so dynamic partition pruning still
-restricts retrieval scans to the probed cells.  Centroids are fixed
-between retrains — the standard IVF maintenance trade; drift is
-audited by `similarity.ivf_recall`, not silently absorbed.
+Layout: ``<base>/assign/epoch=<N>/cent_id=<M>/``, an
+:class:`~cloudpelican_lsd_spark.streaming.epoch_table.EpochTable`: a
+replayed micro-batch (Spark's at-least-once redelivery between write and
+checkpoint commit) replaces exactly its own epoch's files, the
+exactly-once discipline of every streaming sink here; `cent_id` stays a
+partition column, so dynamic partition pruning still restricts
+retrieval scans to the probed cells.  Centroids are fixed between
+retrains — the standard IVF maintenance trade; drift is audited by
+`similarity.ivf_recall`, not silently absorbed.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from cloudpelican_lsd_spark.operators.similarity import (
     assign_to_centroids,
     ivf_index_topk,
     normalize_vectors,
 )
+from cloudpelican_lsd_spark.streaming.epoch_table import EpochTable
 
 
 class StreamingIvfIndexer:
     """foreachBatch sink maintaining a cent_id-partitioned IVF index."""
 
-    #: sidecar recording the highest epoch folded into the bootstrap
-    #: partition by :meth:`compact` (underscore name: Spark's parquet
-    #: reader ignores it, same convention as the suppressor's
-    #: `_kept_schema.json`)
-    _COMPACT_MARK = "_compacted_through.json"
+    #: the epoch table's directory under base_dir, and its empty schema
+    _TABLE = "assign"
+    _EMPTY = "cent_id BIGINT, vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE"
 
     def __init__(
         self,
@@ -52,19 +49,13 @@ class StreamingIvfIndexer:
         base_dir: str,
         n_centroids: int = 8,
     ) -> None:
-        # exactly-once rests on LOCAL filesystem epoch-dir replacement —
-        # same guard (and reason) as NearDupSuppressor / StreamingEngine
-        if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", base_dir):
-            raise ValueError(
-                f"StreamingIvfIndexer base_dir={base_dir!r}: epoch "
-                "replacement deletes via the local filesystem; a "
-                "scheme-prefixed URI (even file://) would silently "
-                "degrade replay to duplication. Use a plain local path."
-            )
         self.spark = spark
         self.n_centroids = n_centroids
         self.cent_path = os.path.join(base_dir, "centroids")
-        self.assign_path = os.path.join(base_dir, "assign")
+        self.assign_path = os.path.join(base_dir, self._TABLE)
+        self.assign_table = EpochTable(
+            spark, self.assign_path, ["epoch", "cent_id"]
+        )
 
     # -- build ---------------------------------------------------------------
 
@@ -90,116 +81,34 @@ class StreamingIvfIndexer:
 
     # -- maintain ------------------------------------------------------------
 
-    def compacted_through(self) -> int:
-        """Highest epoch already folded into the bootstrap partition by
-        :meth:`compact` (-1 if never compacted)."""
-        import json
-
-        try:
-            with open(
-                os.path.join(self.assign_path, self._COMPACT_MARK)
-            ) as fh:
-                return int(json.load(fh)["epoch"])
-        except (FileNotFoundError, ValueError, KeyError, TypeError):
-            return -1
-
-    def _replay_of_compacted(self, epoch: int) -> bool:
-        """True when a redelivered epoch was already folded into the
-        bootstrap partition: its epoch dir no longer exists, so the
-        drop-epoch-then-append upgrade can't see it — appending would
-        DUPLICATE rows already merged.  Skipping is the exactly-once
-        answer (the epoch's rows are fully present in epoch=-1)."""
-        return epoch <= self.compacted_through()
-
     def compact(self) -> None:
         """Fold every appended epoch into the reserved bootstrap
         partition — streaming appends accumulate one directory tree per
         micro-batch (the small-files problem at scale; at one epoch per
         minute a day adds 1 440 trees × n_centroids cells), and
-        compaction rewrites the merged table as one healthy file set per
-        cell.  Crash-safe via the pipeline's swap discipline (live →
-        `.old` → in; heal with `_recover_swap` on every entry point);
-        the high-water sidecar rides inside the new table directory so
-        the swap publishes data and watermark atomically.
+        compaction rewrites the merged table as one file set per cell
+        (`EpochTable.fold`: crash-safe swap, refused beside an active
+        stream, the highest folded epoch marked in the same rename).  A
+        re-pointed stream (fresh checkpoint, epoch ids from 0) needs a
+        fresh base_dir, like every epoch-idempotent sink here."""
+        self.assign_table.fold(into=-1)
 
-        Quiescence is ENFORCED (a batch landing mid-rewrite would be
-        dropped by the swap).  The watermark pins the CHECKPOINT LINEAGE — epoch ids
-        restart at 0 under a fresh checkpoint, so a re-pointed stream
-        needs a fresh base_dir (or delete the sidecar after wiping the
-        epochs), exactly like every other epoch-idempotent sink here."""
-        import json
-
-        from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
-
-        if self.spark.streams.active:
-            raise RuntimeError(
-                "StreamingIvfIndexer.compact: stop streaming queries "
-                "first — a micro-batch committing between the table "
-                "read and the swap would be silently erased"
-            )
-        StreamingEngine._recover_swap(self.assign_path)
-        if not os.path.isdir(self.assign_path):
-            return
-        df = self.spark.read.parquet(self.assign_path)
-        hi = df.agg(F.max("epoch").alias("hi")).collect()[0].hi
-        if hi is None or hi < 0:
-            return  # bootstrap-only (or empty): nothing to fold
-        # hash-cluster whole cells into ~128 MB write tasks: each cent_id
-        # lands in exactly one task, so partitionBy emits ONE file set
-        # per cell (the minimal layout the DPP-pruned retrieval scan
-        # wants) instead of one per (upstream task, cell) pair
-        on_disk = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(self.assign_path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        n_tasks = max(1, -(-on_disk // (128 << 20)))  # ceil div
-        tmp = self.assign_path + ".compact"
-        (
-            df.drop("epoch")
-            .repartition(int(n_tasks), "cent_id")
-            .withColumn("epoch", F.lit(-1))
-            .write.partitionBy("epoch", "cent_id")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        with open(os.path.join(tmp, self._COMPACT_MARK), "w") as fh:
-            json.dump(
-                {"epoch": max(int(hi), self.compacted_through())}, fh
-            )
-        StreamingEngine._swap_table(self.assign_path, tmp)
+    def _rows(self, batch_df: DataFrame) -> DataFrame:
+        """A micro-batch's `(vec_id, embedding)` rows as table rows:
+        assigned to the fixed centroids."""
+        return assign_to_centroids(normalize_vectors(batch_df), self.centroids())
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Assign a micro-batch of new `(vec_id, embedding)` rows to the
-        fixed centroids and append under its own epoch partition —
-        whole-epoch-idempotent on redelivery (drop-epoch-then-append,
-        the pipeline sink discipline; epochs already folded into the
-        bootstrap partition by :meth:`compact` are skipped, which is the
-        exactly-once answer for a redelivery that arrives after
-        compaction)."""
-        from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
-
+        """Append a micro-batch of new `(vec_id, embedding)` rows under
+        its own epoch partition — whole-epoch-idempotent on redelivery; a
+        redelivery of an epoch :meth:`compact` folded into the bootstrap
+        partition is skipped (its rows are already there)."""
         epoch = int(epoch_id)
         if epoch < 0:
-            raise ValueError(
-                f"epoch {epoch} is reserved for the bootstrap assignments"
-            )
-        StreamingEngine._recover_swap(self.assign_path)
-        if self._replay_of_compacted(epoch):
+            raise ValueError(f"epoch {epoch} is reserved for the bootstrap rows")
+        if epoch <= self.assign_table.folded_through():
             return
-        epoch_dir = os.path.join(self.assign_path, f"epoch={epoch}")
-        if os.path.isdir(epoch_dir):
-            shutil.rmtree(epoch_dir)
-        assign = assign_to_centroids(
-            normalize_vectors(batch_df), self.centroids()
-        )
-        (
-            assign.withColumn("epoch", F.lit(epoch))
-            .write.partitionBy("epoch", "cent_id")
-            .mode("append")
-            .parquet(self.assign_path)
-        )
+        self.assign_table.write(self._rows(batch_df), epoch)
 
     def attach(self, stream: DataFrame, checkpoint: str, trigger=None):
         """Wire onto a streaming `(vec_id, embedding)` DataFrame."""
@@ -213,17 +122,11 @@ class StreamingIvfIndexer:
     # -- read ----------------------------------------------------------------
 
     def assignments(self) -> DataFrame:
-        """The merged assignment table (bootstrap + every appended epoch)."""
-        from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
-
-        StreamingEngine._recover_swap(self.assign_path)
-        try:
-            return self.spark.read.parquet(self.assign_path).drop("epoch")
-        except AnalysisException:
-            return self.spark.createDataFrame(
-                [], "cent_id BIGINT, vec_id BIGINT, emb ARRAY<DOUBLE>,"
-                " nrm DOUBLE"
-            )
+        """The merged table (bootstrap + every appended epoch)."""
+        df = self.assign_table.read()
+        if df is None:
+            return self.spark.createDataFrame([], self._EMPTY)
+        return df.drop("epoch")
 
     def topk(
         self, queries: DataFrame, nprobe: int = 2, k: int = 10
@@ -247,6 +150,10 @@ class StreamingIvfPqIndexer(StreamingIvfIndexer):
     Centroids AND codebook are fixed between retrains; drift is audited
     by `similarity.ivfpq_recall`."""
 
+    # epoch dirs hold codes, not raw assignments
+    _TABLE = "codes"
+    _EMPTY = "cent_id BIGINT, vec_id BIGINT, s INT, code BIGINT"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -265,8 +172,6 @@ class StreamingIvfPqIndexer(StreamingIvfIndexer):
             )
         self.m, self.n_codes, self.dim = m, n_codes, dim
         self.codebook_path = os.path.join(base_dir, "codebook")
-        # epoch dirs hold codes, not raw assignments
-        self.assign_path = os.path.join(base_dir, "codes")
 
     def bootstrap(self, corpus: DataFrame) -> None:
         """Train-time build: centroid elements + residual codebook +
@@ -290,52 +195,21 @@ class StreamingIvfPqIndexer(StreamingIvfIndexer):
     def codebook(self) -> DataFrame:
         return self.spark.read.parquet(self.codebook_path)
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """Encode a micro-batch of new `(vec_id, embedding)` rows through
-        the SAME residual/encode helpers the bootstrap used (fixed
-        centroids + codebook) and append its codes under its own epoch
-        partition — whole-epoch-idempotent on redelivery."""
+    def _rows(self, batch_df: DataFrame) -> DataFrame:
+        """A micro-batch's `(vec_id, embedding)` rows as table rows:
+        encoded through the SAME residual/encode helpers the bootstrap
+        used (fixed centroids + codebook)."""
         from cloudpelican_lsd_spark.operators.similarity import (
             _ivfpq_encode,
             _ivfpq_residuals,
             _quantize_elements,
         )
-        from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
 
-        epoch = int(epoch_id)
-        if epoch < 0:
-            raise ValueError(
-                f"epoch {epoch} is reserved for the bootstrap codes"
-            )
-        StreamingEngine._recover_swap(self.assign_path)
-        if self._replay_of_compacted(epoch):
-            return
-        epoch_dir = os.path.join(self.assign_path, f"epoch={epoch}")
-        if os.path.isdir(epoch_dir):
-            shutil.rmtree(epoch_dir)
         rv = _ivfpq_residuals(
             _quantize_elements(batch_df), self.centroids(),
             self.dim // self.m,
         )
-        (
-            _ivfpq_encode(rv, self.codebook())
-            .withColumn("epoch", F.lit(epoch))
-            .write.partitionBy("epoch", "cent_id")
-            .mode("append")
-            .parquet(self.assign_path)
-        )
-
-    def assignments(self) -> DataFrame:
-        """The merged code table (bootstrap + every appended epoch)."""
-        from cloudpelican_lsd_spark.streaming.pipeline import StreamingEngine
-
-        StreamingEngine._recover_swap(self.assign_path)
-        try:
-            return self.spark.read.parquet(self.assign_path).drop("epoch")
-        except AnalysisException:
-            return self.spark.createDataFrame(
-                [], "cent_id BIGINT, vec_id BIGINT, s INT, code BIGINT"
-            )
+        return _ivfpq_encode(rv, self.codebook())
 
     def topk(
         self, queries: DataFrame, nprobe: int = 2, k: int = 10

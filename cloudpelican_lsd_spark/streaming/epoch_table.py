@@ -1,0 +1,281 @@
+"""The exactly-once store behind every ``foreachBatch`` sink.
+
+Structured Streaming redelivers a micro-batch whose sink write ran but
+whose checkpoint commit did not (a crash in between): delivery into a
+sink is at-least-once.  A sink is exactly-once when writing the same
+epoch twice leaves what writing it once leaves.  Every sink of the
+stream (the engine's results, stats and classifier tables, the
+near-duplicate suppressor's signature store and output, the streaming
+IVF indexes) is an :class:`EpochTable`: a local parquet directory
+partitioned by an integer ``epoch`` column, and the only code that
+touches its files.
+
+On disk, for ``partition_by=["filter_id", "epoch", "date"]``::
+
+    <path>/filter_id=<X>/epoch=<N>/date=<D>/part-*.parquet
+    <path>/_compacted_through.json     {"epoch": M}, only once folded
+    <path>.old, <path>.compact         only while a swap is in flight
+
+The replay algorithm:
+
+- **write** an epoch = drop every ``epoch=N`` directory (at its depth in
+  ``partition_by``, so under every ``filter_id=`` directory, including
+  those of filters deleted since the crashed attempt), then append.  A
+  replay whose rows land in other partitions than the first attempt's
+  (a hot-swapped filter set, a processing-time fallback crossing
+  midnight, an empty replay) still replaces exactly its epoch.
+- **rewrite** (retention, ring-buffer truncation, folding) writes the new
+  table to ``<path>.compact`` and swaps it in: live moves to ``.old``,
+  ``.compact`` moves to live, ``.old`` is removed.  A crash at any step
+  leaves a whole table at live or at ``.old``; every entry point heals
+  that first, so no write lands in a fresh table beside a stranded one
+  and no read misses it.  A rewrite refuses to run beside an active
+  stream, whose micro-batch committing between the read and the swap
+  would be silently erased.
+- **fold** rewrites every epoch into one partition and records the
+  highest folded epoch in ``_compacted_through.json`` inside the new
+  table, so data and mark publish in one rename.  The folded epochs'
+  directories are gone, so a redelivery of one of them cannot be
+  replaced; the sink skips such a batch whole (its rows are already in
+  the folded partition), deciding it before any write.  The mark pins
+  the checkpoint lineage: epoch ids restart at 0 under a fresh
+  checkpoint, so a re-pointed stream needs fresh sink directories.
+
+Every step is a local filesystem call, so ``path`` must be a plain local
+path: on a scheme-prefixed URI (``hdfs://``, ``s3a://``, even
+``file://``) ``os.path`` sees a nonexistent relative path, and the drop
+and the swap would be silent no-ops.  A cluster deployment swaps them
+for the Hadoop FileSystem API or a transactional table format.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import shutil
+
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+#: the highest epoch a fold merged (underscore name: Spark's parquet
+#: reader skips it)
+_MARK = "_compacted_through.json"
+
+
+def _partition_dir(column: str, value: str) -> str:
+    """The directory name Spark gives a partition value: ``column=value``
+    with the characters of Hive's path escaping written as ``%XX``."""
+    escaped = re.sub(
+        r"[\x01-\x1f\"#%'*/:=?\\\x7f{\[\]^]",
+        lambda m: f"%{ord(m.group()):02X}",
+        value,
+    )
+    return f"{column}={escaped}"
+
+
+class EpochTable:
+    """One epoch-partitioned parquet table at a local ``path``.
+
+    ``partition_by`` names the partition columns in directory order and
+    includes ``epoch``.  ``schema`` (DDL text) is the declared schema
+    every read names, partition columns included; a read then runs no
+    schema-inference job.  Without it, reads infer the schema."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        partition_by: list[str],
+        schema: str | None = None,
+    ) -> None:
+        if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
+            raise ValueError(
+                f"{path!r}: an epoch table is a local filesystem path — "
+                "its epoch drops and swaps are local filesystem calls, "
+                "which a scheme-prefixed URI (even file://) turns into "
+                "silent no-ops, degrading replay to at-least-once "
+                "duplication.  Use a plain local path."
+            )
+        self.spark = spark
+        self.path = path
+        self.partition_by = list(partition_by)
+        self.schema = schema
+        self._columns = (
+            [c.split()[0] for c in schema.split(",")] if schema else None
+        )
+
+    # -- sink ----------------------------------------------------------------
+
+    def write(self, df: DataFrame, epoch: int) -> None:
+        """Replace epoch ``epoch`` with ``df``'s rows (``df`` has every
+        column but ``epoch``, which is added here): heal, drop every
+        ``epoch=N`` directory, append.  A leftover ``_temporary`` is a
+        dead writer's uncommitted output — this sink's writes run one at
+        a time — which the append's job commit would otherwise merge in
+        beside the replay's rows."""
+        epoch = int(epoch)
+        self._heal()
+        shutil.rmtree(os.path.join(self.path, "_temporary"), ignore_errors=True)
+        for parent in self._parents("epoch"):
+            stale = os.path.join(parent, f"epoch={epoch}")
+            if os.path.isdir(stale):
+                shutil.rmtree(stale)
+        (
+            df.selectExpr("*", f"{epoch} AS epoch")
+            .write.partitionBy(*self.partition_by)
+            .mode("append")
+            .parquet(self.path)
+        )
+
+    def read(self, key: str | None = None) -> DataFrame | None:
+        """The table (or, for ``key``, the directory of that value of the
+        first partition column alone: only its files are listed and
+        read), healed first.  With a declared schema: its columns in its
+        order, and a typed empty frame when there is no data (before the
+        first batch, after a purge).  Without one: the inferred frame, or
+        None when there is no data."""
+        self._heal()
+        path = self.path
+        reader = self.spark.read
+        if key is not None:
+            path = os.path.join(path, _partition_dir(self.partition_by[0], key))
+            reader = reader.option("basePath", self.path)
+        if self.schema:
+            reader = reader.schema(self.schema)
+        # the isdir spares a poll of an empty filter Spark's missing-path
+        # error; the except covers a directory a swap moves meanwhile
+        if os.path.isdir(path):
+            try:
+                df = reader.parquet(path)
+                return df.select(*self._columns) if self.schema else df
+            except AnalysisException:
+                pass
+        return self.spark.createDataFrame([], self.schema) if self.schema else None
+
+    def folded_through(self) -> int:
+        """The highest epoch a fold merged (-1 if none): a batch of an
+        epoch at or below it was committed before the fold and is
+        skipped whole."""
+        self._heal()
+        try:
+            with open(os.path.join(self.path, _MARK)) as fh:
+                return int(json.load(fh)["epoch"])
+        except (FileNotFoundError, ValueError, KeyError, TypeError):
+            return -1
+
+    # -- maintenance -----------------------------------------------------------
+
+    def rewrite(self, df: DataFrame, mark: int | None = None) -> None:
+        """Replace the table with ``df`` (built from :meth:`read`),
+        keeping the higher of ``mark`` and the table's fold mark.  No-op
+        when the table does not exist."""
+        self._require_quiesced()
+        self._heal()
+        if not os.path.isdir(self.path):
+            return
+        mark = max(-1 if mark is None else int(mark), self.folded_through())
+        tmp = self.path + ".compact"
+        df.write.partitionBy(*self.partition_by).mode("overwrite").parquet(tmp)
+        if mark >= 0:
+            with open(os.path.join(tmp, _MARK), "w") as fh:
+                json.dump({"epoch": mark}, fh)
+        old = self.path + ".old"
+        os.rename(self.path, old)
+        os.rename(tmp, self.path)
+        shutil.rmtree(old)
+
+    def fold(self, into: int | None = None) -> None:
+        """Fold every epoch into one partition, ``epoch=into`` (the
+        highest folded epoch when None), and mark the highest folded
+        epoch.  Streaming appends add one directory tree per micro-batch
+        (the small-files problem); the fold writes files of about 128 MB,
+        each directory of a second partition column (the IVF index's
+        `cent_id` cells) from a single task.  No-op when no epoch lies
+        above the mark."""
+        self._require_quiesced()
+        df = self.read()
+        if df is None or "epoch" not in df.columns:
+            return
+        hi = df.agg(F.max("epoch")).first()[0]
+        if hi is None or hi <= self.folded_through():
+            return
+        on_disk = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(self.path)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        n_files = max(1, -(-on_disk // (128 << 20)))
+        self.rewrite(
+            df.drop("epoch")
+            .repartition(n_files, *self.partition_by[1:])
+            .selectExpr("*", f"{hi if into is None else int(into)} AS epoch"),
+            mark=hi,
+        )
+
+    def drop_before(self, column: str, bound) -> None:
+        """Retention: drop every ``column=`` directory whose value is
+        below ``bound`` (compared as ``bound``'s type), and each parent
+        directory this empties, the table root excepted.  A partition
+        drop: unlike a rewrite, it does not refuse beside a stream."""
+        self._heal()
+        for parent in self._parents(column):
+            dropped = False
+            for name in os.listdir(parent):
+                if not name.startswith(column + "="):
+                    continue
+                try:
+                    value = type(bound)(name.split("=", 1)[1])
+                except ValueError:
+                    continue
+                if value < bound:
+                    shutil.rmtree(os.path.join(parent, name))
+                    dropped = True
+            if dropped and parent != self.path:
+                try:
+                    os.rmdir(parent)
+                except OSError:
+                    pass  # still holds newer data
+
+    # -- internals -------------------------------------------------------------
+
+    def _parents(self, column: str) -> list[str]:
+        """The directories holding ``column=`` directories: the table root
+        for the first partition column, every directory of the level
+        above otherwise."""
+        dirs = [self.path] if os.path.isdir(self.path) else []
+        for above in self.partition_by[: self.partition_by.index(column)]:
+            dirs = [
+                p
+                for d in dirs
+                for name in os.listdir(d)
+                if name.startswith(above + "=")
+                and os.path.isdir(p := os.path.join(d, name))
+            ]
+        return dirs
+
+    def _heal(self) -> None:
+        """Finish an interrupted swap: a table only at ``.old`` died
+        between the two renames (restore it); one beside a live table
+        died before the cleanup (remove it)."""
+        old = self.path + ".old"
+        if os.path.isdir(old):
+            if os.path.isdir(self.path):
+                shutil.rmtree(old)
+            else:
+                os.rename(old, self.path)
+
+    def _require_quiesced(self) -> None:
+        """Rewrites are read, write, swap over plain parquet: not
+        transactional.  ``spark.streams.active`` sees the queries of this
+        session only; a stream writing the same directory from another
+        session or process is invisible here, so a multi-process
+        deployment serializes its rewrites itself."""
+        if self.spark.streams.active:
+            raise RuntimeError(
+                f"rewrite of {self.path}: stop streaming queries first — "
+                "a micro-batch committing between the table read and the "
+                "swap would be silently erased"
+            )

@@ -43,17 +43,19 @@ change per batch:
   text, normalization and event-time extraction by the shared builders
   of `functions.parse`).
 
-Checkpointing gives at-least-once delivery into append-only sinks (the
-reference's Storm acking ≈ Main.java:159-164).  Kafka is the production
-source; file/rate sources serve tests (no Kafka in the test container).
+Checkpointing gives at-least-once delivery (the reference's Storm acking
+≈ Main.java:159-164); every sink here — the three tables above and the
+near-duplicate suppressor's store and output — is an
+`epoch_table.EpochTable`, whose drop-epoch-then-append writes make the
+redelivery exactly-once and whose crash-safe swaps serve the retention
+and compaction sweeps.  Kafka is the production source; file/rate
+sources serve tests (no Kafka in the test container).
 """
 
 from __future__ import annotations
 
 import os
-import re
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,6 +70,7 @@ from cloudpelican_lsd_spark.operators.classifier import CAT_ERROR, CAT_REGULAR
 from cloudpelican_lsd_spark.operators.fanout import filter_matches
 from cloudpelican_lsd_spark.operators.tail import tail_last_n
 from cloudpelican_lsd_spark.operators.stats import METRIC_MATCH, METRIC_ERROR
+from cloudpelican_lsd_spark.streaming.epoch_table import EpochTable
 from cloudpelican_lsd_spark.functions.parse import (
     is_likely_error,
     is_likely_error_sql,
@@ -175,17 +178,6 @@ def parse_stream(raw: DataFrame) -> DataFrame:
     )
 
 
-def _partition_dir(column: str, value: str) -> str:
-    """The directory name Spark gives a partition value: ``column=value``
-    with the characters of Hive's path escaping written as ``%XX``."""
-    escaped = re.sub(
-        r"[\x01-\x1f\"#%'*/:=?\\\x7f{\[\]^]",
-        lambda m: f"%{ord(m.group()):02X}",
-        value,
-    )
-    return f"{column}={escaped}"
-
-
 class StreamingEngine:
     """One streaming query maintaining results + stats tables."""
 
@@ -196,22 +188,21 @@ class StreamingEngine:
         base_dir: str,
         max_msgs_per_filter: int = 10000,
     ) -> None:
-        # exactly-once here rests on LOCAL filesystem ops (epoch-dir
-        # rmtree before replay, rename-swap compaction, os.listdir TTL
-        # sweeps) — a scheme-prefixed URI would silently no-op all of
-        # them, degrading replay to duplication and disabling retention.
-        # Same guard (and reason) as NearDupSuppressor.
-        if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", base_dir):
-            raise ValueError(
-                "StreamingEngine: base_dir must be a local filesystem "
-                f"path, got {base_dir!r} — the epoch-idempotent replay "
-                "and TTL sweeps use local fs ops; use a DFS-backed "
-                "transactional table format for remote storage"
-            )
         self.spark = spark
         self.catalog = catalog
         self.base_dir = base_dir
         self.results_path = os.path.join(base_dir, "results")
+        self.stats_path = os.path.join(base_dir, "stats")
+        self.results_table = EpochTable(
+            spark, self.results_path, ["filter_id", "epoch", "date"],
+            self.RESULTS_SCHEMA,
+        )
+        self.stats_table = EpochTable(
+            spark, self.stats_path, ["epoch"], self.STATS_SCHEMA
+        )
+        self.nb_table = EpochTable(
+            spark, os.path.join(base_dir, "nb_state"), ["epoch"], self.NB_SCHEMA
+        )
         if os.path.isdir(self.results_path) and any(
             d.startswith("epoch=") for d in os.listdir(self.results_path)
         ):
@@ -225,7 +216,6 @@ class StreamingEngine:
                 "'filter_id', 'epoch', 'date').parquet(new), or start from "
                 "an empty base_dir"
             )
-        self.stats_path = os.path.join(base_dir, "stats")
         self.checkpoint = os.path.join(base_dir, "checkpoint")
         #: the reference's 10k msgs/filter (supervisor.go:52): the rows per
         #: filter compact_results keeps, and the page size of the
@@ -269,29 +259,17 @@ class StreamingEngine:
         by `parse_stream`; the stats error count and the classifier label
         read it.
 
-        All three writes are keyed by an `epoch` partition column and
-        replay whole-epoch-idempotently: a redelivered micro-batch
-        (Spark's at-least-once redelivery after a crash between write and
-        checkpoint commit) replaces exactly its own epoch's data — results
-        stay unique and the merge-on-read SUMs (stats, classifier counts)
-        don't double-count.  That upgrade from "at-least-once into an
-        append table" is what makes the sinks effectively exactly-once.
-
-        The results table is filter-MAJOR (`filter_id/epoch/date`): the
-        hot read is the live tail, which polls one filter every 200 ms and
-        so lists and scans that filter's directory alone.  Before the write, the
-        epoch's directory is dropped under EVERY `filter_id=` directory
-        on disk — including filters deleted since the crashed attempt.
-        Per-(filter, date) dynamic overwrite would leave stale partitions
-        when a replayed batch lands a DIFFERENT partition set than the
-        crashed attempt — which genuinely happens (now()-fallback
-        timestamps crossing midnight between attempts; the filter catalog
-        hot-swapping between attempt and replay).  Dropping the whole
-        epoch first makes the replay exact regardless of such drift; it
-        costs one `isdir` per filter directory.
+        Each write goes through its `EpochTable` (heal an interrupted
+        swap, drop the epoch, append): a redelivered micro-batch (Spark's
+        at-least-once redelivery after a crash between write and
+        checkpoint commit) replaces exactly its own epoch's data, so
+        results stay unique and the merge-on-read SUMs (stats, classifier
+        counts) don't double-count.  The results table is filter-MAJOR
+        (`filter_id/epoch/date`): the hot read is the live tail, which
+        polls one filter every 200 ms and so lists and scans that
+        filter's directory alone; the epoch is dropped under every
+        `filter_id=` directory, deleted filters' included.
         """
-        import shutil
-
         from pyspark.sql import Observation
 
         matched = batch_df.select(*self._matched_columns())
@@ -314,26 +292,17 @@ class StreamingEngine:
                     f"process_batch: epoch {epoch} exceeds the 2^23 "
                     "row_id epoch slot — widen the packing"
                 )
-            if os.path.isdir(self.results_path):
-                for fdir in os.listdir(self.results_path):
-                    stale = os.path.join(self.results_path, fdir, f"epoch={epoch}")
-                    if fdir.startswith("filter_id=") and os.path.isdir(stale):
-                        shutil.rmtree(stale)
             caps = Observation(f"row_id_caps_{epoch}")
-            (
+            self.results_table.write(
                 matched.selectExpr(
                     "filter_id", "filter_name", "_raw", "ts", "ts_epoch", "date",
                     f"{epoch << 40} + {_PID} * {1 << 25} + {_ROW} AS row_id",
-                    f"{epoch} AS epoch",
-                )
-                .observe(
+                ).observe(
                     caps,
                     F.expr(f"max({_PID}) AS max_pid"),
                     F.expr(f"max({_ROW}) AS max_row"),
-                )
-                .write.partitionBy("filter_id", "epoch", "date")
-                .mode("append")
-                .parquet(self.results_path)
+                ),
+                epoch,
             )
             got = caps.get
             if (got["max_pid"] or 0) >= (1 << 15) or (got["max_row"] or 0) >= (
@@ -361,18 +330,10 @@ class StreamingEngine:
                     "bucket",
                     f"stack(2, {METRIC_MATCH}, match_cnt, {METRIC_ERROR}, err_cnt)"
                     " AS (metric, cnt)",
-                    f"{epoch} AS epoch",
                 )
                 .where("cnt > 0")
             )
-            # same drop-epoch-then-append discipline as results: dynamic
-            # partition overwrite of an EMPTY replay batch (catalog
-            # hot-swapped between attempt and replay) writes no partitions
-            # and would leave the crashed attempt's epoch data alive
-            stats_epoch_dir = os.path.join(self.stats_path, f"epoch={epoch}")
-            if os.path.isdir(stats_epoch_dir):
-                shutil.rmtree(stats_epoch_dir)
-            stats.write.partitionBy("epoch").mode("append").parquet(self.stats_path)
+            self.stats_table.write(stats, epoch)
             # classifier training feed (ErrorClassifierBolt trains on
             # matched tuples)
             self.update_classifier_state(matched, epoch)
@@ -418,38 +379,10 @@ class StreamingEngine:
         "filter_name STRING, _raw STRING, ts TIMESTAMP_NTZ, ts_epoch BIGINT,"
         " row_id BIGINT, epoch INT, filter_id STRING, date DATE"
     )
-    _RESULTS_COLUMNS = [c.split()[0] for c in RESULTS_SCHEMA.split(",")]
-
-    def _read(self, path: str, schema: str, base_path: str | None = None) -> DataFrame:
-        """One stream store (or one partition directory of it, under
-        ``base_path``) read with its declared schema; an absent directory
-        (before the first batch, after a purge) reads as a typed empty
-        frame.  The directory check keeps a poll of a filter with no rows
-        yet from paying (and logging) Spark's missing-path error; the
-        except covers a directory that a sweep's swap moves meanwhile."""
-        if os.path.isdir(path):
-            reader = self.spark.read.schema(schema)
-            if base_path is not None:
-                reader = reader.option("basePath", base_path)
-            try:
-                return reader.parquet(path)
-            except AnalysisException:
-                pass
-        return self.spark.createDataFrame([], schema)
 
     def results(self, filter_id: str | None = None) -> DataFrame:
-        # Heal a mid-swap crash (live moved to .old, tmp not yet moved in)
-        # on first read — otherwise reads silently return empty data until
-        # the next maintenance sweep runs.
-        self._recover_swap(self.results_path)
-        path = self.results_path
-        if filter_id is not None:
-            # one filter's directory: only its files are listed and read
-            path = os.path.join(path, _partition_dir("filter_id", filter_id))
-        df = self._read(path, self.RESULTS_SCHEMA, base_path=self.results_path)
-        # partition discovery appends filter_id/epoch/date in directory
-        # order; every path returns the one documented order
-        return df.select(*self._RESULTS_COLUMNS)
+        """The results table, or one filter's directory of it."""
+        return self.results_table.read(filter_id)
 
     def tail(self, filter_id: str, n: int = 100) -> DataFrame:
         """Live tail: last n rows for a filter (cloudpelican-lsd.go:630-636)."""
@@ -460,8 +393,7 @@ class StreamingEngine:
 
     def stats(self, filter_id: str | None = None) -> DataFrame:
         """Merged stats view: sum the appended partials (merge-on-read)."""
-        self._recover_swap(self.stats_path)  # heal a mid-swap crash on read
-        df = self._read(self.stats_path, self.STATS_SCHEMA)
+        df = self.stats_table.read()
         if filter_id is not None:
             df = df.where(F.col("filter_id") == filter_id)
         return df.groupBy("filter_id", "metric", "bucket").agg(
@@ -562,8 +494,6 @@ class StreamingEngine:
         redelivery (each epoch overwrites itself) and shuffle-light
         (map-side combine per batch).
         """
-        import shutil
-
         # keyed by filter_id: the reference trains one classifier PER
         # FILTER (fieldsGrouping(filter_id), ErrorClassifierBolt); a global
         # model over the fanned-out stream would count a line once per
@@ -577,15 +507,8 @@ class StreamingEngine:
             )
             .groupBy("filter_id", "tok", "label")
             .agg(F.expr("count(1) AS cnt"))
-            .selectExpr("*", f"{int(epoch)} AS epoch")
         )
-        # drop-epoch-then-append (see the stats sink): dynamic overwrite
-        # of an empty replay batch would keep the crashed attempt's counts
-        nb_path = os.path.join(self.base_dir, "nb_state")
-        nb_epoch_dir = os.path.join(nb_path, f"epoch={int(epoch)}")
-        if os.path.isdir(nb_epoch_dir):
-            shutil.rmtree(nb_epoch_dir)
-        toks.write.partitionBy("epoch").mode("append").parquet(nb_path)
+        self.nb_table.write(toks, epoch)
 
     #: classifier-state schema (empty reads before the first batch)
     NB_SCHEMA = (
@@ -595,7 +518,7 @@ class StreamingEngine:
     def classifier_model(self, filter_id: str | None = None) -> DataFrame:
         """Merged (filter_id, tok, label, cnt) frequency table — one model
         per filter (reference semantics); pass `filter_id` for one."""
-        df = self._read(os.path.join(self.base_dir, "nb_state"), self.NB_SCHEMA)
+        df = self.nb_table.read()
         if filter_id is not None:
             df = df.where(F.col("filter_id") == filter_id)
         return (
@@ -610,103 +533,16 @@ class StreamingEngine:
         168h table TTL analog (BigQuerySinkBolt.java:147-152) — and every
         `epoch=` directory this empties, so the directories a `tail`
         lists do not outgrow the retained data."""
-        import shutil
-
-        if not os.path.isdir(self.results_path):
-            return
-        for fdir in os.listdir(self.results_path):
-            fpath = os.path.join(self.results_path, fdir)
-            if not os.path.isdir(fpath) or not fdir.startswith("filter_id="):
-                continue
-            for edir in os.listdir(fpath):
-                epath = os.path.join(fpath, edir)
-                if not os.path.isdir(epath) or not edir.startswith("epoch="):
-                    continue
-                expired = [
-                    d for d in os.listdir(epath)
-                    if d.startswith("date=") and d[5:] < before_date
-                ]
-                for ddir in expired:
-                    shutil.rmtree(os.path.join(epath, ddir))
-                if expired:
-                    try:
-                        os.rmdir(epath)
-                    except OSError:
-                        pass  # still holds a newer date (or a batch wrote one)
-
-    def _require_quiesced(self, op: str) -> None:
-        """The rewrite sweeps are read→write-tmp→swap over plain parquet —
-        NOT transactional.  A micro-batch committing between the read and
-        the swap would be silently erased, so they refuse to run while any
-        streaming query is active.  (At scale: a transactional table
-        format, or partition-level drops like expire_results, removes the
-        restriction.)
-
-        SCOPE (documented, ADVICE r7): ``spark.streams.active`` sees only
-        queries started from THIS SparkSession — a stream attached from
-        another session or process against the same store directory is
-        invisible to the guard (and conversely, any unrelated stream in
-        this session blocks the sweep).  Single-process deployments (this
-        engine's harness and the reference's one-topology shape) are fully
-        covered; a multi-process deployment must serialize compaction
-        externally (lock file / scheduler), or move to a transactional
-        table format where the guard disappears entirely."""
-        if self.spark.streams.active:
-            raise RuntimeError(
-                f"{op}: stop streaming queries first — the table rewrite "
-                "would lose concurrently committed batches"
-            )
-
-    @staticmethod
-    def _recover_swap(live: str) -> None:
-        """Heal an interrupted `_swap_table`: if a previous sweep died
-        between its two renames, the table sits whole at `<live>.old` —
-        restore it; if it died after the second rename, `.old` is a
-        finished-with copy — remove it."""
-        import shutil
-
-        old = live + ".old"
-        if os.path.isdir(old):
-            if not os.path.isdir(live):
-                os.rename(old, live)  # died between renames: restore
-            else:
-                shutil.rmtree(old)  # died before cleanup: finish it
-
-    @staticmethod
-    def _swap_table(live: str, tmp: str) -> None:
-        """Crash-safe replacement of `live` with `tmp`: the table is NEVER
-        unrecoverable — `live` moves aside to `.old` (rename, atomic)
-        before `tmp` moves in, so a crash at any step leaves a whole copy
-        at `live` or `.old` for `_recover_swap`.  (The old
-        rmtree-then-rename order stranded the data in `.compact` if the
-        driver died between the two steps, and the NEXT sweep's overwrite
-        of tmp destroyed it permanently.)"""
-        import shutil
-
-        old = live + ".old"
-        if not os.path.isdir(tmp):
-            return
-        if os.path.isdir(live):
-            os.rename(live, old)
-        os.rename(tmp, live)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        self.results_table.drop_before("date", before_date)
 
     def expire_stats(self, before_bucket: int) -> None:
         """7-day stats purge (filter_manager.go:519-576, age check
         :541-542): compact the stats table to buckets >= `before_bucket`.
         At scale the stats table is date-partitioned like results and this
         is a partition drop; here it's a rewrite of a small table."""
-        self._recover_swap(self.stats_path)
-        if not os.path.isdir(self.stats_path):
-            return
-        self._require_quiesced("expire_stats")
-        kept = self._read(self.stats_path, self.STATS_SCHEMA).where(
-            F.col("bucket") >= before_bucket
+        self.stats_table.rewrite(
+            self.stats_table.read().where(F.col("bucket") >= before_bucket)
         )
-        tmp = self.stats_path + ".compact"
-        kept.write.partitionBy("epoch").mode("overwrite").parquet(tmp)
-        self._swap_table(self.stats_path, tmp)
 
     def compact_results(self) -> None:
         """Ring-buffer truncation: keep only the newest
@@ -717,24 +553,15 @@ class StreamingEngine:
         table is partitioned by filter_id."""
         from pyspark.sql.window import Window
 
-        self._recover_swap(self.results_path)
-        if not os.path.isdir(self.results_path):
-            return
-        self._require_quiesced("compact_results")
         w = Window.partitionBy("filter_id").orderBy(
             F.col("ts_epoch").desc(), F.col("row_id").desc()
         )
-        kept = (
+        self.results_table.rewrite(
             self.results()
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= self.max_msgs_per_filter)
             .drop("_rn")
         )
-        tmp = self.results_path + ".compact"
-        kept.write.partitionBy("filter_id", "epoch", "date").mode(
-            "overwrite"
-        ).parquet(tmp)
-        self._swap_table(self.results_path, tmp)
 
     def maintenance(self, now_unix: int) -> dict:
         """One maintenance tick = the reference's three TTL sweeps: temp
@@ -743,17 +570,16 @@ class StreamingEngine:
         (filter_manager.go:541-542)."""
         import datetime
 
-        # all-or-nothing: the stats/compact rewrites refuse to run beside
-        # an active stream, so check BEFORE the first destructive step —
-        # otherwise result partitions would already be expired when the
-        # sweep aborts half-way
-        self._require_quiesced("maintenance")
         cutoff_results = datetime.datetime.fromtimestamp(
             now_unix - 168 * 3600, tz=datetime.timezone.utc
         ).strftime("%Y-%m-%d")
-        self.expire_results(cutoff_results)
+        # all-or-nothing: the two rewrites run first, since they refuse
+        # beside an active stream before anything is dropped.  Truncating
+        # before the date drop keeps the same rows as the other order: a
+        # date cut keeps a newest-first prefix of each filter's rows.
         self.expire_stats(now_unix - 7 * 86400)
         self.compact_results()
+        self.expire_results(cutoff_results)
         return {
             "dropped_temp_filters": self.catalog.expire_temp(now_unix),
             "results_before": cutoff_results,
@@ -1035,17 +861,13 @@ class NearDupSuppressor:
     keep-one-per-candidate-cluster behavior; exact per-pair verification
     is the batch family's job).
 
-    Exactly-once: both sinks are epoch-partitioned and each epoch's
-    directory is dropped before its write, so a replayed micro-batch
-    (at-least-once redelivery after a crash between write and checkpoint
-    commit) replaces exactly its own epoch — same contract as
-    StreamingEngine.process_batch.  The pre-write delete uses local
-    filesystem calls, so ``store_path``/``out_path`` must be LOCAL paths:
-    on a scheme-prefixed URI (hdfs://, s3a://, ...) the delete would
-    silently no-op and a replayed epoch would double-append, degrading to
-    at-least-once — the constructor rejects such paths loudly (a cluster
-    deployment swaps the delete for the Hadoop FileSystem API or a
-    ``replaceWhere``-style overwrite).
+    Exactly-once: the store and the output are each an `EpochTable`
+    (``store_table``, ``out_table``; local paths only), so a replayed
+    micro-batch (at-least-once redelivery after a crash between write and
+    checkpoint commit) replaces exactly its own epoch — same contract as
+    StreamingEngine.process_batch.  A replay is checked against the store
+    without its own epoch's signatures, and a replay of an epoch
+    :meth:`compact` folded is skipped whole.
 
     100 TB shape: the store is only `(band, sig)` — 12/3 = 4 rows of a
     few bytes per kept document, NOT the text; the batch-vs-store check
@@ -1068,53 +890,16 @@ class NearDupSuppressor:
         id_col: str = "doc_id",
         text_col: str = "text",
     ) -> None:
-        for label, p in (("store_path", store_path), ("out_path", out_path)):
-            # any scheme-prefixed URI is rejected, INCLUDING file:// — the
-            # internal os.path.isdir/shutil.rmtree/os.listdir calls treat a
-            # file:// string as a nonexistent relative path, which would
-            # silently disable cross-batch suppression, epoch replacement,
-            # and TTL expiry (plain local paths are the supported form)
-            if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", p):
-                raise ValueError(
-                    f"NearDupSuppressor {label}={p!r}: exactly-once epoch "
-                    "replacement deletes via the local filesystem; a "
-                    "scheme-prefixed URI (even file://) would silently "
-                    "degrade to at-least-once duplication and disable "
-                    "store reads. Use a plain local path."
-                )
         self.spark = spark
         self.store_path = store_path
         self.out_path = out_path
+        self.store_table = EpochTable(spark, store_path, ["epoch"])
+        self.out_table = EpochTable(spark, out_path, ["epoch"])
         self.num_hashes = num_hashes
         self.rows_per_band = rows_per_band
         self.n = n
         self.id_col = id_col
         self.text_col = text_col
-
-    #: sidecar recording the highest epoch folded by :meth:`compact`
-    #: (underscore name: Spark's parquet reader ignores it — the same
-    #: convention as the StreamingIvfIndexer watermark)
-    _COMPACT_MARK = "_compacted_through.json"
-
-    def _read_store(self) -> DataFrame | None:
-        StreamingEngine._recover_swap(self.store_path)
-        if not os.path.isdir(self.store_path):
-            return None
-        try:
-            return self.spark.read.parquet(self.store_path)
-        except AnalysisException:
-            return None  # directory exists but holds no parquet yet
-
-    def compacted_through(self) -> int:
-        """Highest epoch already folded by :meth:`compact` (-1 if
-        never compacted)."""
-        import json as _json
-
-        try:
-            with open(os.path.join(self.store_path, self._COMPACT_MARK)) as fh:
-                return int(_json.load(fh)["epoch"])
-        except (FileNotFoundError, ValueError, KeyError, TypeError):
-            return -1
 
     def compact(self) -> None:
         """Fold every store epoch into ONE partition keyed by the
@@ -1133,70 +918,12 @@ class NearDupSuppressor:
         wholesale; TTL granularity coarsens to the compaction interval,
         the standard segment-merge trade.
 
-        Exactly-once: crash-safe via the pipeline swap discipline
-        (live → `.old` → in, healed on every read), with the high-water
-        sidecar riding inside the new table so data and watermark
-        publish atomically; a REPLAYED epoch at or below the watermark
-        is skipped whole in process_batch — its epoch dir no longer
-        exists, so the drop-then-append upgrade cannot see it, and the
-        folded partition must never be deleted by a replay of the
-        epoch it is keyed on.  Quiescence is ENFORCED (same check as
-        StreamingEngine's rewrite sweeps): a micro-batch committing
-        between the store read and the swap would be silently erased.
-
-        The watermark pins the CHECKPOINT LINEAGE: foreachBatch epoch
-        ids restart at 0 under a fresh checkpoint, and the replay skip
-        would then silently drop every new batch — documents, not just
-        store rows — until epochs pass the old watermark.  A re-pointed
-        stream therefore needs fresh store/out dirs (or delete the
-        sidecar after wiping the epochs), exactly like the
-        StreamingIvfIndexer; note that dir reuse under a fresh
-        checkpoint was ALREADY unsafe pre-compaction (colliding epoch
-        ids replace earlier epochs' output wholesale)."""
-        import json as _json
-
-        if self.spark.streams.active:
-            raise RuntimeError(
-                "NearDupSuppressor.compact: stop streaming queries "
-                "first — a micro-batch committing between the store "
-                "read and the swap would be silently erased"
-            )
-        StreamingEngine._recover_swap(self.store_path)
-        if not os.path.isdir(self.store_path):
-            return
-        try:
-            df = self.spark.read.parquet(self.store_path)
-        except AnalysisException:
-            return
-        if "epoch" not in df.columns:
-            return  # read-only index store (Eval subclass): nothing epoch'd
-        hi = df.agg(F.max("epoch").alias("hi")).collect()[0].hi
-        if hi is None:
-            return
-        # size the consolidated segment to ~128 MB files — writing with
-        # the union's task parallelism would reproduce the small-files
-        # tree the compaction exists to remove
-        on_disk = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(self.store_path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-on_disk // (128 << 20)))  # ceil div
-        tmp = self.store_path + ".compact"
-        (
-            df.drop("epoch")
-            .repartition(int(n_files))
-            .withColumn("epoch", F.lit(int(hi)).cast("int"))
-            .write.partitionBy("epoch")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        with open(os.path.join(tmp, self._COMPACT_MARK), "w") as fh:
-            _json.dump(
-                {"epoch": max(int(hi), self.compacted_through())}, fh
-            )
-        StreamingEngine._swap_table(self.store_path, tmp)
+        Exactly-once: `EpochTable.fold` (crash-safe swap, refused beside
+        an active stream, the highest folded epoch marked in the same
+        rename); process_batch skips a replay of a folded epoch whole.
+        A re-pointed stream (fresh checkpoint, epoch ids from 0) needs
+        fresh store/out dirs, as every epoch-idempotent sink does."""
+        self.store_table.fold()
 
     def _signatures(self, docs: DataFrame) -> DataFrame:
         """(doc_id, band, sig) rows for a batch — the suppression key
@@ -1239,43 +966,26 @@ class NearDupSuppressor:
         )
         return in_batch_dup.unionByName(vs_store)
 
-    def _epoch_roots(self) -> tuple[str, ...]:
-        """Sinks whose epoch partition is replaced on a replayed batch.
-        Index-backed subclasses (read-only store) return only out_path."""
-        return (self.store_path, self.out_path)
-
     def _update_store(self, sigs: DataFrame, novel: DataFrame, epoch: int) -> None:
         """Accumulate the kept docs' signatures into the store.
         Index-backed subclasses override to a no-op (their store is a
         static index written once, never grown by the stream)."""
-        (
+        self.store_table.write(
             sigs.join(novel.select("doc_id"), "doc_id", "left_semi")
-            .select("band", "sig", "doc_id")
-            .withColumn("epoch", F.lit(epoch))
-            .write.partitionBy("epoch")
-            .mode("append")
-            .parquet(self.store_path)
+            .select("band", "sig", "doc_id"),
+            epoch,
         )
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import shutil
+        from pyspark.sql.types import IntegerType
 
         epoch = int(epoch_id)
-        if epoch <= self.compacted_through():
-            # redelivered batch already folded by compact(): its own
-            # epoch dir is gone (merged into the consolidated segment),
-            # so the drop-then-append upgrade cannot replace it — and
-            # the folded partition is KEYED on the highest folded epoch,
-            # which a replay of that epoch would otherwise delete.  The
-            # original write fully committed before compaction ran
-            # (compact requires quiescence), so skipping is the
-            # exactly-once answer — same rule as the IVF indexer.
+        if epoch <= self.store_table.folded_through():
+            # a redelivery of an epoch compact() folded: its rows are in
+            # the folded partition (compact ran after the batch
+            # committed), which a replay of the epoch it is keyed on would
+            # delete — skipped whole, out included
             return
-        for root in self._epoch_roots():
-            d = os.path.join(root, f"epoch={epoch}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-
         docs = batch_df.select(
             F.col(self.id_col).alias("doc_id"),
             F.col(self.text_col).alias("text"),
@@ -1283,22 +993,22 @@ class NearDupSuppressor:
         sigs = self._signatures(docs)
         sigs.persist()
         try:
-            dup_ids = self._dup_ids(sigs, self._read_store())
+            store = self.store_table.read()
+            if store is not None and "epoch" in store.columns:
+                # a replay must not match its own first attempt's
+                # signatures; the pruned partition is never opened, so
+                # the store write below may drop it
+                store = store.where(F.col("epoch") != epoch)
+            dup_ids = self._dup_ids(sigs, store)
             novel = docs.join(dup_ids.distinct(), "doc_id", "left_anti")
-            novel_out = novel.withColumn("epoch", F.lit(epoch).cast("int"))
-            (
-                novel_out
-                .write.partitionBy("epoch")
-                .mode("append")
-                .parquet(self.out_path)
-            )
+            self.out_table.write(novel, epoch)
             # persist the full output schema once so kept() can return a
             # correctly-typed empty frame before the first batch is
             # readable again (underscore-prefixed → invisible to readers)
             schema_file = os.path.join(self.out_path, "_kept_schema.json")
             if not os.path.exists(schema_file):
                 with open(schema_file, "w") as fh:
-                    fh.write(novel_out.schema.json())
+                    fh.write(novel.schema.add("epoch", IntegerType(), False).json())
             self._update_store(sigs, novel, epoch)
         finally:
             sigs.unpersist()
@@ -1321,35 +1031,24 @@ class NearDupSuppressor:
         columns don't hit an AnalysisException on the empty table); if no
         batch has ever flowed, fall back to the id/epoch contract
         columns, matching the guarded readers on StreamingEngine."""
-        try:
-            return self.spark.read.parquet(self.out_path)
-        except AnalysisException:
-            schema_file = os.path.join(self.out_path, "_kept_schema.json")
-            if os.path.exists(schema_file):
-                import json as _json
+        df = self.out_table.read()
+        if df is not None:
+            return df
+        schema_file = os.path.join(self.out_path, "_kept_schema.json")
+        if os.path.exists(schema_file):
+            import json as _json
 
-                from pyspark.sql.types import StructType
+            from pyspark.sql.types import StructType
 
-                with open(schema_file) as fh:
-                    schema = StructType.fromJson(_json.load(fh))
-                return self.spark.createDataFrame([], schema)
-            # output columns are always aliased to doc_id in process_batch
-            return self.spark.createDataFrame([], "doc_id LONG, epoch INT")
+            with open(schema_file) as fh:
+                schema = StructType.fromJson(_json.load(fh))
+            return self.spark.createDataFrame([], schema)
+        # output columns are always aliased to doc_id in process_batch
+        return self.spark.createDataFrame([], "doc_id LONG, epoch INT")
 
     def expire(self, before_epoch: int) -> None:
         """Retention: drop store epochs older than the dedup horizon."""
-        import shutil
-
-        if not os.path.isdir(self.store_path):
-            return
-        for name in os.listdir(self.store_path):
-            if name.startswith("epoch="):
-                try:
-                    e = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if e < before_epoch:
-                    shutil.rmtree(os.path.join(self.store_path, name))
+        self.store_table.drop_before("epoch", int(before_epoch))
 
 
 class WinnowDupSuppressor(NearDupSuppressor):
@@ -1479,9 +1178,8 @@ class EvalContaminationSuppressor(NearDupSuppressor):
     Three deliberate departures from the near-dup parent, each a hook:
 
     - the "store" is a read-only shingle INDEX written once from the
-      benchmark corpus (`write_eval_index`) — `_update_store` is a no-op
-      and `_epoch_roots` excludes it, so the stream can never grow the
-      index (growing it would silently turn decontamination into
+      benchmark corpus (`write_eval_index`) — `_update_store` is a no-op,
+      so the stream never writes, drops or grows the index (growing it would silently turn decontamination into
       stream-self-dedup);
     - suppression is ONLY against the index: two training docs sharing a
       phrase is not contamination, so there is no in-batch rule;
@@ -1568,9 +1266,6 @@ class EvalContaminationSuppressor(NearDupSuppressor):
                 "would silently pass; rebuild the index or match n"
             )
         self._index_n_validated = True
-
-    def _epoch_roots(self) -> tuple[str, ...]:
-        return (self.out_path,)  # the index is never epoch-replaced
 
     def _update_store(self, sigs: DataFrame, novel: DataFrame, epoch: int) -> None:
         return  # read-only index: the stream never grows it

@@ -7,6 +7,10 @@ from pyspark.sql import functions as F
 
 from cloudpelican_lsd_spark.catalog import FilterCatalog
 from cloudpelican_lsd_spark.streaming import pipeline as sp
+from cloudpelican_lsd_spark.streaming.ann_index import (
+    StreamingIvfIndexer,
+    StreamingIvfPqIndexer,
+)
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
@@ -795,27 +799,31 @@ def test_windowed_topk_stream_heavy_hitters(spark, tmp_path):
     assert top[(b0 + 60, 1)] == ("beta", 7) and top[(b0 + 60, 2)] == ("gamma", 1)
 
 
-def test_near_dup_suppressor_rejects_remote_uris(spark, tmp_path):
-    """Exactly-once epoch replacement deletes via the local filesystem —
-    a scheme-prefixed store/out path would silently degrade to
-    at-least-once, so the constructor must reject it loudly (ADVICE r3)."""
-    import pytest
-
-    from cloudpelican_lsd_spark.streaming import pipeline as sp
-
-    # file:// included: os.path.isdir/rmtree treat it as a nonexistent
-    # relative path, silently disabling suppression + epoch replacement
-    for bad in (
-        "hdfs://nn:8020/dedup/store",
-        "s3a://bucket/dedup/store",
-        f"file://{tmp_path}/store",
-    ):
-        with pytest.raises(ValueError, match="at-least-once"):
-            sp.NearDupSuppressor(spark, bad, str(tmp_path / "out"))
-        with pytest.raises(ValueError, match="at-least-once"):
-            sp.NearDupSuppressor(spark, str(tmp_path / "store"), bad)
-    # plain local paths stay accepted
-    sp.NearDupSuppressor(spark, str(tmp_path / "s"), str(tmp_path / "o"))
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda spark, p, tmp: sp.StreamingEngine(spark, FilterCatalog(), p),
+        lambda spark, p, tmp: sp.NearDupSuppressor(spark, p, f"{tmp}/out"),
+        lambda spark, p, tmp: sp.NearDupSuppressor(spark, f"{tmp}/store", p),
+        lambda spark, p, tmp: sp.WinnowDupSuppressor(spark, p, f"{tmp}/out"),
+        lambda spark, p, tmp: StreamingIvfIndexer(spark, p),
+        lambda spark, p, tmp: StreamingIvfPqIndexer(spark, p),
+    ],
+    ids=[
+        "StreamingEngine", "NearDupSuppressor-store", "NearDupSuppressor-out",
+        "WinnowDupSuppressor", "StreamingIvfIndexer", "StreamingIvfPqIndexer",
+    ],
+)
+def test_sinks_reject_remote_uris(spark, tmp_path, make):
+    """Every sink's epoch drops and swaps are local filesystem calls,
+    which a scheme-prefixed path (file:// included: os.path sees a
+    nonexistent relative path) would turn into silent no-ops, degrading
+    replay to at-least-once duplication: every constructor rejects one
+    loudly and accepts a plain local path."""
+    for bad in ("hdfs://nn:8020/x", "s3a://bucket/x", f"file://{tmp_path}/x"):
+        with pytest.raises(ValueError, match="local filesystem path"):
+            make(spark, bad, str(tmp_path))
+    make(spark, str(tmp_path / "local"), str(tmp_path))
 
 
 def test_near_dup_suppressor_batches_and_replay(spark, tmp_path):
@@ -899,7 +907,7 @@ def test_near_dup_suppressor_store_compaction(spark, tmp_path):
     sup.compact()
     after = files(store)
     assert after < before
-    assert sup.compacted_through() == 3
+    assert sup.store_table.folded_through() == 3
     # one consolidated epoch partition, keyed on the max folded epoch
     assert [d for d in _os.listdir(store) if d.startswith("epoch=")] == [
         "epoch=3"
@@ -911,12 +919,17 @@ def test_near_dup_suppressor_store_compaction(spark, tmp_path):
     )
     assert 9 not in {r.doc_id for r in sup.kept().collect()}
 
-    # replay of a folded epoch: skipped whole — store AND out intact
+    # replay of a folded epoch: skipped whole — store AND out intact,
+    # also when it arrives with the store stranded at `.old` by an
+    # interrupted swap (the skip reads the mark of the healed store)
     n_store, n_out = files(store), files(out)
+    signatures = sorted(map(tuple, sup.store_table.read().collect()))
+    _os.rename(store, store + ".old")
     sup.process_batch(
         spark.createDataFrame([(3, texts[3])], "doc_id long, text string"), 3
     )
     assert files(store) == n_store and files(out) == n_out
+    assert sorted(map(tuple, sup.store_table.read().collect())) == signatures
     assert {r.doc_id for r in sup.kept().collect()} == {0, 1, 2, 3}
 
     # retention after compaction: the horizon passing the consolidated
@@ -998,7 +1011,7 @@ def test_near_dup_suppressor_store_probe_never_shuffles_store(spark, tmp_path):
         [(2, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    dup = sup._dup_ids(sup._signatures(b2), sup._read_store())
+    dup = sup._dup_ids(sup._signatures(b2), sup.store_table.read())
     dup.collect()
     plan = dup._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -1073,15 +1086,6 @@ def test_replay_with_empty_batch_drops_stale_epoch_state(spark, tmp_path):
     assert (
         eng.classifier_model().count() == 0
     ), "stale classifier epoch survived replay"
-
-
-def test_engine_rejects_remote_base_dir(spark):
-    cat = FilterCatalog()
-    import pytest
-
-    for bad in ("hdfs://nn/pelican", "s3a://bucket/x", "file:///tmp/x"):
-        with pytest.raises(ValueError, match="local filesystem"):
-            sp.StreamingEngine(spark, cat, bad)
 
 
 def test_process_batch_rejects_epoch_beyond_packing(spark, tmp_path):
@@ -1174,6 +1178,85 @@ def test_read_paths_heal_interrupted_swap(spark, tmp_path):
     assert eng.stats().count() > 0, "stats() did not heal the swap"
     assert not os.path.isdir(eng.results_path + ".old")
     assert not os.path.isdir(eng.stats_path + ".old")
+
+
+def test_batch_after_interrupted_swap_keeps_history(spark, tmp_path):
+    """A batch landing while a sweep's swap is interrupted (both tables
+    whole at `.old`, nothing live) heals before it writes: it appends to
+    the restored history, which a later read would otherwise delete as a
+    finished swap's leftover."""
+    cat = FilterCatalog()
+    cat.create("errors", "error")
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_swapwrite"))
+
+    def batch(minute):
+        raw = spark.createDataFrame(
+            [(f"2024-02-01T10:0{minute}:00.000+00:00 h app: error n={minute}",)],
+            "_raw STRING",
+        )
+        return sp.parse_stream(raw)
+
+    eng.process_batch(batch(0), epoch_id=0)
+    os.rename(eng.results_path, eng.results_path + ".old")
+    os.rename(eng.stats_path, eng.stats_path + ".old")
+    eng.process_batch(batch(1), epoch_id=1)
+    assert eng.results().count() == 2
+    b0 = 1706781600  # 2024-02-01T10:00:00Z
+    assert {r.bucket for r in eng.stats().collect()} == {b0, b0 + 60}
+    assert not os.path.isdir(eng.results_path + ".old")
+    assert not os.path.isdir(eng.stats_path + ".old")
+
+
+def test_suppressor_replay_after_interrupted_swap(spark, tmp_path):
+    """A replayed epoch arriving while the store is stranded at `.old`
+    is checked against the restored store WITHOUT its own first
+    attempt's signatures — else every document of the epoch matches
+    itself and is suppressed."""
+    store, out = str(tmp_path / "store"), str(tmp_path / "out")
+    sup = sp.NearDupSuppressor(spark, store, out)
+    schema = "doc_id long, text string"
+    sup.process_batch(
+        spark.createDataFrame(
+            [(0, "alpha beta gamma delta epsilon zeta eta theta")], schema
+        ),
+        0,
+    )
+    b1 = spark.createDataFrame(
+        [(1, "one two three four five six seven eight nine")], schema
+    )
+    sup.process_batch(b1, 1)
+    assert sorted(r.doc_id for r in sup.kept().collect()) == [0, 1]
+    os.rename(store, store + ".old")
+    sup.process_batch(b1, 1)
+    assert sorted(r.doc_id for r in sup.kept().collect()) == [0, 1]
+
+
+def test_replay_discards_a_dead_writers_uncommitted_output(spark, tmp_path):
+    """A driver killed inside a write's job commit leaves task output
+    under `_temporary/0` that the commit had not moved yet; the next
+    write's job commit merges every task directory it finds there, so a
+    replay would land the dead attempt's rows beside its own."""
+    import shutil
+
+    cat = FilterCatalog()
+    fid = cat.create("errors", "error").id
+    eng = sp.StreamingEngine(spark, cat, str(tmp_path / "engine_deadwriter"))
+    raw = spark.createDataFrame(
+        [(f"2024-02-01T10:00:0{i}.000+00:00 h app: error n={i}",) for i in range(3)],
+        "_raw STRING",
+    )
+    eng.process_batch(sp.parse_stream(raw), epoch_id=0)
+    # the dead attempt of epoch 1: a committed task, its files not moved
+    task = os.path.join(
+        eng.results_path, "_temporary", "0", "task_202401010000_0007_m_000000"
+    )
+    shutil.copytree(
+        os.path.join(eng.results_path, f"filter_id={fid}", "epoch=0"),
+        os.path.join(task, f"filter_id={fid}", "epoch=1"),
+    )
+    eng.process_batch(sp.parse_stream(raw), epoch_id=1)
+    assert eng.results().where("epoch = 1").count() == 3
+    assert eng.results().count() == 6
 
 
 def test_suppressor_kept_full_schema_after_first_batch(spark, tmp_path):
@@ -1378,10 +1461,6 @@ def test_streaming_ivf_indexer_epochs_replay_and_retrieval(spark, sf_dir, tmp_pa
     with _pytest.raises(ValueError, match="reserved"):
         idx.process_batch(b2, epoch_id=-1)
 
-    # scheme-prefixed paths rejected like every other streaming sink
-    with _pytest.raises(ValueError, match="local"):
-        StreamingIvfIndexer(spark, "file:///tmp/x")
-
 
 def test_streaming_ivf_indexer_e2e_file_stream(spark, sf_dir, tmp_path):
     """End-to-end through a real streaming query: JSONL vector stream →
@@ -1479,13 +1558,11 @@ def test_streaming_ivfpq_indexer_epochs_replay_and_retrieval(
         same_cell = [a for a, c in got if cell_of[c] == cell_of[origin]]
         assert origin_adc == min(same_cell)
 
-    # bootstrap epoch reserved; scheme URIs rejected; bad m rejected
+    # bootstrap epoch reserved; bad m rejected
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="reserved"):
         idx.process_batch(b2, epoch_id=-1)
-    with _pytest.raises(ValueError, match="local"):
-        StreamingIvfPqIndexer(spark, "file:///tmp/x")
     with _pytest.raises(ValueError, match="divide dim"):
         StreamingIvfPqIndexer(spark, str(tmp_path / "bad"), m=7)
 
@@ -1573,9 +1650,9 @@ def test_streaming_index_compaction_folds_epochs_and_skips_replays(
         )
 
     files_before = n_files(idx.assign_path)
-    assert idx.compacted_through() == -1
+    assert idx.assign_table.folded_through() == -1
     idx.compact()
-    assert idx.compacted_through() == 1
+    assert idx.assign_table.folded_through() == 1
     after_rows = {
         (r.vec_id, r.cent_id) for r in idx.assignments().collect()
     }
@@ -1593,7 +1670,7 @@ def test_streaming_index_compaction_folds_epochs_and_skips_replays(
     assert idx.assignments().count() == len(before_rows)
     # compacting again with nothing new is a no-op that keeps the mark
     idx.compact()
-    assert idx.compacted_through() == 1
+    assert idx.assign_table.folded_through() == 1
     # new epochs append normally after compaction
     b3 = emb.where((F.col("vec_id") >= 130) & (F.col("vec_id") < 135)).select(
         (F.col("vec_id") + 500000).alias("vec_id"), "embedding"
@@ -1629,7 +1706,7 @@ def test_streaming_ivfpq_compaction_inherited(spark, sf_dir, tmp_path):
     )
     before = {(r.qid, r.cid, r.adc) for r in idx.topk(queries, 2, 5).collect()}
     idx.compact()
-    assert idx.compacted_through() == 0
+    assert idx.assign_table.folded_through() == 0
     idx.process_batch(b1, epoch_id=0)  # folded replay: skipped
     assert idx.assignments().count() == n
     after = {(r.qid, r.cid, r.adc) for r in idx.topk(queries, 2, 5).collect()}
@@ -1720,8 +1797,6 @@ def test_winnow_dup_suppressor_param_validation(spark, tmp_path):
         sp.WinnowDupSuppressor(
             spark, str(tmp_path / "s2"), str(tmp_path / "o2"), w=0
         )
-    with _pytest.raises(ValueError, match="scheme-prefixed|local path"):
-        sp.WinnowDupSuppressor(spark, "s3a://bucket/x", str(tmp_path / "o3"))
 
 
 def test_eval_contamination_suppressor(spark, tmp_path):
@@ -2004,8 +2079,8 @@ def test_match_snapshot_follows_catalog_changes(spark, tmp_path):
 
     def per_filter(epoch):
         res = eng.results().where(F.col("epoch") == epoch)
-        st = eng._read(eng.stats_path, eng.STATS_SCHEMA)
-        nb = eng._read(os.path.join(eng.base_dir, "nb_state"), eng.NB_SCHEMA)
+        st = eng.stats_table.read()
+        nb = eng.nb_table.read()
         return (
             {
                 r.filter_id: r["count"]

@@ -261,9 +261,10 @@ def main() -> None:
         )
 
     # -- streaming-path stress (VERDICT r6 #5): the suppressor and the
-    # streaming indexer have correctness tests but had no scale
-    # measurement beyond stream_bench's lines/s.  Both probes below use
-    # REAL on-disk stores (tempdirs), not in-memory stand-ins.
+    # streaming indexer have correctness tests but no other scale
+    # measurement (perfbench's stream-live workload drives the
+    # StreamingEngine only).  Both probes below use REAL on-disk stores
+    # (tempdirs), not in-memory stand-ins.
     import shutil
     import tempfile
 
