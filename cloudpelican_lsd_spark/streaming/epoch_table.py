@@ -41,6 +41,22 @@ The replay algorithm:
   the checkpoint lineage: epoch ids restart at 0 under a fresh
   checkpoint, so a re-pointed stream needs fresh sink directories.
 
+Reads are kept per file set.  A live tail polls one filter every 200 ms
+while its files change once per micro-batch, so :meth:`read` hands back
+the frame it built last for the same ``key`` for as long as the files
+Spark would list stay the same: the key is the sorted (path, size) of
+every data file under the read root, walked in Python with Spark's
+listing rule (names starting with ``.``, and ``_`` names without ``=``,
+are skipped).  A hit makes no py4j round trip, and a plan built on the
+kept frame keeps its analysis and physical plan across collects.  Spark's
+part files are uniquely named and never rewritten in place, so every
+change a read must see (an epoch appended or replaced, a rewrite's swap,
+a retention drop) changes the key, whoever makes it: a second engine, a
+second process or a bare ``rmtree``.  A counter that this class bumps on
+its own writes would miss all three.  The walk runs before Spark lists,
+so a write racing a miss leaves a key older than the frame, and the next
+read misses again rather than serving a frame without the new files.
+
 Every step is a local filesystem call, so ``path`` must be a plain local
 path: on a scheme-prefixed URI (``hdfs://``, ``s3a://``, even
 ``file://``) ``os.path`` sees a nonexistent relative path, and the drop
@@ -75,6 +91,31 @@ def _partition_dir(column: str, value: str) -> str:
     return f"{column}={escaped}"
 
 
+def _data_files(root: str) -> tuple[tuple[str, int], ...]:
+    """The sorted (path, size) of every file under ``root`` that Spark's
+    file listing reads: it skips names starting with ``.``, and names
+    starting with ``_`` unless they hold ``=`` (a partition directory)."""
+    found, dirs = [], [root]
+    while dirs:
+        try:
+            entries = list(os.scandir(dirs.pop()))
+        except (FileNotFoundError, NotADirectoryError):
+            continue  # dropped or swapped away meanwhile
+        for e in entries:
+            if e.name.startswith(".") or (
+                e.name.startswith("_") and "=" not in e.name
+            ):
+                continue
+            try:
+                if e.is_dir():
+                    dirs.append(e.path)
+                else:
+                    found.append((e.path, e.stat().st_size))
+            except FileNotFoundError:
+                continue
+    return tuple(sorted(found))
+
+
 class EpochTable:
     """One epoch-partitioned parquet table at a local ``path``.
 
@@ -105,6 +146,10 @@ class EpochTable:
         self._columns = (
             [c.split()[0] for c in schema.split(",")] if schema else None
         )
+        #: one slot per read key: (the file set, the frame read from it).
+        #: Pollers on other threads share it without a lock: a slot is
+        #: replaced whole, so a reader that loses a race only reads again.
+        self._reads: dict[str | None, tuple[tuple, DataFrame | None]] = {}
 
     # -- sink ----------------------------------------------------------------
 
@@ -135,23 +180,39 @@ class EpochTable:
         read), healed first.  With a declared schema: its columns in its
         order, and a typed empty frame when there is no data (before the
         first batch, after a purge).  Without one: the inferred frame, or
-        None when there is no data."""
+        None when there is no data.
+
+        The same frame object comes back for as long as the key's file
+        set is unchanged (see the module docstring); each key keeps one
+        slot, replaced on the first read that finds other files."""
         self._heal()
         path = self.path
-        reader = self.spark.read
         if key is not None:
             path = os.path.join(path, _partition_dir(self.partition_by[0], key))
-            reader = reader.option("basePath", self.path)
-        if self.schema:
-            reader = reader.schema(self.schema)
-        # the isdir spares a poll of an empty filter Spark's missing-path
-        # error; the except covers a directory a swap moves meanwhile
-        if os.path.isdir(path):
+        files = _data_files(path)
+        kept = self._reads.get(key)
+        if kept is not None and kept[0] == files:
+            return kept[1]
+        if not files:
+            df = self._empty()
+        else:
+            reader = self.spark.read
+            if key is not None:
+                reader = reader.option("basePath", self.path)
+            if self.schema:
+                reader = reader.schema(self.schema)
             try:
                 df = reader.parquet(path)
-                return df.select(*self._columns) if self.schema else df
             except AnalysisException:
-                pass
+                # a swap moved the directory away after the walk: answer
+                # empty, keep nothing
+                return self._empty()
+            if self.schema:
+                df = df.select(*self._columns)
+        self._reads[key] = (files, df)
+        return df
+
+    def _empty(self) -> DataFrame | None:
         return self.spark.createDataFrame([], self.schema) if self.schema else None
 
     def folded_through(self) -> int:

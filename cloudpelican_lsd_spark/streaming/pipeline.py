@@ -43,6 +43,12 @@ change per batch:
   text, normalization and event-time extraction by the shared builders
   of `functions.parse`).
 
+The read side follows the same rule: a store's files change once per
+micro-batch, while a live tail polls every 200 ms.  `EpochTable.read`
+hands back the same frame while the files it would list are unchanged,
+and `tail`/`stats` keep the plan built on that frame
+(`StreamingEngine._plans`), so a repeated poll runs only its Spark job.
+
 Checkpointing gives at-least-once delivery (the reference's Storm acking
 ≈ Main.java:159-164); every sink here — the three tables above and the
 near-duplicate suppressor's store and output — is an
@@ -224,6 +230,9 @@ class StreamingEngine:
         #: the one filter-set snapshot slot: ((id, name, regex) per
         #: filter, the matched projection built for that set)
         self._match: tuple[tuple, list[Column]] | None = None
+        #: the tail and stats plans, one slot per (kind, filter id): (the
+        #: store frame it was built on, its argument, the plan)
+        self._plans: dict[tuple, tuple[DataFrame, object, DataFrame]] = {}
 
     # -- batch hook ---------------------------------------------------------
 
@@ -385,20 +394,45 @@ class StreamingEngine:
         return self.results_table.read(filter_id)
 
     def tail(self, filter_id: str, n: int = 100) -> DataFrame:
-        """Live tail: last n rows for a filter (cloudpelican-lsd.go:630-636)."""
-        return tail_last_n(self.results(filter_id), n, tiebreak_col="row_id")
+        """Live tail: last n rows for a filter (cloudpelican-lsd.go:630-636).
+
+        A poll that finds the filter's files unchanged gets the frame of
+        the previous poll back: `results` hands back the same store frame
+        (`EpochTable.read`), so the plan built on it is kept, and its
+        collect runs the one Spark job with no py4j round trip, analysis
+        or planning before it."""
+        return self._kept_plan(
+            ("tail", filter_id), self.results(filter_id), n,
+            lambda base: tail_last_n(base, n, tiebreak_col="row_id"),
+        )
 
     #: stats-table schema (empty reads before the first batch / after purge)
     STATS_SCHEMA = "filter_id STRING, bucket BIGINT, metric INT, cnt BIGINT, epoch INT"
 
     def stats(self, filter_id: str | None = None) -> DataFrame:
-        """Merged stats view: sum the appended partials (merge-on-read)."""
-        df = self.stats_table.read()
-        if filter_id is not None:
-            df = df.where(F.col("filter_id") == filter_id)
-        return df.groupBy("filter_id", "metric", "bucket").agg(
-            F.sum("cnt").cast("long").alias("cnt")
+        """Merged stats view: sum the appended partials (merge-on-read).
+        Kept like `tail`'s plan while the stats table's files are
+        unchanged."""
+
+        def merged(df: DataFrame) -> DataFrame:
+            if filter_id is not None:
+                df = df.where(F.col("filter_id") == filter_id)
+            return df.groupBy("filter_id", "metric", "bucket").agg(
+                F.sum("cnt").cast("long").alias("cnt")
+            )
+
+        return self._kept_plan(
+            ("stats", filter_id), self.stats_table.read(), None, merged
         )
+
+    def _kept_plan(self, slot: tuple, base: DataFrame, arg, build) -> DataFrame:
+        """`build(base)`, kept in the one slot `slot` and rebuilt only when
+        `base` is another frame object (the store's files changed) or
+        `arg` differs."""
+        kept = self._plans.get(slot)
+        if kept is None or kept[0] is not base or kept[1] != arg:
+            kept = self._plans[slot] = (base, arg, build(base))
+        return kept[2]
 
     # -- analytics reads ------------------------------------------------------
 

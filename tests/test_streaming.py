@@ -2203,3 +2203,257 @@ def test_is_err_parity_with_the_keyword_predicates(spark, tmp_path):
         r.cnt for r in eng.stats(every.id).collect() if r.metric == sp.METRIC_ERROR
     )
     assert n_errors == stats_err == sum(want)
+
+
+# -- the stream-store read path: one kept read per file set ---------------
+
+
+def _live_batch(spark, epoch, n=10, day="01", word="error"):
+    """`n` lines of epoch `epoch`: every one matches `errors`, every
+    other one `even`."""
+    raw = spark.createDataFrame(
+        [
+            (
+                f"2024-02-{day}T10:{epoch:02d}:{i:02d}.000+00:00 h app:"
+                f" {word} n={i} {('odd', 'even')[i % 2 == 0]}",
+            )
+            for i in range(n)
+        ],
+        "_raw STRING",
+    )
+    return sp.parse_stream(raw)
+
+
+def _polls(eng, fid):
+    """What a client sees: tail, stats and results, sorted, `row_id`
+    included."""
+    return (
+        sorted(eng.tail(fid, 100).collect()),
+        sorted(eng.stats(fid).collect()),
+        sorted(eng.results(fid).collect()),
+        sorted(eng.results().collect()),
+    )
+
+
+def test_repeated_poll_on_unchanged_store_makes_no_py4j_call(spark, tmp_path):
+    """A poll that finds the store's files unchanged reuses the kept
+    frames: `tail`, `stats` and `results` make no py4j round trip before
+    their collect, and answer what the first poll answered."""
+    eng, cat = _engine_with_batches(spark, str(tmp_path / "engine_hit"), 4)
+    fid = cat.get("even").id
+    first = _polls(eng, fid)
+    assert _py4j_calls_of(lambda: eng.tail(fid, 100)) == 0
+    assert _py4j_calls_of(lambda: eng.stats(fid)) == 0
+    assert _py4j_calls_of(lambda: eng.results(fid)) == 0
+    assert eng.tail(fid, 100) is eng.tail(fid, 100)
+    assert _polls(eng, fid) == first
+    # another n is another plan in the filter's one tail slot
+    assert eng.tail(fid, 3).count() == 3
+    assert eng.tail(fid, 100).count() == len(first[0])
+
+
+def test_kept_reads_follow_every_store_change(spark, tmp_path):
+    """After each change to the stores, whoever makes it, the next
+    `tail`, `stats` and `results` equal a fresh read with no kept frame
+    (a new engine on the same directory)."""
+    import shutil
+
+    cat = FilterCatalog()
+    cat.create("errors", "error")
+    fid = cat.create("even", "even").id
+    base = str(tmp_path / "engine_matrix")
+    eng = sp.StreamingEngine(spark, cat, base, max_msgs_per_filter=12)
+    for e in range(3):
+        eng.process_batch(_live_batch(spark, e, day=("01", "03")[e % 2]), e)
+
+    def fresh():
+        return sp.StreamingEngine(spark, cat, base, max_msgs_per_filter=12)
+
+    def drop_epoch_dirs(epoch):
+        doomed = [
+            os.path.join(dp, f"epoch={epoch}")
+            for table in (eng.results_path, eng.stats_path)
+            for dp, dn, _fn in os.walk(table)
+            if f"epoch={epoch}" in dn
+        ]
+        assert doomed
+        for d in doomed:
+            shutil.rmtree(d)
+
+    def interrupted_swap():
+        # a stats sweep died between its two renames (the whole table at
+        # .old); a results sweep died before removing its .old
+        os.rename(eng.stats_path, eng.stats_path + ".old")
+        shutil.copytree(eng.results_path, eng.results_path + ".pre")
+        fresh().compact_results()
+        os.rename(eng.results_path + ".pre", eng.results_path + ".old")
+
+    sup = sp.NearDupSuppressor(
+        spark, str(tmp_path / "sup_store"), str(tmp_path / "sup_out")
+    )
+    docs = "doc_id LONG, text STRING"
+    for e, text in enumerate(["alpha beta gamma delta", "one two three four"]):
+        sup.process_batch(spark.createDataFrame([(e, text)], docs), e)
+
+    def fold():
+        sup.compact()
+        fresh_sup = sp.NearDupSuppressor(spark, sup.store_path, sup.out_path)
+        assert sorted(sup.store_table.read().collect()) == sorted(
+            fresh_sup.store_table.read().collect()
+        )
+        assert sorted(sup.kept().collect()) == sorted(fresh_sup.kept().collect())
+
+    changes = [
+        ("new epoch", lambda: eng.process_batch(_live_batch(spark, 3), 3)),
+        (
+            "replay of an epoch",
+            lambda: eng.process_batch(_live_batch(spark, 3, n=6, word="fault error"), 3),
+        ),
+        ("compact_results", eng.compact_results),
+        ("expire_stats", lambda: eng.expire_stats(1706781600 + 120)),
+        ("expire_results", lambda: eng.expire_results("2024-02-02")),
+        ("suppressor fold", fold),
+        ("healed interrupted swap", interrupted_swap),
+        (
+            "second engine's write",
+            lambda: fresh().process_batch(_live_batch(spark, 4, day="03"), 4),
+        ),
+        ("rmtree of epoch directories", lambda: drop_epoch_dirs(4)),
+    ]
+    sup.store_table.read().collect()  # a kept suppressor read to replace
+    for name, change in changes:
+        before = _polls(eng, fid)
+        change()
+        after = _polls(eng, fid)
+        assert after == _polls(fresh(), fid), name
+        if name not in ("suppressor fold", "healed interrupted swap"):
+            assert after != before, f"{name} changed nothing a poll sees"
+
+
+def test_polls_race_batches_without_going_back(spark, sf_dir, tmp_path):
+    """Threads poll `tail` and the supervisor's result route (more
+    threads than cores, a short switch interval) while five epochs land:
+    no poll raises, each thread's newest `row_id` never goes down, and
+    the last polls equal a fresh read."""
+    import json
+    import sys
+    import threading
+    import urllib.request
+
+    from cloudpelican_lsd_spark.engine import CloudPelicanEngine
+    from cloudpelican_lsd_spark.http_api import SupervisorHTTP
+    from cloudpelican_lsd_spark.sources.tables import logs_view
+
+    eng = CloudPelicanEngine(spark, logs_view(spark, sf_dir), sf_dir=sf_dir)
+    fid = eng.catalog.create("errors", "error").id
+    base = str(tmp_path / "engine_race")
+    stream = sp.StreamingEngine(spark, eng.catalog, base)
+    stream.process_batch(_live_batch(spark, 0), 0)
+    sup = SupervisorHTTP(eng, stream, username="u", password="p")
+    url = sup.start()
+    auth = "Basic " + __import__("base64").b64encode(b"u:p").decode()
+
+    def tail_newest():
+        return max(r.row_id for r in stream.tail(fid, 100).collect())
+
+    def route_newest():
+        req = urllib.request.Request(f"{url}/filter/{fid}/result?result_offset=0")
+        req.add_header("Authorization", auth)
+        with urllib.request.urlopen(req) as resp:
+            body = json.loads(resp.read().decode())
+        assert body["status"] is True, body
+        return body["result_offset"] - 1, body["results"]
+
+    stop = threading.Event()
+    readers = [tail_newest] * 3 + [lambda: route_newest()[0]] * 2
+    seen = [[] for _ in readers]
+    failed = []
+
+    def poll(i):
+        try:
+            while not stop.is_set():
+                seen[i].append(readers[i]())
+        except Exception as ex:  # noqa: BLE001 — reported below
+            failed.append((i, ex))
+
+    threads = [threading.Thread(target=poll, args=(i,)) for i in range(len(readers))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for e in range(1, 6):
+            stream.process_batch(_live_batch(spark, e), e)
+        stop.set()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+        assert not failed, failed
+        for i, newest in enumerate(seen):
+            assert newest and newest == sorted(newest), i
+        fresh = sp.StreamingEngine(spark, eng.catalog, base)
+        want = sorted(fresh.results(fid).collect(), key=lambda r: r.row_id)
+        assert sorted(stream.tail(fid, 100).collect()) == sorted(
+            fresh.tail(fid, 100).collect()
+        )
+        newest, raws = route_newest()
+        assert newest == want[-1].row_id and raws == [r._raw for r in want]
+    finally:
+        sys.setswitchinterval(interval)
+        stop.set()
+        sup.stop()
+
+
+def test_replay_after_a_failed_batch_keeps_row_ids(spark, tmp_path):
+    """A batch of eight equal-sized files fails after its results write;
+    restarted from the checkpoint, the query replays the epoch with the
+    same `(filter_id, _raw, row_id)` rows.  Within one source directory
+    the replay reads the files the offset log recorded, in its order, so
+    `monotonically_increasing_id` packs them into the same partitions."""
+    src = str(tmp_path / "in_rowid")
+    os.makedirs(src)
+    for f in range(8):
+        with open(os.path.join(src, f"part-{f}.txt"), "w") as fh:
+            fh.writelines(
+                f"2024-02-01T10:00:{i:02d}.000+00:00 h app: error f={f} n={i:03d}\n"
+                for i in range(50)
+            )
+    assert len({os.path.getsize(os.path.join(src, n)) for n in os.listdir(src)}) == 1
+    cat = FilterCatalog()
+    cat.create("errors", "error")
+    cat.create("even", r"n=\d\d[02468]")
+    base = str(tmp_path / "engine_rowid")
+
+    def rows():
+        return sorted(
+            (r.filter_id, r._raw, r.row_id)
+            for r in spark.read.parquet(os.path.join(base, "results"))
+            .where("epoch = 0")
+            .collect()
+        )
+
+    failing = sp.StreamingEngine(spark, cat, base)
+
+    def fail_after_results(df, epoch):
+        raise RuntimeError("stats write failed")
+
+    failing.stats_table.write = fail_after_results
+    q = failing.start(sp.file_source(spark, src), trigger={"availableNow": True})
+    with pytest.raises(Exception, match="stats write failed"):
+        q.awaitTermination(120)
+
+    def files():
+        return {
+            f for _dp, _dn, fs in os.walk(os.path.join(base, "results"))
+            for f in fs if f.endswith(".parquet")
+        }
+
+    first, first_files = rows(), files()
+    assert len(first) == 8 * 50 + 8 * 25
+    q = sp.StreamingEngine(spark, cat, base).start(
+        sp.file_source(spark, src), trigger={"availableNow": True}
+    )
+    assert q.awaitTermination(120)
+    assert not files() & first_files  # the replay rewrote the epoch
+    assert rows() == first
+    assert len({r[2] >> 25 for r in first}) == 8  # one partition per file
