@@ -1,19 +1,17 @@
-"""The exactly-once store behind every ``foreachBatch`` sink.
+"""The exactly-once store behind the stream's ``foreachBatch`` sinks.
 
 Structured Streaming redelivers a micro-batch whose sink write ran but
 whose checkpoint commit did not (a crash in between): delivery into a
 sink is at-least-once.  A sink is exactly-once when writing the same
-epoch twice leaves what writing it once leaves.  Every sink of the
-stream (the engine's results, stats and classifier tables, the
-near-duplicate suppressor's signature store and output, the streaming
-IVF indexes) is an :class:`EpochTable`: a local parquet directory
-partitioned by an integer ``epoch`` column, and the only code that
+epoch twice leaves what writing it once leaves.  Each of the stream's
+three sinks (the engine's results, stats and classifier tables) is an
+:class:`EpochTable`: a local parquet directory partitioned by an integer
+``epoch`` column, with a declared schema, and the only code that
 touches its files.
 
 On disk, for ``partition_by=["filter_id", "epoch", "date"]``::
 
     <path>/filter_id=<X>/epoch=<N>/date=<D>/part-*.parquet
-    <path>/_compacted_through.json     {"epoch": M}, only once folded
     <path>.old, <path>.compact         only while a swap is in flight
 
 The replay algorithm:
@@ -24,22 +22,15 @@ The replay algorithm:
   replay whose rows land in other partitions than the first attempt's
   (a hot-swapped filter set, a processing-time fallback crossing
   midnight, an empty replay) still replaces exactly its epoch.
-- **rewrite** (retention, ring-buffer truncation, folding) writes the new
-  table to ``<path>.compact`` and swaps it in: live moves to ``.old``,
+- **rewrite** (retention, ring-buffer truncation) writes the new table
+  to ``<path>.compact`` and swaps it in: live moves to ``.old``,
   ``.compact`` moves to live, ``.old`` is removed.  A crash at any step
   leaves a whole table at live or at ``.old``; every entry point heals
   that first, so no write lands in a fresh table beside a stranded one
-  and no read misses it.  A rewrite refuses to run beside an active
-  stream, whose micro-batch committing between the read and the swap
-  would be silently erased.
-- **fold** rewrites every epoch into one partition and records the
-  highest folded epoch in ``_compacted_through.json`` inside the new
-  table, so data and mark publish in one rename.  The folded epochs'
-  directories are gone, so a redelivery of one of them cannot be
-  replaced; the sink skips such a batch whole (its rows are already in
-  the folded partition), deciding it before any write.  The mark pins
-  the checkpoint lineage: epoch ids restart at 0 under a fresh
-  checkpoint, so a re-pointed stream needs fresh sink directories.
+  and no read misses it.  A rewrite keeps each row's ``epoch``, so a
+  later redelivery still replaces exactly its own epoch.  A rewrite
+  refuses to run beside an active stream, whose micro-batch committing
+  between the read and the swap would be silently erased.
 
 Reads are kept per file set.  A live tail polls one filter every 200 ms
 while its files change once per micro-batch, so :meth:`read` hands back
@@ -66,18 +57,12 @@ for the Hadoop FileSystem API or a transactional table format.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-#: the highest epoch a fold merged (underscore name: Spark's parquet
-#: reader skips it)
-_MARK = "_compacted_through.json"
 
 
 def _partition_dir(column: str, value: str) -> str:
@@ -121,15 +106,15 @@ class EpochTable:
 
     ``partition_by`` names the partition columns in directory order and
     includes ``epoch``.  ``schema`` (DDL text) is the declared schema
-    every read names, partition columns included; a read then runs no
-    schema-inference job.  Without it, reads infer the schema."""
+    every read names, partition columns included, so a read runs no
+    schema-inference job."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         partition_by: list[str],
-        schema: str | None = None,
+        schema: str,
     ) -> None:
         if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", path):
             raise ValueError(
@@ -143,13 +128,11 @@ class EpochTable:
         self.path = path
         self.partition_by = list(partition_by)
         self.schema = schema
-        self._columns = (
-            [c.split()[0] for c in schema.split(",")] if schema else None
-        )
+        self._columns = [c.split()[0] for c in schema.split(",")]
         #: one slot per read key: (the file set, the frame read from it).
         #: Pollers on other threads share it without a lock: a slot is
         #: replaced whole, so a reader that loses a race only reads again.
-        self._reads: dict[str | None, tuple[tuple, DataFrame | None]] = {}
+        self._reads: dict[str | None, tuple[tuple, DataFrame]] = {}
 
     # -- sink ----------------------------------------------------------------
 
@@ -174,13 +157,12 @@ class EpochTable:
             .parquet(self.path)
         )
 
-    def read(self, key: str | None = None) -> DataFrame | None:
+    def read(self, key: str | None = None) -> DataFrame:
         """The table (or, for ``key``, the directory of that value of the
         first partition column alone: only its files are listed and
-        read), healed first.  With a declared schema: its columns in its
-        order, and a typed empty frame when there is no data (before the
-        first batch, after a purge).  Without one: the inferred frame, or
-        None when there is no data.
+        read), healed first: the declared schema's columns in its order,
+        and a typed empty frame when there is no data (before the first
+        batch, after a purge).
 
         The same frame object comes back for as long as the key's file
         set is unchanged (see the module docstring); each key keeps one
@@ -196,85 +178,36 @@ class EpochTable:
         if not files:
             df = self._empty()
         else:
-            reader = self.spark.read
+            reader = self.spark.read.schema(self.schema)
             if key is not None:
                 reader = reader.option("basePath", self.path)
-            if self.schema:
-                reader = reader.schema(self.schema)
             try:
-                df = reader.parquet(path)
+                df = reader.parquet(path).select(*self._columns)
             except AnalysisException:
                 # a swap moved the directory away after the walk: answer
                 # empty, keep nothing
                 return self._empty()
-            if self.schema:
-                df = df.select(*self._columns)
         self._reads[key] = (files, df)
         return df
 
-    def _empty(self) -> DataFrame | None:
-        return self.spark.createDataFrame([], self.schema) if self.schema else None
-
-    def folded_through(self) -> int:
-        """The highest epoch a fold merged (-1 if none): a batch of an
-        epoch at or below it was committed before the fold and is
-        skipped whole."""
-        self._heal()
-        try:
-            with open(os.path.join(self.path, _MARK)) as fh:
-                return int(json.load(fh)["epoch"])
-        except (FileNotFoundError, ValueError, KeyError, TypeError):
-            return -1
+    def _empty(self) -> DataFrame:
+        return self.spark.createDataFrame([], self.schema)
 
     # -- maintenance -----------------------------------------------------------
 
-    def rewrite(self, df: DataFrame, mark: int | None = None) -> None:
-        """Replace the table with ``df`` (built from :meth:`read`),
-        keeping the higher of ``mark`` and the table's fold mark.  No-op
-        when the table does not exist."""
+    def rewrite(self, df: DataFrame) -> None:
+        """Replace the table with ``df`` (built from :meth:`read`).
+        No-op when the table does not exist."""
         self._require_quiesced()
         self._heal()
         if not os.path.isdir(self.path):
             return
-        mark = max(-1 if mark is None else int(mark), self.folded_through())
         tmp = self.path + ".compact"
         df.write.partitionBy(*self.partition_by).mode("overwrite").parquet(tmp)
-        if mark >= 0:
-            with open(os.path.join(tmp, _MARK), "w") as fh:
-                json.dump({"epoch": mark}, fh)
         old = self.path + ".old"
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old)
-
-    def fold(self, into: int | None = None) -> None:
-        """Fold every epoch into one partition, ``epoch=into`` (the
-        highest folded epoch when None), and mark the highest folded
-        epoch.  Streaming appends add one directory tree per micro-batch
-        (the small-files problem); the fold writes files of about 128 MB,
-        each directory of a second partition column (the IVF index's
-        `cent_id` cells) from a single task.  No-op when no epoch lies
-        above the mark."""
-        self._require_quiesced()
-        df = self.read()
-        if df is None or "epoch" not in df.columns:
-            return
-        hi = df.agg(F.max("epoch")).first()[0]
-        if hi is None or hi <= self.folded_through():
-            return
-        on_disk = sum(
-            os.path.getsize(os.path.join(d, f))
-            for d, _, fs in os.walk(self.path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-        n_files = max(1, -(-on_disk // (128 << 20)))
-        self.rewrite(
-            df.drop("epoch")
-            .repartition(n_files, *self.partition_by[1:])
-            .selectExpr("*", f"{hi if into is None else int(into)} AS epoch"),
-            mark=hi,
-        )
 
     def drop_before(self, column: str, bound) -> None:
         """Retention: drop every ``column=`` directory whose value is

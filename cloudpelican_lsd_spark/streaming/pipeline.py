@@ -50,8 +50,7 @@ and `tail`/`stats` keep the plan built on that frame
 (`StreamingEngine._plans`), so a repeated poll runs only its Spark job.
 
 Checkpointing gives at-least-once delivery (the reference's Storm acking
-≈ Main.java:159-164); every sink here — the three tables above and the
-near-duplicate suppressor's store and output — is an
+≈ Main.java:159-164); each of the three sinks above is an
 `epoch_table.EpochTable`, whose drop-epoch-then-append writes make the
 redelivery exactly-once and whose crash-safe swaps serve the retention
 and compaction sweeps.  Kafka is the production source; file/rate
@@ -70,6 +69,7 @@ from cloudpelican_lsd_spark.catalog import FilterCatalog
 from cloudpelican_lsd_spark.checkpoint import materialize
 from cloudpelican_lsd_spark.functions.parse import (
     extract_event_time,
+    is_likely_error_sql,
     normalize_lines,
 )
 from cloudpelican_lsd_spark.operators.classifier import CAT_ERROR, CAT_REGULAR
@@ -77,10 +77,6 @@ from cloudpelican_lsd_spark.operators.fanout import filter_matches
 from cloudpelican_lsd_spark.operators.tail import tail_last_n
 from cloudpelican_lsd_spark.operators.stats import METRIC_MATCH, METRIC_ERROR
 from cloudpelican_lsd_spark.streaming.epoch_table import EpochTable
-from cloudpelican_lsd_spark.functions.parse import (
-    is_likely_error,
-    is_likely_error_sql,
-)
 
 
 def kafka_reader_options(
@@ -619,704 +615,3 @@ class StreamingEngine:
             "results_before": cutoff_results,
             "stats_before": now_unix - 7 * 86400,
         }
-
-
-def windowed_stats_stream(
-    matched: DataFrame, lateness: str = "1 hour", width: str = "1 minute"
-) -> DataFrame:
-    """A2/A3 as a *native* Structured Streaming windowed aggregation:
-    `(filter_id, metric, bucket, cnt)` maintained by Spark's streaming
-    state store instead of foreachBatch merge-on-read.
-
-    - watermark bounds state: the reference accepts arbitrarily-late
-      counts (filter_manager.go:121 adds into any bucket); Spark needs a
-      lateness horizon to ever drop window state, so `lateness` is the
-      documented divergence knob — generous by default.
-    - partial aggregation before the shuffle is automatic
-      (HashAggregateExec partial -> state store update), the same
-      reduce-before-network the 1s RollupStatsBolt implements by hand.
-    """
-    fanned = matched.select(
-        "filter_id",
-        # watermarks require TIMESTAMP (tz-aware); the engine's NTZ event
-        # time is UTC by construction (session tz pinned), so the cast is a
-        # reinterpretation, not a shift
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.explode(
-            F.when(
-                is_likely_error(F.col("_raw")),
-                F.array(F.lit(METRIC_MATCH), F.lit(METRIC_ERROR)),
-            ).otherwise(F.array(F.lit(METRIC_MATCH)))
-        ).alias("metric"),
-    )
-    return (
-        fanned.withWatermark("ts", lateness)
-        .groupBy("filter_id", "metric", F.window("ts", width).alias("win"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "filter_id",
-            "metric",
-            F.unix_timestamp(F.col("win.start")).alias("bucket"),
-            "cnt",
-        )
-    )
-
-
-def session_stream(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """Streaming gap-sessionization — the `session_window` analog of the
-    batch operator (operators/sessions.sessionize): Spark's state store
-    merges windows that keep receiving events within ``gap`` and emits a
-    session once the watermark passes its close.
-
-    Boundary divergence to document: the batch operator starts a new
-    session when delta > gap (strict), ``session_window`` when
-    delta >= gap (window end = last_event + gap, end-exclusive).  Equal-
-    to-gap deltas are measure-zero in real data but the tests avoid them.
-
-    Scale: state is per open session keyed by (key, merged-window) —
-    bounded by the watermark horizon, shuffled once on the grouping key.
-    """
-    # NTZ event time is UTC by construction (session tz pinned); the cast
-    # to the tz-aware type watermarks require is a reinterpretation
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        events.withWatermark(ts_col, lateness)
-        .groupBy(
-            F.col(key_col),
-            F.session_window(F.col(ts_col), gap).alias("sw"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.unix_timestamp("sw.start").alias("start_epoch"),
-            F.unix_timestamp("sw.end").alias("end_epoch"),
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(
-    lines: DataFrame,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    horizon: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact deduplication with bounded state:
-    ``dropDuplicatesWithinWatermark`` keeps one row per key and expires
-    the key's state once the watermark passes ``horizon`` — the
-    streaming face of the batch exact-dedup family (operators/dedup.py).
-
-    Unbounded `dropDuplicates` on a stream would grow state forever; the
-    horizon bounds it to keys seen in the last window, which is the
-    practical contract for log/event streams (replays and producer
-    retries arrive close together).  Keys should be compact — hash the
-    payload first (`xxhash64(_raw)`) so state stores 8-byte keys, not
-    raw lines.
-    """
-    keyed = lines.withColumn("_k", F.xxhash64(*(keys or ["_raw"]))).withColumn(
-        ts_col, F.col(ts_col).cast("timestamp")
-    )
-    return (
-        keyed.withWatermark(ts_col, horizon)
-        .dropDuplicatesWithinWatermark(["_k"])
-        .drop("_k")
-    )
-
-
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    upper_s: int = 3600,
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: each left event pairs with
-    the right events of the same ``key`` that occur in
-    ``[left_ts, left_ts + upper_s]`` — the streaming face of the batch
-    range join (operators/ranges.interval_join) and the attribution
-    pattern of the as-of operator (operators/asof.py).
-
-    Both sides MUST be watermarked and the join MUST carry a time bound:
-    that pair is what lets Spark expire buffered rows — state per side is
-    bounded by lateness + upper_s instead of growing forever.  The join
-    shuffles both streams on ``key``; rows co-locate in the state store
-    and matches emit incrementally in append mode.
-
-    Column layout: the right side's key/ts are renamed (``r_<key>``,
-    ``r_ts``) so the output schema is join-order unambiguous.
-    """
-    # NTZ event time is UTC by construction; cast is a reinterpretation
-    lw = left.withColumn(left_ts, F.col(left_ts).cast("timestamp")).withWatermark(
-        left_ts, lateness
-    )
-    rw = (
-        right.withColumnRenamed(key, f"r_{key}")
-        .withColumnRenamed(right_ts, "r_ts")
-        .withColumn("r_ts", F.col("r_ts").cast("timestamp"))
-        .withWatermark("r_ts", lateness)
-    )
-    cond = (
-        (F.col(f"r_{key}") == F.col(key))
-        & (F.col("r_ts") >= F.col(left_ts))
-        & (F.col("r_ts") <= F.col(left_ts) + F.expr(f"INTERVAL {upper_s} SECONDS"))
-    )
-    return lw.join(rw, cond, "inner")
-
-
-def template_stream(
-    parsed: DataFrame, lateness: str = "1 hour", width: str = "5 minutes"
-) -> DataFrame:
-    """Streaming twin of the batch `logs_template_mining` query:
-    digit-masked message templates counted per tumbling window —
-    `(win_start, template, cnt)` in update mode.  New log shapes surface
-    as new template rows within one window of arriving; the watermark
-    bounds template-count state exactly like windowed_stats_stream.
-    Template cardinality ≪ line rate, so the shuffle carries map-side
-    partials keyed by (template, window) — the same
-    reduce-before-network contract as the stats rollup."""
-    masked = parsed.select(
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.regexp_replace("_raw", "[0-9]+", "#").alias("template"),
-    )
-    return (
-        masked.withWatermark("ts", lateness)
-        .groupBy(F.window("ts", width).alias("win"), "template")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.unix_timestamp(F.col("win.start")).alias("win_start"),
-            "template",
-            "cnt",
-        )
-    )
-
-
-def windowed_distinct_stream(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    width: str = "1 minute",
-    lateness: str = "1 hour",
-    rsd: float = 0.05,
-) -> DataFrame:
-    """`(bucket, approx_distinct)` — HyperLogLog++ distinct keys per
-    tumbling window, maintained incrementally by the streaming state
-    store.  The streaming twin of the batch `distinct_users_sketch`
-    query: exact streaming distinct would hold every key seen per window
-    in state (unbounded for high-cardinality keys); the sketch bounds
-    state at ~1.5KB per window regardless of cardinality, with the same
-    rsd error contract as batch HLL++."""
-    return (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.col(ts_col).cast("timestamp").alias("ts"),
-        )
-        .withWatermark("ts", lateness)
-        .groupBy(F.window("ts", width).alias("win"))
-        .agg(F.approx_count_distinct("k", rsd=rsd).alias("approx_distinct"))
-        .select(
-            F.unix_timestamp(F.col("win.start")).alias("bucket"),
-            "approx_distinct",
-        )
-    )
-
-
-def windowed_topk_counts_stream(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    width: str = "1 minute",
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """`(bucket, key, cnt)` — per-key counts per tumbling event-time
-    window, maintained incrementally by the streaming state store.
-
-    Heavy-hitters building block: ranking is NOT applied here because
-    window functions cannot run on an open streaming aggregate — the
-    counts stream appends once the watermark closes a window, and
-    `topk_per_bucket` ranks at read time (the same merge-on-read idiom
-    as the stats table).  State per window is bounded by key cardinality
-    (event types / filters), not event volume."""
-    return (
-        events.select(
-            F.col(key_col).alias("key"),
-            F.col(ts_col).cast("timestamp").alias("ts"),
-        )
-        .withWatermark("ts", lateness)
-        .groupBy(F.window("ts", width).alias("win"), "key")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.unix_timestamp(F.col("win.start")).alias("bucket"), "key", "cnt"
-        )
-    )
-
-
-def topk_per_bucket(counts: DataFrame, k: int = 3) -> DataFrame:
-    """`(bucket, key, cnt, rank)` — deterministic heavy hitters per
-    window from the maintained counts table (cnt DESC, key ASC ties)."""
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("bucket").orderBy(F.col("cnt").desc(), F.col("key").asc())
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("bucket", "key", "cnt", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming near-duplicate suppression (the streaming face of MinHash/LSH)
-# ---------------------------------------------------------------------------
-
-
-class NearDupSuppressor:
-    """Suppress near-duplicate documents arriving on a stream.
-
-    The streaming face of the batch MinHash/LSH dedup family
-    (operators/dedup.py): each micro-batch's documents are banded
-    (minhash_band_signatures), compared against (a) every signature
-    accumulated from prior epochs and (b) lower-id documents in the same
-    batch, and only NOVEL documents pass through; their signatures join
-    the store.  Cross-key state (a doc is a dup if ANY of its bands
-    matches) cannot live in a per-key state store, so this is a
-    ``foreachBatch`` operator over a signature table — the standard Spark
-    shape for cross-key streaming dedup.
-
-    Policy (documented greedy): a document is suppressed when any band
-    signature matches the store or a lower-id same-batch document —
-    including one that was itself suppressed (the LSH
-    keep-one-per-candidate-cluster behavior; exact per-pair verification
-    is the batch family's job).
-
-    Exactly-once: the store and the output are each an `EpochTable`
-    (``store_table``, ``out_table``; local paths only), so a replayed
-    micro-batch (at-least-once redelivery after a crash between write and
-    checkpoint commit) replaces exactly its own epoch — same contract as
-    StreamingEngine.process_batch.  A replay is checked against the store
-    without its own epoch's signatures, and a replay of an epoch
-    :meth:`compact` folded is skipped whole.
-
-    100 TB shape: the store is only `(band, sig)` — 12/3 = 4 rows of a
-    few bytes per kept document, NOT the text; the batch-vs-store check
-    scans the store once against the BROADCAST batch signatures (the
-    batch is backpressure-bounded, so the store never shuffles or sorts
-    per batch); in-batch suppression is one window MIN over the same
-    key.  Store growth is bounded by novel-doc
-    rate; `expire(before_epoch)` drops old epochs wholesale (retention =
-    dedup horizon, the same trade dropDuplicatesWithinWatermark makes).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        store_path: str,
-        out_path: str,
-        num_hashes: int = 12,
-        rows_per_band: int = 3,
-        n: int = 3,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> None:
-        self.spark = spark
-        self.store_path = store_path
-        self.out_path = out_path
-        self.store_table = EpochTable(spark, store_path, ["epoch"])
-        self.out_table = EpochTable(spark, out_path, ["epoch"])
-        self.num_hashes = num_hashes
-        self.rows_per_band = rows_per_band
-        self.n = n
-        self.id_col = id_col
-        self.text_col = text_col
-
-    def compact(self) -> None:
-        """Fold every store epoch into ONE partition keyed by the
-        HIGHEST folded epoch — streaming appends accumulate one
-        directory tree per micro-batch (at a minutely trigger a day
-        adds 1 440 trees: the small-files problem at scale), and
-        compaction rewrites the signature store as one healthy file
-        set.
-
-        Unlike the StreamingIvfIndexer (whose index keeps everything,
-        so it folds into the reserved bootstrap partition), the
-        suppressor's store is RETENTION-managed: `expire(before_epoch)`
-        drops epoch dirs older than the dedup horizon.  Folding into
-        `epoch=<max folded>` keeps that working — an expire whose bound
-        passes the folded epoch drops the whole consolidated segment
-        wholesale; TTL granularity coarsens to the compaction interval,
-        the standard segment-merge trade.
-
-        Exactly-once: `EpochTable.fold` (crash-safe swap, refused beside
-        an active stream, the highest folded epoch marked in the same
-        rename); process_batch skips a replay of a folded epoch whole.
-        A re-pointed stream (fresh checkpoint, epoch ids from 0) needs
-        fresh store/out dirs, as every epoch-idempotent sink does."""
-        self.store_table.fold()
-
-    def _signatures(self, docs: DataFrame) -> DataFrame:
-        """(doc_id, band, sig) rows for a batch — the suppression key
-        space.  Subclasses swap the fingerprint family; the sink/replay
-        discipline in process_batch is shared."""
-        from cloudpelican_lsd_spark.operators.dedup import (
-            minhash_band_signatures,
-        )
-
-        return minhash_band_signatures(
-            docs, self.num_hashes, self.rows_per_band, self.n
-        )
-
-    def _dup_ids(self, sigs: DataFrame, store: DataFrame | None) -> DataFrame:
-        """doc_ids suppressed this batch: any band signature shared with a
-        lower-id same-batch doc or with the store (the LSH
-        keep-one-per-candidate-cluster greedy)."""
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("band", "sig")
-        in_batch_dup = (
-            sigs.withColumn("min_id", F.min("doc_id").over(w))
-            .where(F.col("doc_id") > F.col("min_id"))
-            .select("doc_id")
-        )
-        if store is None:
-            return in_batch_dup
-        # inner-join the STORE against the broadcast batch, not a
-        # LeftSemi with the store as build side: Spark only builds the
-        # right of a semi-join, so `sigs LEFT SEMI store` sort-merges —
-        # shuffling the ENTIRE store every micro-batch.  The batch is
-        # bounded (ingest backpressure caps it at ~18k docs), so
-        # broadcasting it keeps the store scan-only: no shuffle, no
-        # sort, and the matched output (then distinct) is batch-sized.
-        vs_store = (
-            store.select("band", "sig")
-            .join(F.broadcast(sigs), ["band", "sig"])
-            .select("doc_id")
-            .distinct()
-        )
-        return in_batch_dup.unionByName(vs_store)
-
-    def _update_store(self, sigs: DataFrame, novel: DataFrame, epoch: int) -> None:
-        """Accumulate the kept docs' signatures into the store.
-        Index-backed subclasses override to a no-op (their store is a
-        static index written once, never grown by the stream)."""
-        self.store_table.write(
-            sigs.join(novel.select("doc_id"), "doc_id", "left_semi")
-            .select("band", "sig", "doc_id"),
-            epoch,
-        )
-
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql.types import IntegerType
-
-        epoch = int(epoch_id)
-        if epoch <= self.store_table.folded_through():
-            # a redelivery of an epoch compact() folded: its rows are in
-            # the folded partition (compact ran after the batch
-            # committed), which a replay of the epoch it is keyed on would
-            # delete — skipped whole, out included
-            return
-        docs = batch_df.select(
-            F.col(self.id_col).alias("doc_id"),
-            F.col(self.text_col).alias("text"),
-        )
-        sigs = self._signatures(docs)
-        sigs.persist()
-        try:
-            store = self.store_table.read()
-            if store is not None and "epoch" in store.columns:
-                # a replay must not match its own first attempt's
-                # signatures; the pruned partition is never opened, so
-                # the store write below may drop it
-                store = store.where(F.col("epoch") != epoch)
-            dup_ids = self._dup_ids(sigs, store)
-            novel = docs.join(dup_ids.distinct(), "doc_id", "left_anti")
-            self.out_table.write(novel, epoch)
-            # persist the full output schema once so kept() can return a
-            # correctly-typed empty frame before the first batch is
-            # readable again (underscore-prefixed → invisible to readers)
-            schema_file = os.path.join(self.out_path, "_kept_schema.json")
-            if not os.path.exists(schema_file):
-                with open(schema_file, "w") as fh:
-                    fh.write(novel.schema.add("epoch", IntegerType(), False).json())
-            self._update_store(sigs, novel, epoch)
-        finally:
-            sigs.unpersist()
-
-    def attach(self, doc_stream: DataFrame, checkpoint: str, trigger: dict | None = None):
-        """Wire onto a streaming DataFrame of documents via foreachBatch."""
-        writer = (
-            doc_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-        )
-        if trigger:
-            writer = writer.trigger(**trigger)
-        return writer.start()
-
-    def kept(self) -> DataFrame:
-        """All documents that passed suppression so far.  Before the
-        first committed batch (or after a full expiry) the out table has
-        no parquet — return a typed empty frame with the FULL output
-        schema persisted at first write (so callers selecting payload
-        columns don't hit an AnalysisException on the empty table); if no
-        batch has ever flowed, fall back to the id/epoch contract
-        columns, matching the guarded readers on StreamingEngine."""
-        df = self.out_table.read()
-        if df is not None:
-            return df
-        schema_file = os.path.join(self.out_path, "_kept_schema.json")
-        if os.path.exists(schema_file):
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            with open(schema_file) as fh:
-                schema = StructType.fromJson(_json.load(fh))
-            return self.spark.createDataFrame([], schema)
-        # output columns are always aliased to doc_id in process_batch
-        return self.spark.createDataFrame([], "doc_id LONG, epoch INT")
-
-    def expire(self, before_epoch: int) -> None:
-        """Retention: drop store epochs older than the dedup horizon."""
-        self.store_table.drop_before("epoch", int(before_epoch))
-
-
-class WinnowDupSuppressor(NearDupSuppressor):
-    """Streaming MOSS: near-VERBATIM reuse suppression over winnowed
-    k-gram fingerprints (textstats.winnowing_fingerprints — the same
-    selection the batch dedup_winnowing_pairs family is built on, so the
-    stream and the batch audit can never fork on what counts as a
-    match).
-
-    Where the MinHash parent suppresses bag-of-shingles similarity, this
-    subclass carries the winnowing GUARANTEE into the stream: any shared
-    substring of length >= w + k - 1 between a new document and a stored
-    (or lower-id same-batch) one surfaces shared fingerprints, and the
-    document is suppressed when at least ``min_shared`` of its
-    fingerprints match one single prior document (pairwise MOSS
-    semantics, NOT any-match: one shared common phrase is not
-    plagiarism).
-
-    Boilerplate discipline: fingerprints present in more than ``max_df``
-    distinct documents across (store ∪ batch) are HOT and excluded from
-    matching — the same df<=8 prune as the batch pair generator, so
-    license headers and navigation chrome cannot quadratically explode
-    the match join.  The per-batch df re-aggregation scans the store's
-    compact (fph, doc_id) relation; a long-horizon production deployment
-    materializes the df in a maintained sidecar exactly like the
-    StreamingIvfIndexer's `_compacted_through` watermark (documented
-    trade, same class).
-
-    Store schema compatibility: `band = sig = fph` — the parent's
-    epoch-partitioned (band, sig, doc_id) store, exactly-once replay,
-    `_kept_schema.json` fallback, and `expire()` retention all apply
-    unchanged.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        store_path: str,
-        out_path: str,
-        k: int = 8,
-        w: int = 4,
-        min_shared: int = 3,
-        max_df: int = 8,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> None:
-        super().__init__(
-            spark, store_path, out_path, id_col=id_col, text_col=text_col
-        )
-        if w < 1 or k < 1:
-            raise ValueError(f"WinnowDupSuppressor: k={k} w={w} must be >= 1")
-        if min_shared < 1:
-            raise ValueError(
-                f"WinnowDupSuppressor: min_shared={min_shared} must be >= 1"
-            )
-        self.k, self.w = int(k), int(w)
-        self.min_shared, self.max_df = int(min_shared), int(max_df)
-
-    def _signatures(self, docs: DataFrame) -> DataFrame:
-        from cloudpelican_lsd_spark.operators.textstats import (
-            winnowing_fingerprints,
-        )
-
-        fp = winnowing_fingerprints(docs, k=self.k, w=self.w)
-        return fp.select(
-            "doc_id", F.col("fph").alias("band"), F.col("fph").alias("sig")
-        ).distinct()
-
-    def _dup_ids(self, sigs: DataFrame, store: DataFrame | None) -> DataFrame:
-        """Pairwise MOSS count: suppressed iff some single prior document
-        (stored, or lower-id in-batch) shares >= min_shared non-hot
-        fingerprints."""
-        new_fp = sigs.select("doc_id", F.col("sig").alias("fph"))
-        if store is not None:
-            # no store-wide distinct: the df aggregation below already
-            # counts DISTINCT doc_ids, and the match count uses
-            # countDistinct(fph) — a per-batch shuffle of the whole
-            # store just to dedup would dominate at scale
-            old_fp = store.select("doc_id", F.col("sig").alias("fph"))
-            all_fp = new_fp.unionByName(old_fp)
-        else:
-            old_fp = None
-            all_fp = new_fp
-        hot = (
-            all_fp.groupBy("fph")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .where(F.col("df") > self.max_df)
-            .select("fph")
-        )
-        cold = new_fp.join(hot, "fph", "left_anti")
-        a = cold.select(F.col("doc_id").alias("new_doc"), "fph")
-        b = cold.select(F.col("doc_id").alias("old_doc"), "fph")
-        in_batch = (
-            a.join(b, "fph")
-            .where(F.col("new_doc") > F.col("old_doc"))
-            .groupBy("new_doc", "old_doc")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .where(F.col("shared") >= self.min_shared)
-            .select(F.col("new_doc").alias("doc_id"))
-        )
-        if old_fp is None:
-            return in_batch
-        # broadcast the (batch-bounded) cold new-doc fingerprints so the
-        # store side stays scan-only (same BuildRight reasoning as the
-        # parent's vs_store probe); countDistinct(fph) makes the shared
-        # count robust to any duplicate store rows without a store-wide
-        # pre-distinct — only the MATCHED pairs (batch-sized) shuffle
-        vs_store = (
-            old_fp.join(hot, "fph", "left_anti")
-            .select(F.col("doc_id").alias("old_doc"), "fph")
-            .join(F.broadcast(a), "fph")
-            .groupBy("new_doc", "old_doc")
-            .agg(F.countDistinct("fph").alias("shared"))
-            .where(F.col("shared") >= self.min_shared)
-            .select(F.col("new_doc").alias("doc_id"))
-        )
-        return in_batch.unionByName(vs_store)
-
-
-class EvalContaminationSuppressor(NearDupSuppressor):
-    """Streaming eval-set decontamination: drop arriving documents that
-    share ANY word n-gram with a STATIC held-out benchmark index — the
-    streaming face of `corpus.eval_decontaminate` (the GPT-3 appendix-C
-    rule applied at ingest time, before a contaminated doc ever lands in
-    the training store).
-
-    Three deliberate departures from the near-dup parent, each a hook:
-
-    - the "store" is a read-only shingle INDEX written once from the
-      benchmark corpus (`write_eval_index`) — `_update_store` is a no-op,
-      so the stream never writes, drops or grows the index (growing it would silently turn decontamination into
-      stream-self-dedup);
-    - suppression is ONLY against the index: two training docs sharing a
-      phrase is not contamination, so there is no in-batch rule;
-    - a MISSING index is a loud RuntimeError, not an empty suppression
-      set — decontamination that silently passes everything because the
-      index path is wrong is the worst failure mode this operator has;
-      the same guard covers a rule-length mismatch: the index is stamped
-      with the n it was built at and a suppressor configured with a
-      different n (disjoint shingle spaces — zero matches ever) raises
-      instead of silently passing.
-
-    100 TB shape: the index is benchmark-sized (MBs of distinct
-    n-grams); the per-batch check is one shingle explode + LEFT SEMI
-    against it — no store scan grows with stream history, and `expire`
-    is inherited-but-inert (the index has no epoch partitions).
-    Exactly-once is the parent's epoch-replace discipline on out_path.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        index_path: str,
-        out_path: str,
-        n: int = 8,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> None:
-        super().__init__(
-            spark, index_path, out_path, n=n, id_col=id_col, text_col=text_col
-        )
-        self._index_n_validated = False
-
-    @staticmethod
-    def write_eval_index(eval_docs: DataFrame, index_path: str, n: int = 8,
-                         text_col: str = "text") -> None:
-        """One-time index build: DISTINCT word n-grams of the benchmark
-        corpus (column `shingle`), stamped with the rule length `n` they
-        were built at (a constant RLE column — bytes on disk) so a
-        suppressor configured with a DIFFERENT n fails loudly instead of
-        semi-joining disjoint shingle spaces and silently passing every
-        contaminated document.  Re-running overwrites atomically via
-        Spark's overwrite mode."""
-        from cloudpelican_lsd_spark.operators.dedup import shingle_rows
-
-        (
-            shingle_rows(
-                eval_docs.select(F.col(text_col).alias("text"),
-                                 F.lit(0).cast("long").alias("doc_id")),
-                n,
-            )
-            .select("shingle")
-            .distinct()
-            .withColumn("n", F.lit(n).cast("int"))
-            .write.mode("overwrite")
-            .parquet(index_path)
-        )
-
-    def _validate_index_n(self, store: DataFrame) -> None:
-        """Loud n-mismatch guard (checked once per suppressor, not per
-        batch): an index built at a different rule length than the
-        suppressor's `n` would produce shingles that can never match —
-        exactly the silent-pass failure mode the missing-index
-        RuntimeError exists to prevent."""
-        if self._index_n_validated:
-            return
-        if "n" not in store.columns:
-            raise RuntimeError(
-                f"EvalContaminationSuppressor: eval index at "
-                f"{self.store_path!r} carries no rule-length stamp — "
-                "rebuild it with write_eval_index (indexes written "
-                "before n-stamping cannot be validated against this "
-                f"suppressor's n={self.n})"
-            )
-        row = store.agg(
-            F.min("n").alias("lo"), F.max("n").alias("hi")
-        ).first()
-        if row.lo != self.n or row.hi != self.n:
-            raise RuntimeError(
-                f"EvalContaminationSuppressor: eval index at "
-                f"{self.store_path!r} was built with n={row.lo}"
-                + (f"..{row.hi}" if row.hi != row.lo else "")
-                + f" but this suppressor is configured with n={self.n} — "
-                "the shingle spaces are disjoint and every document "
-                "would silently pass; rebuild the index or match n"
-            )
-        self._index_n_validated = True
-
-    def _update_store(self, sigs: DataFrame, novel: DataFrame, epoch: int) -> None:
-        return  # read-only index: the stream never grows it
-
-    def _signatures(self, docs: DataFrame) -> DataFrame:
-        from cloudpelican_lsd_spark.operators.dedup import shingle_rows
-
-        return shingle_rows(docs, self.n)
-
-    def _dup_ids(self, sigs: DataFrame, store: DataFrame | None) -> DataFrame:
-        if store is None:
-            raise RuntimeError(
-                f"EvalContaminationSuppressor: no eval index at "
-                f"{self.store_path!r} — refusing to pass documents "
-                "unchecked (build it with write_eval_index first)"
-            )
-        self._validate_index_n(store)
-        return sigs.join(
-            F.broadcast(store.select("shingle")), "shingle", "left_semi"
-        ).select("doc_id")

@@ -24,7 +24,6 @@ over at most the batch rows, not history.
 from __future__ import annotations
 
 import json
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -132,201 +131,4 @@ def streaming_classifier(
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
         if evict_stale
         else GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming outlier detection with per-series high-water mark
-# ---------------------------------------------------------------------------
-
-from cloudpelican_lsd_spark.operators.outliers import (  # noqa: E402
-    BUCKET_SEC,
-    LOOKBACK_SEC,
-    score_last_bucket,
-)
-
-OUTLIER_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("filter_id", T.StringType(), False),
-        T.StructField("bucket", T.LongType(), False),
-        T.StructField("actual", T.DoubleType(), False),
-        T.StructField("score", T.DoubleType(), False),
-        T.StructField("details", T.StringType(), False),
-    ]
-)
-
-
-def outlier_state_fn(
-    key: tuple,
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-filter 5-min count series kept in state (bounded: 24h lookback
-    = 288 buckets); every newly *complete* bucket is consensus-scored
-    exactly once — the `lastAnalyzed` high-water mark skips series with
-    no new data exactly as OutlierDetectionBolt.java:164-170 does, and a
-    catch-up batch that completes several buckets scores each of them."""
-    import numpy as np
-
-    if state.hasTimedOut:
-        state.remove()
-        yield pd.DataFrame(columns=[f.name for f in OUTLIER_OUTPUT_SCHEMA])
-        return
-    st = json.loads(state.get[0]) if state.exists else {"counts": {}, "last": 0}
-    # processing-time sanity bound: one line with a bogus far-future
-    # embedded timestamp would otherwise anchor the 24h retention trim
-    # below and wipe the whole accumulated history for this filter
-    max_plausible = int(time.time()) + 300
-    for pdf in pdf_iter:
-        for e in pdf["ts_epoch"]:
-            if int(e) > max_plausible:
-                continue
-            b = int(e) - int(e) % BUCKET_SEC
-            st["counts"][str(b)] = st["counts"].get(str(b), 0) + 1
-    buckets = sorted(int(k) for k in st["counts"])
-    rows = []
-    if buckets:
-        lo = buckets[-1] - LOOKBACK_SEC
-        st["counts"] = {k: v for k, v in st["counts"].items() if int(k) >= lo}
-        buckets = sorted(int(k) for k in st["counts"])
-        # exclude the newest (still-filling) bucket; score EVERY observed
-        # complete bucket past the high-water mark — a catch-up batch
-        # (availableNow replay, post-downtime backlog) can complete
-        # several buckets at once, and scoring only buckets[-2] would
-        # skip the earlier ones forever (the reference's 60s tick scores
-        # each bucket as it completes)
-        pending = [b for b in buckets[:-1] if b > st["last"]]
-        if pending:
-            # zero gap-fill like the batch detector (outliers.py): count
-            # series only materialize buckets with events, so without it
-            # an outage-to-zero bucket is skipped over and analyzers see
-            # a gapped grid (biased baselines, wrong seasonal alignment)
-            sparse_b = np.array(buckets[:-1], dtype=np.int64)
-            sparse_c = np.array(
-                [st["counts"][str(b)] for b in buckets[:-1]], dtype=float
-            )
-            hist_b = np.arange(sparse_b[0], sparse_b[-1] + 1, BUCKET_SEC)
-            hist_c = np.zeros(len(hist_b), dtype=float)
-            hist_c[((sparse_b - sparse_b[0]) // BUCKET_SEC).astype(int)] = sparse_c
-            for t in pending:
-                idx = int((t - int(hist_b[0])) // BUCKET_SEC)
-                res = score_last_bucket(hist_b[: idx + 1], hist_c[: idx + 1])
-                if res is not None:
-                    score, flags = res
-                    rows.append(
-                        {
-                            "filter_id": key[0],
-                            "bucket": int(t),
-                            "actual": float(hist_c[idx]),
-                            "score": float(score),
-                            "details": json.dumps(flags, sort_keys=True),
-                        }
-                    )
-            st["last"] = buckets[-2]
-    state.update((json.dumps(st),))
-    _arm_ttl(state)
-    yield pd.DataFrame(
-        rows, columns=[f.name for f in OUTLIER_OUTPUT_SCHEMA]
-    )
-
-
-def streaming_outliers(
-    matched: DataFrame, evict_stale: bool = False
-) -> DataFrame:
-    """`(filter_id, bucket, actual, score, details)` — one row per newly
-    completed 5-min bucket per filter, consensus-scored against the 24h
-    in-state history.  Input: streaming matched stream with `filter_id`
-    and `ts_epoch`.  `evict_stale` as in `streaming_classifier`."""
-    return matched.select("filter_id", "ts_epoch").groupBy("filter_id").applyInPandasWithState(
-        outlier_state_fn,
-        outputStructType=OUTLIER_OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if evict_stale
-        else GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# alert cooldown suppressor — notification spam control on the outlier sink
-# ---------------------------------------------------------------------------
-
-ALERT_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("series_key", T.StringType(), False),
-        T.StructField("ts_epoch", T.LongType(), False),
-        T.StructField("n_suppressed", T.LongType(), False),
-    ]
-)
-
-
-def alert_suppressor_state_fn(cooldown_sec: int):
-    """State fn factory: per series, emit at most one alert per
-    `cooldown_sec` of EVENT time; alerts inside the window are counted
-    and reported on the next emission (`n_suppressed`) so no signal is
-    silently lost — the notification-dedup stage a reference outlier
-    sink needs before paging a human.
-
-    State is two integers (last emitted ts + suppressed count) — O(1)
-    per series regardless of alert volume.  Batch rows are processed in
-    event-time order so the behavior is replay-deterministic for a given
-    micro-batch composition.
-    """
-
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in ALERT_OUTPUT_SCHEMA])
-            return
-        st = (
-            json.loads(state.get[0])
-            if state.exists
-            else {"last": None, "sup": 0}
-        )
-        ts = sorted(
-            int(e) for pdf in pdf_iter for e in pdf["ts_epoch"].tolist()
-        )
-        rows = []
-        for e in ts:
-            if st["last"] is None or e - st["last"] >= cooldown_sec:
-                rows.append(
-                    {
-                        "series_key": key[0],
-                        "ts_epoch": e,
-                        "n_suppressed": st["sup"],
-                    }
-                )
-                st["last"] = e
-                st["sup"] = 0
-            else:
-                st["sup"] += 1
-        state.update((json.dumps(st),))
-        _arm_ttl(state)
-        yield pd.DataFrame(rows, columns=[f.name for f in ALERT_OUTPUT_SCHEMA])
-
-    return fn
-
-
-def streaming_alert_suppress(
-    alerts: DataFrame, cooldown_sec: int = 1800, evict_stale: bool = False
-) -> DataFrame:
-    """`(series_key, ts_epoch, n_suppressed)` — at most one emitted alert
-    per series per cooldown window; suppressed alerts are counted onto
-    the next emission.  Input: a streaming alert relation with
-    `series_key` and `ts_epoch`."""
-    return (
-        alerts.select("series_key", "ts_epoch")
-        .groupBy("series_key")
-        .applyInPandasWithState(
-            alert_suppressor_state_fn(cooldown_sec),
-            outputStructType=ALERT_OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-            if evict_stale
-            else GroupStateTimeout.NoTimeout,
-        )
     )

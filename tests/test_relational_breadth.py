@@ -798,7 +798,6 @@ BROADCAST_PIN_CENSUS = {
     "registry/search_ext.py": 2,
     "registry/search_joins.py": 8,
     "registry/search_outliers.py": 2,
-    "streaming/pipeline.py": 3,
 }
 
 

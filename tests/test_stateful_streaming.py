@@ -69,85 +69,12 @@ def test_streaming_classifier_accumulates_state(spark, tmp_path):
     assert final.vocab_size > 0
 
 
-def test_streaming_outliers_high_water_mark(spark, tmp_path):
-    from cloudpelican_lsd_spark.streaming.stateful import streaming_outliers
-
-    src = str(tmp_path / "out_in")
-    os.makedirs(src)
-    base = 1706745600  # 2024-02-01T00:00:00Z, multiple of 300
-    lines_a = []
-    for j in range(13):  # buckets 0..12; 11 = spike, 12 = newest (partial)
-        n = 40 if j == 11 else (3 if j < 12 else 1)
-        for i in range(n):
-            ts = base + 300 * j + i % 60
-            import datetime
-            iso = datetime.datetime.fromtimestamp(
-                ts, tz=datetime.timezone.utc
-            ).strftime("%Y-%m-%dT%H:%M:%S.000+00:00")
-            lines_a.append(f"{iso} app error req={j}-{i}")
-    with open(os.path.join(src, "a.txt"), "w") as f:
-        f.write("\n".join(lines_a) + "\n")
-
-    cat = FilterCatalog()
-    cat.create("errors", "error")
-
-    emitted = []
-
-    def run():
-        stream = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", "1")
-            .load(src)
-            .withColumnRenamed("value", "_raw")
-        )
-        matched = match_filters_compiled(
-            sp.parse_stream(stream), cat.list(include_temp=True)
-        )
-        q = (
-            streaming_outliers(matched)
-            .writeStream.foreachBatch(
-                lambda df, _eid: emitted.extend(df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "out_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run()
-    rows = emitted
-    # every bucket completed with >= MIN_POINTS of history is scored once
-    # (round 5: a catch-up batch scores EACH completed bucket, not just
-    # the newest — here buckets 10 and 11 have enough history)
-    by_bucket = {r.bucket: r for r in rows}
-    assert len(rows) == len(by_bucket)  # no bucket scored twice
-    spike = by_bucket[base + 300 * 11]
-    assert spike.actual == 40.0
-    assert spike.score >= 0.5
-    # the calm completed buckets score low — only the spike alerts
-    assert all(
-        r.score < 0.5 for r in rows if r.bucket != base + 300 * 11
-    )
-
-    # second batch: more lines in the newest bucket only -> no NEWLY
-    # completed bucket -> high-water mark suppresses re-analysis
-    n_before = len(emitted)
-    with open(os.path.join(src, "b.txt"), "w") as f:
-        f.write(lines_a[-1] + "\n")
-    run()
-    assert len(emitted) == n_before
-
-
 def test_timed_out_state_is_evicted():
     """The hasTimedOut branch removes state and emits nothing (the
     reference's 10-min idle eviction)."""
     import pandas as pd
 
-    from cloudpelican_lsd_spark.streaming.stateful import (
-        classifier_state_fn,
-        outlier_state_fn,
-    )
+    from cloudpelican_lsd_spark.streaming.stateful import classifier_state_fn
 
     class FakeState:
         hasTimedOut = True
@@ -157,118 +84,7 @@ def test_timed_out_state_is_evicted():
         def remove(self):
             self.removed = True
 
-    for fn in (classifier_state_fn, outlier_state_fn):
-        st = FakeState()
-        out = list(fn(("f-1",), iter([pd.DataFrame()]), st))
-        assert st.removed
-        assert len(out) == 1 and out[0].empty
-
-
-def test_streaming_alert_suppressor_cooldown(spark, tmp_path):
-    """first alert per series emits; alerts inside the cooldown are
-    counted, the next emission carries the suppressed total; state
-    persists across micro-batches (second file = second batch)."""
-    import json as _json
-
-    from cloudpelican_lsd_spark.streaming.stateful import (
-        streaming_alert_suppress,
-    )
-
-    src = str(tmp_path / "al_in")
-    os.makedirs(src)
-    base = 1706745600
-    # batch 1: s1 alerts at t=0, 60, 120 (cooldown 300 -> only t=0 emits)
-    with open(os.path.join(src, "a.jsonl"), "w") as f:
-        for e in (base, base + 60, base + 120):
-            f.write(_json.dumps({"series_key": "s1", "ts_epoch": e}) + "\n")
-        f.write(_json.dumps({"series_key": "s2", "ts_epoch": base}) + "\n")
-    # batch 2: s1 at t=400 (cooldown over -> emits, reports 2 suppressed)
-    with open(os.path.join(src, "b.jsonl"), "w") as f:
-        f.write(_json.dumps({"series_key": "s1", "ts_epoch": base + 400}) + "\n")
-    # FileStreamSource orders batches by modification time — pin it so
-    # a.jsonl is deterministically the first micro-batch
-    now = int(__import__("time").time())
-    os.utime(os.path.join(src, "a.jsonl"), (now - 100, now - 100))
-    os.utime(os.path.join(src, "b.jsonl"), (now, now))
-
-    emitted = []
-    stream = (
-        spark.readStream.format("json")
-        .schema("series_key string, ts_epoch long")
-        .option("maxFilesPerTrigger", "1")
-        .load(src)
-    )
-    q = (
-        streaming_alert_suppress(stream, cooldown_sec=300)
-        .writeStream.foreachBatch(lambda df, _eid: emitted.extend(df.collect()))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "al_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = sorted(
-        ((r.series_key, r.ts_epoch, r.n_suppressed) for r in emitted)
-    )
-    assert got == [
-        ("s1", base, 0),
-        ("s1", base + 400, 2),
-        ("s2", base, 0),
-    ]
-
-
-def test_outlier_catchup_batch_scores_every_completed_bucket():
-    """A catch-up micro-batch completing SEVERAL buckets at once (replay
-    after downtime) must consensus-score each completed bucket, not just
-    the newest one — the round-5 review's skipped-bucket hole."""
-    import pandas as pd
-
-    from cloudpelican_lsd_spark.operators.outliers import BUCKET_SEC
-    from cloudpelican_lsd_spark.streaming.stateful import outlier_state_fn
-
-    class FakeState:
-        hasTimedOut = False
-
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    base = 1706745600 - 1706745600 % BUCKET_SEC
     st = FakeState()
-    # batch 1: 12 calm buckets (1 event each) build the history
-    calm = [base + i * BUCKET_SEC for i in range(12)]
-    pdf1 = pd.DataFrame({"ts_epoch": [t + 1 for t in calm]})
-    out1 = pd.concat(list(outlier_state_fn(("f-1",), iter([pdf1]), st)))
-    scored1 = set(out1["bucket"]) if len(out1) else set()
-
-    # batch 2 (catch-up): a 40-event spike bucket AND two further calm
-    # buckets arrive together — the spike bucket is NOT the newest
-    # complete one, and would be skipped under the old buckets[-2] logic
-    spike = base + 12 * BUCKET_SEC
-    later = [base + 13 * BUCKET_SEC, base + 14 * BUCKET_SEC]
-    pdf2 = pd.DataFrame(
-        {"ts_epoch": [spike + 1] * 40 + [t + 1 for t in later]}
-    )
-    out2 = pd.concat(list(outlier_state_fn(("f-1",), iter([pdf2]), st)))
-    scored2 = set(out2["bucket"])
-    assert spike in scored2, "catch-up batch skipped the spike bucket"
-    assert later[0] in scored2  # the other newly completed bucket too
-    assert later[1] not in scored2  # newest bucket still filling
-    assert scored1.isdisjoint(scored2)  # high-water mark: no re-scoring
-    spike_row = out2[out2["bucket"] == spike].iloc[0]
-    assert spike_row["actual"] == 40.0
-    assert spike_row["score"] >= 0.5
+    out = list(classifier_state_fn(("f-1",), iter([pd.DataFrame()]), st))
+    assert st.removed
+    assert len(out) == 1 and out[0].empty

@@ -260,124 +260,6 @@ def main() -> None:
             f" (linear={factor})"
         )
 
-    # -- streaming-path stress (VERDICT r6 #5): the suppressor and the
-    # streaming indexer have correctness tests but no other scale
-    # measurement (perfbench's stream-live workload drives the
-    # StreamingEngine only).  Both probes below use REAL on-disk stores
-    # (tempdirs), not in-memory stand-ins.
-    import shutil
-    import tempfile
-
-    from cloudpelican_lsd_spark.streaming.ann_index import StreamingIvfIndexer
-    from cloudpelican_lsd_spark.streaming.pipeline import NearDupSuppressor
-
-    work = tempfile.mkdtemp(prefix="stress_streaming_")
-
-    def _file_count(root: str) -> int:
-        return sum(len(fs) for _, _, fs in os.walk(root))
-
-    # (a) whole-corpus epoch: in-batch suppression + store write at 1x
-    # vs Nx — the window MIN and the signature write are keyed by
-    # (band, sig)/doc_id, so expect ~linear
-    t = {}
-    stores = {}
-    for label, dset in (("1x", docs), (f"{factor}x", big_docs)):
-        root = os.path.join(work, f"sup_{label}")
-        sup = NearDupSuppressor(
-            spark, os.path.join(root, "store"), os.path.join(root, "out")
-        )
-        t0 = time.time()
-        sup.process_batch(dset.select("doc_id", "text"), 0)
-        t[label] = time.time() - t0
-        stores[label] = sup
-    print(
-        f"{'suppressor_epoch':28s} 1x={t['1x']:6.2f}s "
-        f"{factor}x={t[f'{factor}x']:6.2f}s"
-        f"  ratio={t[f'{factor}x'] / max(t['1x'], 1e-9):5.2f} (linear={factor})"
-    )
-
-    # (b) FIXED 1k-doc batch vs the 1x-grown and Nx-grown stores — the
-    # per-batch production cost.  The store is probed by the BROADCAST
-    # batch signatures (scan-only, no store shuffle/sort), so expect
-    # sub-linear in store size (scan cost only)
-    probe = docs.where(F.col("doc_id") < 1000).select(
-        (F.col("doc_id") + 100_000_000).alias("doc_id"), "text"
-    )
-    t = {}
-    for label in ("1x", f"{factor}x"):
-        t0 = time.time()
-        stores[label].process_batch(probe, 1)
-        t[label] = time.time() - t0
-    print(
-        f"{'suppressor_batch(1k)':28s} 1x={t['1x']:6.2f}s "
-        f"{factor}x={t[f'{factor}x']:6.2f}s"
-        f"  ratio={t[f'{factor}x'] / max(t['1x'], 1e-9):5.2f} "
-        f"(store-scan, want << {factor})"
-    )
-
-    # (c) streaming IVF maintenance: fixed 2k-vector epoch append onto a
-    # 1x vs Nx bootstrapped index — appends assign against the FIXED
-    # broadcast centroids and write only their own epoch partition, so
-    # the cost must be flat in index size (ratio ~1)
-    emb_batch = emb.where(F.col("vec_id") < 2000).select(
-        (F.col("vec_id") + 100_000_000).alias("vec_id"), "embedding"
-    )
-    t = {}
-    indexers = {}
-    for label, dset in (("1x", emb), (f"{factor}x", big_emb10)):
-        ix = StreamingIvfIndexer(spark, os.path.join(work, f"ivf_{label}"))
-        ix.bootstrap(dset)
-        indexers[label] = ix
-        t0 = time.time()
-        ix.process_batch(emb_batch, 0)
-        t[label] = time.time() - t0
-    print(
-        f"{'ivf_epoch_append(2k)':28s} 1x={t['1x']:6.2f}s "
-        f"{factor}x={t[f'{factor}x']:6.2f}s"
-        f"  ratio={t[f'{factor}x'] / max(t['1x'], 1e-9):5.2f} "
-        f"(index-size-flat, want ~1)"
-    )
-
-    # (d) small-files growth + compaction: N more epochs accumulate one
-    # directory tree each; compact() folds them into the bootstrap
-    # partition and the file count collapses back to ~one file set per
-    # cent_id cell
-    ix = indexers["1x"]
-    for ep in range(1, 9):
-        ix.process_batch(emb_batch, ep)
-    before = _file_count(ix.assign_path)
-    t0 = time.time()
-    ix.compact()
-    dt = time.time() - t0
-    after = _file_count(ix.assign_path)
-    print(
-        f"{'ivf_compact(9 epochs)':28s} files {before} -> {after} "
-        f"in {dt:5.2f}s (epoch dirs folded into bootstrap)"
-    )
-
-    # (e) the suppressor's store has the same one-dir-per-micro-batch
-    # growth; compact() folds into epoch=<max folded> (retention-aware
-    # variant) — file count must collapse the same way
-    sup = stores["1x"]
-    for ep in range(2, 9):
-        sup.process_batch(
-            probe.select(
-                (F.col("doc_id") + ep * 10_000).alias("doc_id"), "text"
-            ),
-            ep,
-        )
-    before = _file_count(sup.store_path)
-    t0 = time.time()
-    sup.compact()
-    dt = time.time() - t0
-    after = _file_count(sup.store_path)
-    print(
-        f"{'suppressor_compact(9 ep)':28s} files {before} -> {after} "
-        f"in {dt:5.2f}s (folded into epoch=<max>)"
-    )
-
-    shutil.rmtree(work, ignore_errors=True)
-
     t0 = time.time()
     classifier.train_and_classify(big_logs).write.format("noop").mode(
         "overwrite"
